@@ -1,30 +1,38 @@
 """Graph algorithms as Pregel-style DataFrame iteration over the engine's
 semiring primitives.
 
-The reference expresses these as mxv loops in notebooks (FastSV connected
-components in notebooks/'Connected Components -- FastSV.ipynb', SSSP
-min_plus in notebooks/Examples.ipynb). BASELINE.json suggests GraphX
-Pregel; GraphX has NO Python API in Apache Spark, so the idiomatic PySpark
-equivalent is what GraphFrames does under the hood: DataFrame
-message-aggregation loops. Each iteration is
+GraphX has no Python API in Apache Spark, so the loops are what
+GraphFrames runs under the hood: DataFrame message-aggregation rounds,
+with a checkpoint every few rounds to cut lineage (SURVEY.md section 4).
+Each algorithm supplies only its own step; three shared pieces do the
+rest.
 
-    candidates = frontier (vxm) A          -- broadcast join when frontier
-                                              is small, shuffle join + AQE
-                                              otherwise
-    improved   = candidates better-than current  -- left join + filter
-    state      = merge improved                  -- union merge
-    frontier   = improved
+* ``_frontier_loop`` — the semi-naive fixpoint of ``bfs_level``, ``sssp``
+  and ``connected_components``. It partitions the adjacency once by
+  source (``_prep_adjacency``), then per round asks the algorithm's step
+  for the next frontier (``frontier vxm A``, filtered to what improved)
+  and a merge into the state, persists and counts the frontier (one
+  action per round), stops when it is empty, and checkpoints state and
+  frontier every ``_CHECKPOINT_EVERY`` rounds. Components' pointer jump
+  is its own step every ``_JUMP_EVERY`` rounds.
+* ``_power_iteration`` — ``pagerank`` and ``personalized_pagerank``: the
+  degree-normalized transition matrix, the dangling-mass join and the
+  contribution aggregate, one checkpointed job per iteration; each caller
+  keeps its own start vector and update expression. ``katz_centrality``
+  and ``hits`` share its edge prelude (``_edge_prelude``: the adjacency
+  cached once per join key, hash-partitioned by row count).
+* ``_Cache`` — the one owner of every persist an algorithm makes. It
+  persists only what is not cached already, so a relation someone else
+  cached (the derived-relation cache in ``sources/tpch.py``) is never
+  released here, and releases what it persisted on exit, including when
+  a round raises. Anything returned from inside its ``with`` block is
+  eagerly checkpointed first, so it no longer reads the caches being
+  released.
 
-with persist + localCheckpoint per iteration to cut lineage growth
-(mandatory for loops — SURVEY.md section 4 'Checkpointing iterative
-algorithms'). The adjacency matrix is repartitioned ONCE on the join key
-and cached, so per-iteration work reuses the same partitioning.
-
-Scale design (100 TB): frontier-based algorithms ship only the CHANGED
-entries each round; the adjacency stays partitioned in place. Dense-state
-algorithms (PageRank, CC labels) keep state as a hash-partitioned
-DataFrame co-partitioned with the adjacency — each step is one co-located
-join + one aggregation.
+Every partition count comes from ``partitions.partitions_for_rows``.
+Frontier loops ship only the CHANGED entries each round; dense-state
+loops (the power iterations) are one co-located join and one
+aggregation per round against the cached, source-partitioned edges.
 """
 
 from __future__ import annotations
@@ -33,10 +41,12 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .core import GrMatrix, GrVector, get_session
 from .dtypes import FP64, INT64
 from .operators import semiring
+from .partitions import partitions_for_rows, sized_range
 
 __all__ = ["bfs_level", "sssp", "connected_components", "pagerank",
            "triangle_count", "symmetrize", "with_singletons", "k_core",
@@ -59,21 +69,92 @@ __all__ = ["bfs_level", "sssp", "connected_components", "pagerank",
 # checkpointInterval) bounds the tree at ~9x base and removed the stall.
 _CHECKPOINT_EVERY = 2
 # connected_components runs a FastSV pointer-jump round every _JUMP_EVERY
-# iterations (see the loop body for the cost/convergence trade)
+# iterations (see its step for the cost/convergence trade)
 _JUMP_EVERY = 4
 
 # Loop-shuffle sizing: NO session-conf mutation. The adjacency is
 # repartitioned ONCE with a partition count derived from its measured
-# edge count (_prep_adjacency), the frontier side of each step broadcasts,
-# and AQE's runtime coalescing sizes the remaining state shuffles —
-# measured equal-or-faster than a scoped `spark.sql.shuffle.partitions`
-# override, without mutating state another concurrent query on the same
-# session would silently inherit.
+# edge count, the frontier side of each step broadcasts, and AQE's
+# runtime coalescing sizes the remaining state shuffles — measured
+# equal-or-faster than a scoped `spark.sql.shuffle.partitions` override,
+# without mutating state another concurrent query on the same session
+# would silently inherit.
 
 
 def symmetrize(A: GrMatrix) -> GrMatrix:
     """A | A.T with max combine (undirected view of a directed graph)."""
     return A.ewise_add(A.T, "max").new()
+
+
+class _Cache:
+    """Loop-scoped owner of the relations an algorithm persists.
+
+    Spark's CacheManager keeps an entry until it is explicitly
+    unpersisted, so a persist that merely falls out of Python scope
+    stays for the rest of the session. Use as a context manager: exit
+    releases everything this owner persisted, whether the block returned
+    or raised. A relation that is already cached (looked up by plan, not
+    by the DataFrame object) is used as is and never released here."""
+
+    def __init__(self):
+        self._owned = []
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self.release()
+
+    def persist(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """Persist ``df`` unless it is cached already; ``eager`` also
+        materializes it now."""
+        if df.storageLevel == StorageLevel.NONE:
+            self._owned.append(df.persist())
+            if eager:
+                df.count()
+        return df
+
+    def drop(self, df: DataFrame) -> None:
+        """Release ``df`` now if this owner persisted it."""
+        if any(d is df for d in self._owned):
+            self._owned = [d for d in self._owned if d is not df]
+            df.unpersist()
+
+    def release(self) -> None:
+        while self._owned:
+            try:
+                self._owned.pop().unpersist()
+            except Exception:  # a stopped session has nothing to free
+                pass
+
+
+def _nodes(n: int) -> DataFrame:
+    """The dense vertex frame 0..n-1 as column ``i``."""
+    return sized_range(get_session(), 0, n).select(F.col("id").alias("i"))
+
+
+def _symmetric_edges(A: GrMatrix) -> DataFrame:
+    """Distinct (i, j) pairs of A | A.T: both directions of every edge,
+    self loops once."""
+    e = A.df.select("i", "j")
+    return e.unionByName(e.select(F.col("j").alias("i"),
+                                  F.col("i").alias("j"))).distinct()
+
+
+def _undirected(A: GrMatrix, a: str = "u", b: str = "v") -> DataFrame:
+    """The canonical undirected simple edge set of A: distinct (a, b)
+    with a < b, self loops dropped."""
+    return (A.df.select(F.least("i", "j").alias(a),
+                        F.greatest("i", "j").alias(b))
+                .where(F.col(a) != F.col(b))
+                .distinct())
+
+
+def _degrees(und: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
+    """(_n, _d): the degree of every endpoint of a canonical edge set."""
+    return (und.select(F.col(a).alias("_n"))
+               .unionAll(und.select(F.col(b).alias("_n")))
+               .groupBy("_n").agg(F.count("*").alias("_d")))
 
 
 def _improved(cand_df: DataFrame, cur_df: DataFrame) -> DataFrame:
@@ -88,197 +169,104 @@ def _improved(cand_df: DataFrame, cur_df: DataFrame) -> DataFrame:
 
 def _merge_min(cur_df: DataFrame, imp_df: DataFrame) -> DataFrame:
     """Overwrite current entries with improved ones (imp wins)."""
-    o = cur_df.alias("o")
-    keep = o.join(imp_df.select("i"), on="i", how="left_anti")
+    keep = cur_df.join(imp_df.select("i"), on="i", how="left_anti")
     return keep.unionByName(imp_df)
 
 
-_EDGE_ROWS_PER_PARTITION = 1_000_000
-_MIN_EDGE_ROWS_PER_PARTITION = 65_536
+def _prep_adjacency(A: GrMatrix, cache: _Cache, undirected: bool = False):
+    """Hash-partition the adjacency (of A | A.T with ``undirected``) by
+    source vertex ONCE, sized by its measured edge count, so every
+    round's join reuses one exchange. Returns (adjacency, partitions);
+    the partition count also sizes the loop state.
+
+    An input that fits one partition and already sits in a few splits is
+    reused as is: frontier sides broadcast, so source partitioning only
+    helps the huge-frontier shuffle join."""
+    if undirected:
+        # cache A before symmetrize: A | A.T reads it from two plan
+        # branches, and Spark does not dedupe the underlying fact join
+        raw = cache.persist(A.df, eager=True)
+        adj, parts = _prep_adjacency(
+            symmetrize(GrMatrix(raw, A.dtype, A.nrows, A.ncols)), cache)
+        cache.drop(raw)
+        return adj, parts
+    base = cache.persist(A.df)
+    parts = partitions_for_rows(base.count())
+    adj = base
+    if parts > 1 or base.rdd.getNumPartitions() > 4:
+        adj = cache.persist(base.repartition(parts, "i"), eager=True)
+        cache.drop(base)
+    return GrMatrix(adj, A.dtype, A.nrows, A.ncols), parts
 
 
-def _vertex_range(spark, n: int) -> DataFrame:
-    """``spark.range(n)`` with a ROW-COUNT-SIZED split count instead of
-    the default ``defaultParallelism`` splits (r13, guide §2 scale-
-    adaptive partitioning): a 25-vertex frame on local[32] otherwise
-    carries 32 near-empty splits through EVERY loop round (AQE cannot
-    coalesce a leaf Range, and the per-round persists pin whatever
-    partitioning they inherit), while a 10^9-vertex frame still fans
-    out by the same ~rows-per-partition rule as `_prep_adjacency`."""
-    return spark.range(0, n, 1,
-                       numPartitions=_adjacency_partitions(int(n)))
+def _frontier_loop(A: GrMatrix, start, step,
+                   undirected: bool = False) -> GrVector:
+    """Run a frontier fixpoint to convergence and return its state.
 
+    ``start(adj)`` gives the initial state, which is also the first
+    frontier. ``step(rnd, state, frontier, adj, keep)`` returns
+    ``(delta, merge)``: the next frontier's rows and a function from the
+    persisted frontier DataFrame to the next state's DataFrame. ``keep``
+    persists a DataFrame as round state, sized like the loop. The loop
+    stops on the first empty frontier, keeping the state that produced
+    it, and releases the round caches at every checkpoint."""
+    with _Cache() as cache, _Cache() as rounds:
+        adj, parts = _prep_adjacency(A, cache, undirected)
 
-def _adjacency_partitions(nvals: int) -> int:
-    """Partition count for a measured edge count.
+        def keep(df):
+            return rounds.persist(df.coalesce(parts))
 
-    Three regimes: tiny graphs collapse to 1 partition (a fixpoint loop
-    runs dozens of stages, and 32 near-empty task launches per stage
-    would dominate); mid-size graphs fan out to every core as soon as
-    each task still gets >=64k edges (a 2M-edge graph on 32 cores must
-    NOT run as 2 tasks — measured 16x under-parallelized); huge graphs
-    are sized by ~1M edges/partition so per-task state stays bounded on
-    a 1000-executor cluster regardless of its core count."""
-    spark = get_session()
-    par = spark.sparkContext.defaultParallelism
-    by_rows = -(-nvals // _EDGE_ROWS_PER_PARTITION)
-    fill_cores = min(-(-nvals // _MIN_EDGE_ROWS_PER_PARTITION), par)
-    return max(1, fill_cores, by_rows)
-
-
-class _PersistPool:
-    """Tracks every DataFrame an iterative loop persists so the
-    algorithm can release ALL of them on exit. Spark's CacheManager
-    keeps cache entries until explicitly unpersisted — per-iteration
-    frontier/state persists that merely fall out of Python scope
-    accumulate across runs and degrade the whole session. Release only
-    after the RESULT has been eagerly checkpointed: until then its plan
-    may still read these caches."""
-
-    def __init__(self):
-        self._dfs = []
-
-    def persist(self, obj):
-        obj.persist()
-        self._dfs.append(obj.df)
-        return obj
-
-    def release(self):
-        for df in self._dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._dfs.clear()
-
-
-def _ensure_cached(df: DataFrame) -> tuple[DataFrame, bool]:
-    """Materialize a DataFrame once at the session's FULL shuffle
-    parallelism if it is not already cached. Iterative algorithms consume
-    their input adjacency from multiple plan branches (A and A.T inside
-    symmetrize, P and outdeg in pagerank) and across dozens of loop
-    stages — an uncached heavy fact join (e.g. orders⋈lineitem in
-    sources/tpch.py) would otherwise be recomputed per branch on every
-    iteration."""
-    if df.is_cached:
-        return df, False
-    df = df.persist()
-    df.count()
-    return df, True
-
-
-def _prep_adjacency(A: GrMatrix) -> tuple[DataFrame, bool]:
-    """Hash-partition the adjacency by source vertex ONCE, with the
-    partition count sized by the measured edge count (~1M edges/partition)
-    rather than the session's `shuffle.partitions`: a 625-edge graph gets
-    1 partition (32 near-empty task launches per stage would dominate a
-    fixpoint loop that runs dozens of stages), a 10^9-edge graph gets
-    1000. Every iteration's join then reuses this exchange.
-
-    Returns (adjacency, owned): when the input is ALREADY a cached small
-    relation, it is reused as-is (owned=False — the caller must not
-    unpersist a cache it shares with others): frontier sides broadcast,
-    so source-vertex partitioning is only a locality optimization for the
-    huge-frontier shuffle-join path, worthless below one partition's
-    worth of edges."""
-    base, own_base = _ensure_cached(A.df)
-    nvals = base.count()
-    k = _adjacency_partitions(nvals)
-    try:
-        base_parts = base.rdd.getNumPartitions()
-    except Exception:
-        base_parts = None
-    if k == 1 and base_parts is not None and base_parts <= 4:
-        return base, own_base
-    adj = base.repartition(k, "i").persist()
-    adj.count()
-    if own_base:
-        base.unpersist()
-    return adj, True
-
-
-def _loop_parts(adj: DataFrame) -> int:
-    """Partition count for PER-ROUND loop state (frontier / labels /
-    changed-set persists). A `persist()` pins whatever pre-AQE
-    partitioning the plan has — on local[32] a 25-row frontier cached
-    at 32 near-empty partitions costs 32 task launches per read, per
-    round (r13; the same pathology `_cached_build` fixes for the
-    derived inputs). Loop state is bounded by the vertex set, which is
-    bounded by ~2x the measured edge count, so the adjacency's own
-    row-sized partition count (already computed by `_prep_adjacency`)
-    is the right order for every per-round relation: tiny graphs
-    coalesce to 1, huge graphs keep their fan-out (`coalesce` only
-    ever narrows)."""
-    try:
-        return max(1, adj.rdd.getNumPartitions())
-    except Exception:
-        return 1
+        init = start(adj.df)
+        state = frontier = GrVector(keep(init.df), init.dtype, init.size)
+        rnd = 0
+        while frontier.nvals > 0:
+            rnd += 1
+            delta, merge = step(rnd, state, frontier, adj, keep)
+            nxt = GrVector(keep(delta), state.dtype, state.size)
+            if nxt.nvals == 0:
+                break
+            state = GrVector(merge(nxt.df), state.dtype, state.size)
+            frontier = nxt
+            if rnd % _CHECKPOINT_EVERY == 0:
+                # cut both lineages: the state grows by merge and the
+                # frontier nests every previous round's plan; nothing
+                # reads the round caches after that
+                state.checkpoint(compact=True)
+                frontier.checkpoint()
+                rounds.release()
+        return state.checkpoint(compact=True)
 
 
 def bfs_level(A: GrMatrix, source: int) -> GrVector:
     """Level-synchronous BFS: frontier vxm with the any_pair semiring,
     complement-mask pushdown keeps visited vertices out of the join."""
-    n = A.nrows
-    adj, own_adj = _prep_adjacency(A)
-    kparts = _loop_parts(adj)
-    Aprep = GrMatrix(adj, A.dtype, A.nrows, A.ncols)
-    levels = GrVector.from_values([source], [0], size=n, dtype=INT64)
-    frontier = levels.dup()
-    level = 0
-    pool = _PersistPool()
-    while frontier.nvals > 0:
-        level += 1
-        cand = frontier.vxm(Aprep, semiring.any_pair)
+    def start(adj):
+        return GrVector.from_values([source], [0], size=A.nrows,
+                                    dtype=INT64)
+
+    def step(rnd, levels, frontier, adj, keep):
         # mask pushdown: unvisited only (anti join BEFORE the agg)
-        new_frontier = cand.new(mask=~levels.S)
-        new_df = new_frontier.df.select(
-            "i", F.lit(level).cast("bigint").alias("v"))
-        levels = GrVector(levels.df.unionByName(new_df), INT64, n)
-        frontier = pool.persist(GrVector(new_df.coalesce(kparts),
-                                         INT64, n))
-        if level % _CHECKPOINT_EVERY == 0:
-            # cut BOTH lineages: levels grows by union, and the
-            # frontier plan nests every previous level's plan —
-            # without this the driver spends minutes in
-            # generateTreeString on deep trees
-            levels.checkpoint(compact=True)
-            frontier.checkpoint()
-    levels.checkpoint(compact=True)
-    pool.release()
-    if own_adj:
-        adj.unpersist()
-    return levels
+        new = frontier.vxm(adj, semiring.any_pair).new(mask=~levels.S)
+        delta = new.df.select("i", F.lit(rnd).cast("bigint").alias("v"))
+        return delta, lambda fr: levels.df.unionByName(fr)
+
+    return _frontier_loop(A, start, step)
 
 
 def sssp(A: GrMatrix, source: int) -> GrVector:
     """Single-source shortest paths, min_plus to fixpoint (reference SSSP
     loop in notebooks/Examples.ipynb). Frontier = vertices whose distance
     improved last round (delta-relaxation)."""
-    n = A.nrows
-    adj, own_adj = _prep_adjacency(A)
-    kparts = _loop_parts(adj)
-    Aprep = GrMatrix(adj, A.dtype, A.nrows, A.ncols)
-    dist = GrVector.from_values([source], [0.0], size=n, dtype=FP64)
-    frontier = dist.dup()
-    it = 0
-    pool = _PersistPool()
-    while frontier.nvals > 0:
-        it += 1
-        cand = frontier.vxm(Aprep, semiring.min_plus).new()
-        imp_df = _improved(cand.df, dist.df)
-        frontier = pool.persist(GrVector(imp_df.coalesce(kparts),
-                                         FP64, n))
-        if frontier.nvals == 0:
-            break
-        dist = GrVector(_merge_min(dist.df, frontier.df), FP64, n)
-        if it % _CHECKPOINT_EVERY == 0:
-            dist.checkpoint(compact=True)
-            frontier.checkpoint()
-    dist.checkpoint(compact=True)
-    pool.release()
-    if own_adj:
-        adj.unpersist()
-    return dist
+    def start(adj):
+        return GrVector.from_values([source], [0.0], size=A.nrows,
+                                    dtype=FP64)
+
+    def step(rnd, dist, frontier, adj, keep):
+        cand = frontier.vxm(adj, semiring.min_plus).new()
+        return (_improved(cand.df, dist.df),
+                lambda fr: _merge_min(dist.df, fr))
+
+    return _frontier_loop(A, start, step)
 
 
 def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
@@ -297,51 +285,23 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
     labels are re-propagated in either mode."""
     if vertices not in ("all", "edges"):
         raise ValueError("vertices must be 'all' or 'edges'")
-    spark = get_session()
     n = A.nrows
-    # cache the raw adjacency BEFORE symmetrize: A | A.T reads A from two
-    # plan branches, and Spark does not dedupe the underlying fact join
-    raw, own_raw = _ensure_cached(A.df)
-    Asym = symmetrize(GrMatrix(raw, A.dtype, A.nrows, A.ncols))
-    adj, own_adj = _prep_adjacency(Asym)
-    if own_raw:
-        raw.unpersist()
-    kparts = _loop_parts(adj)
-    Aprep = GrMatrix(adj, Asym.dtype, n, n)
-    if vertices == "edges":
+
+    def start(adj):
         # symmetrized adjacency: every endpoint appears as a row id, so
         # the distinct i column IS the vertex set — no densification
-        labels_df = adj.select("i").distinct().select(
-            "i", F.col("i").cast("bigint").alias("v"))
-    else:
-        labels_df = _vertex_range(spark, n).select(
-            F.col("id").alias("i"),
-            F.col("id").cast("bigint").alias("v"))
-    labels = GrVector(labels_df.coalesce(kparts), INT64, n)
-    pool = _PersistPool()
-    pool.persist(labels)
-    changed = labels
-    it = 0
-    while changed.nvals > 0:
-        it += 1
+        ids = (adj.select("i").distinct() if vertices == "edges"
+               else _nodes(n))
+        return GrVector(ids.select("i", F.col("i").cast("bigint")
+                                   .alias("v")), INT64, n)
+
+    def step(rnd, labels, changed, adj, keep):
         # candidate label for j = min over in-neighbors i of label[i]
-        cand = changed.vxm(Aprep, semiring.min_first).new()
-        imp_df = _improved(cand.df, labels.df)
-        if it % _JUMP_EVERY:
+        cand = changed.vxm(adj, semiring.min_first).new()
+        imp = _improved(cand.df, labels.df)
+        if rnd % _JUMP_EVERY:
             # cheap frontier round: only the improved entries move
-            changed = pool.persist(GrVector(imp_df.coalesce(kparts),
-                                            INT64, n))
-            if changed.nvals == 0:
-                break
-            old = labels
-            labels = pool.persist(
-                GrVector(_merge_min(labels.df, changed.df)
-                         .coalesce(kparts), INT64, n))
-            if it % _CHECKPOINT_EVERY == 0:
-                labels.checkpoint(compact=True)
-                changed.checkpoint()
-            old.unpersist()
-            continue
+            return imp, lambda fr: keep(_merge_min(labels.df, fr))
         # FastSV shortcut round (pointer jumping): l[i] <- l[l[i]].
         # Labels are vertex ids with the invariant l[v] <= v, so l is
         # defined at every label value and jumping only decreases. Run
@@ -351,40 +311,24 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
         # depth per jump, bounding the loop at O(log n) jump phases.
         # Small-diameter graphs finish before paying for many jumps.
         # Cost: two n-row self-joins, so not done every round.
-        merged = pool.persist(
-            GrVector(_merge_min(labels.df, imp_df).coalesce(kparts),
-                     INT64, n))
-        m = merged.df.alias("m")
-        p = merged.df.alias("p")
-        jumped_df = (m.join(p, F.col("m.v") == F.col("p.i"), "left_outer")
-                      .select(F.col("m.i").alias("i"),
-                              F.least(F.col("m.v"),
-                                      F.coalesce(F.col("p.v"),
-                                                 F.col("m.v"))).alias("v")))
-        old = labels
-        labels = pool.persist(GrVector(jumped_df.coalesce(kparts),
-                                       INT64, n))
+        merged = keep(_merge_min(labels.df, imp))
+        m, p = merged.alias("m"), merged.alias("p")
+        jumped = keep(
+            m.join(p, F.col("m.v") == F.col("p.i"), "left_outer")
+             .select(F.col("m.i").alias("i"),
+                     F.least(F.col("m.v"), F.coalesce(F.col("p.v"),
+                                                      F.col("m.v")))
+                      .alias("v")))
         # re-propagate every vertex whose label moved this round (by
         # neighbor min OR by shortcut — a shortcut move must still be
         # announced to neighbors)
-        chg_df = (labels.df.alias("nw")
-                  .join(old.df.alias("od"), F.col("nw.i") == F.col("od.i"))
-                  .filter(F.col("nw.v") < F.col("od.v"))
-                  .select(F.col("nw.i").alias("i"),
-                          F.col("nw.v").alias("v")))
-        changed = pool.persist(GrVector(chg_df.coalesce(kparts),
-                                        INT64, n))
-        changed.nvals  # materialize labels+changed BEFORE the unpersists
-        if it % _CHECKPOINT_EVERY == 0:
-            labels.checkpoint(compact=True)
-            changed.checkpoint()
-        old.unpersist()
-        merged.unpersist()
-    labels.checkpoint(compact=True)
-    pool.release()
-    if own_adj:
-        adj.unpersist()
-    return labels
+        moved = (jumped.alias("nw")
+                 .join(labels.df.alias("od"), F.col("nw.i") == F.col("od.i"))
+                 .filter(F.col("nw.v") < F.col("od.v"))
+                 .select(F.col("nw.i").alias("i"), F.col("nw.v").alias("v")))
+        return moved, lambda fr: jumped
+
+    return _frontier_loop(A, start, step, undirected=True)
 
 
 def with_singletons(labels: GrVector, vertices: DataFrame,
@@ -430,12 +374,7 @@ def k_core(A: GrMatrix, k: int) -> GrVector:
     ordering depth — single digits on real graphs."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    raw, own_raw = _ensure_cached(A.df)
-    Asym = symmetrize(GrMatrix(raw, A.dtype, A.nrows, A.ncols))
-    edges = (Asym.df.select("i", "j").distinct()
-             .localCheckpoint(eager=True))
-    if own_raw:
-        raw.unpersist()
+    edges = _symmetric_edges(A).localCheckpoint(eager=True)
     while True:
         deg = (edges.groupBy("i").agg(F.count("*").alias("v"))
                .localCheckpoint(eager=True))
@@ -482,12 +421,7 @@ def label_propagation(A: GrMatrix, max_iters: int = 5) -> GrVector:
     vertices with no incident edge never appear."""
     if max_iters < 1:
         raise ValueError("max_iters must be >= 1")
-    raw, own_raw = _ensure_cached(A.df)
-    Asym = symmetrize(GrMatrix(raw, A.dtype, A.nrows, A.ncols))
-    edges = (Asym.df.select("i", "j").distinct()
-             .localCheckpoint(eager=True))
-    if own_raw:
-        raw.unpersist()
+    edges = _symmetric_edges(A).localCheckpoint(eager=True)
     labels = (edges.select("i").distinct()
                    .select("i", F.col("i").cast("bigint").alias("v")))
     for _ in range(max_iters):
@@ -505,95 +439,123 @@ def label_propagation(A: GrMatrix, max_iters: int = 5) -> GrVector:
     return GrVector(labels, INT64, A.nrows)
 
 
+def _edge_prelude(A: GrMatrix, cache: _Cache, *keys: str,
+                  transition: bool = False):
+    """The power iterations' edge relation, cached once per join key in
+    ``keys`` and hash-partitioned by the adjacency's row count, so every
+    iteration reuses one exchange: distinct (i, j) pairs, or with
+    ``transition`` the degree-normalized entries (i, j, v = 1/outdeg(i)).
+    Returns (cached adjacency, [edges per key])."""
+    adj = cache.persist(A.df)
+    parts = partitions_for_rows(adj.count())
+    if transition:
+        outdeg = adj.groupBy("i").agg(F.count("*").alias("d"))
+        edges = (adj.join(outdeg, on="i")
+                    .select("i", "j", (F.lit(1.0) / F.col("d")).alias("v")))
+    else:
+        edges = adj.select("i", "j").distinct()
+    return adj, [cache.persist(edges.repartition(parts, key), eager=True)
+                 for key in keys]
+
+
+def _power_iteration(A: GrMatrix, start, update, iters: int,
+                     tol: float = 0.0) -> DataFrame:
+    """r_{t+1} = update(s, dang) over the dense vertex frame, where
+    s(j) = sum over i->j of r_t(i) / outdeg(i) and dang = the total rank
+    on vertices with no out-edge; r_0 = start. Stops early once the L1
+    change drops below ``tol`` (never with tol = 0). Returns (i, v).
+
+    Each iteration is one job: the dangling mass is a 1-row aggregate
+    crossJoined into the plan (broadcast by Spark), and the eager
+    checkpoint of r is the only action; the L1 check is the only other
+    driver read, skipped for fixed-iteration runs."""
+    n = A.nrows
+    with _Cache() as cache:
+        adj, (P,) = _edge_prelude(A, cache, "i", transition=True)
+        has_out = cache.persist(adj.select("i").distinct(), eager=True)
+        nodes = _nodes(n)
+        r = cache.persist(nodes.select("i", start.alias("v")))
+        for _ in range(iters):
+            dang = (r.join(has_out, on="i", how="left_anti")
+                     .agg(F.coalesce(F.sum("v"), F.lit(0.0)).alias("_d")))
+            contrib = (P.alias("P")
+                        .join(r.alias("r"), F.col("P.i") == F.col("r.i"))
+                        .select(F.col("P.j").alias("i"),
+                                (F.col("P.v") * F.col("r.v")).alias("c"))
+                        .groupBy("i").agg(F.sum("c").alias("s")))
+            r_new = (nodes.join(contrib, on="i", how="left_outer")
+                          .crossJoin(dang)
+                          .select("i", update(F.coalesce("s", F.lit(0.0)),
+                                              F.col("_d")).alias("v"))
+                          .localCheckpoint(eager=True))
+            done = tol > 0 and (
+                r_new.alias("a").join(r.alias("b"), on="i")
+                     .agg(F.sum(F.abs(F.col("a.v") - F.col("b.v"))))
+                     .collect()[0][0] < tol)
+            r = r_new
+            if done:
+                break
+        return r
+
+
 def pagerank(A: GrMatrix, damping: float = 0.85, max_iters: int = 20,
              tol: float = 1e-6) -> GrVector:
-    """Power-iteration PageRank with dangling-mass redistribution.
-
-    State is a dense rank DataFrame (n rows); each step is one join+agg
-    against the degree-normalized adjacency — the same plan shape Spark
-    runs for any scale-out PageRank. The dangling-mass scalar stays
-    INSIDE the plan (1-row aggregate crossJoined in, broadcast by Spark)
-    so each iteration runs exactly one job; the only driver action is the
-    1-row L1-delta convergence check."""
-    spark = get_session()
+    """Power-iteration PageRank with dangling-mass redistribution: the
+    restart and the dangling mass go to every vertex evenly. State is a
+    dense rank DataFrame (n rows); see ``_power_iteration``."""
     n = A.nrows
-    adj, own_adj = _ensure_cached(A.df)
-    nvals = adj.count()
-    k = _adjacency_partitions(nvals)
-    outdeg = adj.groupBy("i").agg(F.count("*").alias("d"))
-    # P[i,j] = 1/outdeg(i) — degree-normalized transition matrix,
-    # partitioned by source with data-sized partition count (see
-    # _prep_adjacency) so every iteration reuses one small exchange
-    P = (adj.join(outdeg, on="i")
-            .select("i", "j", (F.lit(1.0) / F.col("d")).alias("v")))
-    P = P.repartition(k, "i").persist()
-    P.count()
-    nodes = _vertex_range(spark, n).select(F.col("id").alias("i"))
-    has_out = outdeg.select("i").persist()
-    has_out.count()
     base = (1.0 - damping) / n
-    r = nodes.select("i", F.lit(1.0 / n).alias("v")).persist()
-    for it in range(max_iters):
-        dangling_df = (r.join(has_out, on="i", how="left_anti")
-                        .agg((F.coalesce(F.sum("v"), F.lit(0.0)) / n)
-                             .alias("_dang")))
-        contrib = (P.alias("P")
-                    .join(r.alias("r"), F.col("P.i") == F.col("r.i"))
-                    .select(F.col("P.j").alias("i"),
-                            (F.col("P.v") * F.col("r.v")).alias("c"))
-                    .groupBy("i").agg(F.sum("c").alias("s")))
-        r_new = (nodes.join(contrib, on="i", how="left_outer")
-                      .crossJoin(dangling_df)
-                      .select("i",
-                              (F.lit(base)
-                               + F.lit(damping)
-                               * (F.coalesce(F.col("s"), F.lit(0.0))
-                                  + F.col("_dang"))).alias("v")))
-        r_new = r_new.localCheckpoint(eager=True)
-        if tol > 0:
-            # convergence check = the ONLY per-iteration driver action;
-            # skipped entirely for fixed-iteration runs (tol=0)
-            delta = (r_new.alias("a").join(r.alias("b"), on="i")
-                          .agg(F.sum(F.abs(F.col("a.v") - F.col("b.v"))))
-                          .collect()[0][0])
-        else:
-            delta = None
-        r.unpersist()
-        r = r_new
-        if tol > 0 and delta is not None and delta < tol:
-            break
-    has_out.unpersist()
-    P.unpersist()
-    if own_adj:
-        adj.unpersist()
+
+    def update(s, dang):
+        return F.lit(base) + F.lit(damping) * (s + dang / n)
+
+    r = _power_iteration(A, F.lit(1.0 / n), update, max_iters, tol)
     return GrVector(r, FP64, n)
+
+
+def personalized_pagerank(A: GrMatrix, seeds: list[int],
+                          damping: float = 0.85,
+                          max_iters: int = 10) -> DataFrame:
+    """Personalized PageRank: power iteration whose restart AND
+    dangling mass both return to the seed set — the random walker
+    teleports to a uniform distribution over ``seeds`` instead of over
+    all nodes. r_{t+1} = (1-d) s + d (P^T r_t + dang_t s) with
+    s = e_S / |S|; r_0 = s. Fixed iterations, no early exit, so the
+    trajectory is deterministic and an unrolled-CTE oracle replays it.
+
+    Plan shape: pagerank's (``_power_iteration``). The seed vector is a
+    literal isin over the node relation — no extra join. Output:
+    (i, ppr) rounded 6, seeds-reachable nodes only may be nonzero."""
+    s_col = F.when(F.col("i").isin([int(x) for x in seeds]),
+                   F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
+
+    def update(s, dang):
+        return (F.lit(1.0 - damping) * s_col
+                + F.lit(damping) * (s + dang * s_col))
+
+    r = _power_iteration(A, s_col, update, max_iters)
+    return r.select("i", F.round(F.col("v"), 6).alias("ppr"))
 
 
 def triangle_count(A: GrMatrix) -> int:
     """Triangle counting via the classic GraphBLAS masked-matmul
-    formulation, collapsed to its minimal plan: L = strict lower triangle
-    of the symmetrized adjacency; ntri = reduce(C) where C<L.S> =
-    L * L.T over plus_pair. Because the final reduction is a GLOBAL sum
+    formulation, collapsed to its minimal plan: U = strict upper triangle
+    of the symmetrized adjacency; ntri = reduce(C) where C<U.S> =
+    U * U.T over plus_pair. Because the final reduction is a GLOBAL sum
     of pair counts, the per-(i,j) aggregation is algebraically redundant:
-    sum over C = |{(i,j,k): L[i,k] & L[j,k] & L[i,j]}|, i.e. a COUNT of
+    sum over C = |{(i,j,k): U[i,k] & U[j,k] & U[i,j]}|, i.e. a COUNT of
     the mask-semi-joined wedge relation. Executing it that way removes
     one full shuffle (the groupBy(i,j) + scalar reduce) versus the
     two-stage form — the mask semi-join still happens BELOW any
     aggregation, so the wedge relation never materializes more than the
     masked rows."""
-    raw, own_raw = _ensure_cached(A.df)
-    Asym = symmetrize(GrMatrix(raw, A.dtype, A.nrows, A.ncols))
-    L_df = Asym.df.filter(F.col("i") > F.col("j")).select("i", "j")
-    L_df = L_df.persist()
-    wedges = (L_df.select(F.col("i"), F.col("j").alias("k"))
-              .join(L_df.select(F.col("i").alias("j"), F.col("j").alias("k")),
-                    on="k")
-              .select("i", "j"))
-    t = wedges.join(L_df, on=["i", "j"], how="left_semi").count()
-    L_df.unpersist()
-    if own_raw:
-        raw.unpersist()
-    return int(t)
+    with _Cache() as cache:
+        U = cache.persist(_undirected(A, "i", "j"))
+        wedges = (U.select(F.col("i"), F.col("j").alias("k"))
+                   .join(U.select(F.col("i").alias("j"),
+                                  F.col("j").alias("k")), on="k")
+                   .select("i", "j"))
+        return int(wedges.join(U, on=["i", "j"], how="left_semi").count())
 
 
 def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
@@ -613,31 +575,21 @@ def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
     (isolated vertices carry beta)."""
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
-    spark = get_session()
-    n = A.nrows
-    adj, own_adj = _ensure_cached(A.df)
-    edges = adj.select("i", "j").distinct()
-    k = _adjacency_partitions(edges.count())
-    edges_i = edges.repartition(k, "i").persist()
-    edges_i.count()
-    nodes = _vertex_range(spark, n).select(F.col("id").alias("i"))
-    x = nodes.select("i", F.lit(float(beta)).alias("x"))
-    for step in range(iters):
-        contrib = (edges_i.join(x, on="i")
-                          .groupBy("j")
-                          .agg(F.sum("x").alias("s")))
-        x = (nodes.join(contrib.select(F.col("j").alias("i"), "s"),
-                        on="i", how="left")
-                  .select("i", (F.lit(float(beta))
-                                + F.lit(float(alpha))
-                                * F.coalesce(F.col("s"), F.lit(0.0)))
-                          .alias("x")))
-        x = x.localCheckpoint(eager=True)
-    out = x.select("i", F.round("x", 6).alias("katz"))
-    edges_i.unpersist()
-    if own_adj:
-        adj.unpersist()
-    return out
+    with _Cache() as cache:
+        _, (edges_i,) = _edge_prelude(A, cache, "i")
+        nodes = _nodes(A.nrows)
+        x = nodes.select("i", F.lit(float(beta)).alias("x"))
+        for _ in range(iters):
+            contrib = (edges_i.join(x, on="i")
+                              .groupBy(F.col("j").alias("i"))
+                              .agg(F.sum("x").alias("s")))
+            x = (nodes.join(contrib, on="i", how="left")
+                      .select("i", (F.lit(float(beta))
+                                    + F.lit(float(alpha))
+                                    * F.coalesce(F.col("s"), F.lit(0.0)))
+                              .alias("x"))
+                      .localCheckpoint(eager=True))
+        return x.select("i", F.round("x", 6).alias("katz"))
 
 
 def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
@@ -659,56 +611,40 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
     (isolated vertices carry 0.0)."""
     if iters < 1:
         raise ValueError("hits requires iters >= 1")
-    spark = get_session()
     n = A.nrows
-    adj, own_adj = _ensure_cached(A.df)
-    edges = adj.select("i", "j").distinct()
-    k = _adjacency_partitions(edges.count())
-    # TWO cached copies, partitioned by each half-step's join key:
-    # the a-step joins h on i, the h-step joins a on j — with one copy
-    # the other half-step reshuffles the whole edge relation every
-    # iteration (measured 87.6 s -> 41.2 s at 20M edges on local[32],
-    # together with the a-checkpoint below)
-    edges_i = edges.repartition(k, "i").persist()
-    edges_j = edges.repartition(k, "j").persist()
-    edges_i.count()
-    edges_j.count()
-    nodes = _vertex_range(spark, n).select(F.col("id").alias("i"))
-    h = nodes.select("i", F.lit(1.0 / n).alias("h"))
+    with _Cache() as cache:
+        # TWO cached copies, partitioned by each half-step's join key:
+        # the a-step joins h on i, the h-step joins a on j — with one copy
+        # the other half-step reshuffles the whole edge relation every
+        # iteration (measured 87.6 s -> 41.2 s at 20M edges on local[32],
+        # together with checkpointing a before h consumes it — otherwise
+        # h's checkpoint re-executes a's whole plan)
+        _, (edges_i, edges_j) = _edge_prelude(A, cache, "i", "j")
+        nodes = _nodes(n)
+        h = nodes.select("i", F.lit(1.0 / n).alias("h"))
+        for _ in range(iters):
+            a = _hits_step(edges_i, h, nodes, "i", "j", "a")
+            h = _hits_step(edges_j, a, nodes, "j", "i", "h")
+        return (h.join(a, on="i")
+                 .select("i", F.round("h", 6).alias("hub"),
+                         F.round("a", 6).alias("authority")))
 
-    def _norm(df, col):
-        tot = df.agg(F.sum(col).alias("_t"))
-        return (df.crossJoin(tot)
-                  .select("i", F.when(F.col("_t") != 0,
-                                      F.col(col) / F.col("_t"))
-                           .otherwise(0.0).alias(col)))
 
-    for _ in range(iters):
-        a_raw = (edges_i.join(h, on="i")
-                        .groupBy(F.col("j").alias("i"))
-                        .agg(F.sum("h").alias("a")))
-        a = _norm(nodes.join(a_raw, on="i", how="left")
-                       .select("i", F.coalesce("a", F.lit(0.0)).alias("a")),
-                  "a")
-        # checkpoint a BEFORE h consumes it — otherwise h's checkpoint
-        # re-executes a's whole plan a second time
-        a = a.localCheckpoint(eager=True)
-        h_raw = (edges_j.join(a.select(F.col("i").alias("j"), "a"),
-                              on="j")
-                        .groupBy("i")
-                        .agg(F.sum("a").alias("h")))
-        h = _norm(nodes.join(h_raw, on="i", how="left")
-                       .select("i", F.coalesce("h", F.lit(0.0)).alias("h")),
-                  "h")
-        h = h.localCheckpoint(eager=True)
-    out = (h.join(a, on="i")
-            .select("i", F.round("h", 6).alias("hub"),
-                    F.round("a", 6).alias("authority")))
-    edges_i.unpersist()
-    edges_j.unpersist()
-    if own_adj:
-        adj.unpersist()
-    return out
+def _hits_step(edges, x, nodes, src, dst, col):
+    """One HITS half-step, checkpointed: col(v) = sum of x over the edges
+    src -> v, for every vertex, L1-normalized (all 0 when the total is
+    0)."""
+    raw = (edges.join(x.withColumnRenamed("i", src), on=src)
+                .groupBy(F.col(dst).alias("i"))
+                .agg(F.sum(x.columns[1]).alias(col)))
+    full = (nodes.join(raw, on="i", how="left")
+                 .select("i", F.coalesce(col, F.lit(0.0)).alias(col)))
+    tot = full.agg(F.sum(col).alias("_t"))
+    return (full.crossJoin(tot)
+                .select("i", F.when(F.col("_t") != 0,
+                                    F.col(col) / F.col("_t"))
+                             .otherwise(0.0).alias(col))
+                .localCheckpoint(eager=True))
 
 
 def eccentricity(A: GrMatrix, max_iters: int = 32) -> DataFrame:
@@ -928,13 +864,11 @@ def _edge_support(und: DataFrame) -> DataFrame:
     emit deg² wedge rows), each triangle exploded to its three
     canonical edges and counted. Returns (a, b, support) for edges in
     >= 1 triangle; edges in none are absent (callers coalesce)."""
-    ends = und.select(F.col("a").alias("v")).unionAll(
-        und.select(F.col("b").alias("v")))
-    deg = ends.groupBy("v").agg(F.count("*").alias("deg"))
-    ed = (und.join(deg.select(F.col("v").alias("a"),
-                              F.col("deg").alias("da")), on="a")
-             .join(deg.select(F.col("v").alias("b"),
-                              F.col("deg").alias("db")), on="b"))
+    deg = _degrees(und, "a", "b")
+    ed = (und.join(deg.select(F.col("_n").alias("a"),
+                              F.col("_d").alias("da")), on="a")
+             .join(deg.select(F.col("_n").alias("b"),
+                              F.col("_d").alias("db")), on="b"))
     # orient each edge from its lower (deg, id) endpoint.
     # r12 optimization (guide §2.4): `o` feeds THREE branches (both
     # wedge sides + the closing edge set) — size-gated
@@ -988,11 +922,7 @@ def k_truss(A: GrMatrix, k: int = 4, max_iters: int = 30) -> DataFrame:
     their fixpoint support."""
     if k < 3:
         raise ValueError("k_truss requires k >= 3")
-    und = (A.df.select(F.least("i", "j").alias("a"),
-                       F.greatest("i", "j").alias("b"))
-              .where(F.col("i") != F.col("j"))
-              .distinct()
-              .localCheckpoint(eager=True))
+    und = _undirected(A, "a", "b").localCheckpoint(eager=True)
     n_prev = und.count()
     if n_prev == 0:
         return und.withColumn("support", F.lit(None).cast("bigint"))
@@ -1073,63 +1003,6 @@ def neighborhood_jaccard(A: GrMatrix,
                           .alias("jacc"))
 
 
-def personalized_pagerank(A: GrMatrix, seeds: list[int],
-                          damping: float = 0.85,
-                          max_iters: int = 10) -> DataFrame:
-    """Personalized PageRank: power iteration whose restart AND
-    dangling mass both return to the seed set — the random walker
-    teleports to a uniform distribution over ``seeds`` instead of over
-    all nodes. r_{t+1} = (1-d) s + d (P^T r_t + dang_t s) with
-    s = e_S / |S|; r_0 = s. Fixed iterations, no early exit, so the
-    trajectory is deterministic and an unrolled-CTE oracle replays it.
-
-    Plan shape: identical to pagerank (one join+agg per step against
-    the degree-normalized transition relation, partitioned ONCE by
-    source; the dangling scalar stays a 1-row broadcast inside the
-    plan; checkpoint per step). The seed vector is a literal isin over
-    the node relation — no extra join. Output: (i, ppr) rounded 6,
-    seeds-reachable nodes only may be nonzero."""
-    spark = get_session()
-    n = A.nrows
-    adj, own_adj = _ensure_cached(A.df)
-    nvals = adj.count()
-    k = _adjacency_partitions(nvals)
-    outdeg = adj.groupBy("i").agg(F.count("*").alias("d"))
-    P = (adj.join(outdeg, on="i")
-            .select("i", "j", (F.lit(1.0) / F.col("d")).alias("v")))
-    P = P.repartition(k, "i").persist()
-    P.count()
-    nodes = _vertex_range(spark, n).select(F.col("id").alias("i"))
-    has_out = outdeg.select("i").persist()
-    has_out.count()
-    s_val = 1.0 / len(seeds)
-    s_col = F.when(F.col("i").isin([int(x) for x in seeds]),
-                   F.lit(s_val)).otherwise(F.lit(0.0))
-    r = nodes.select("i", s_col.alias("v")).localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        dangling_df = (r.join(has_out, on="i", how="left_anti")
-                        .agg(F.coalesce(F.sum("v"), F.lit(0.0))
-                              .alias("_dang")))
-        contrib = (P.alias("P")
-                    .join(r.alias("r"), F.col("P.i") == F.col("r.i"))
-                    .select(F.col("P.j").alias("i"),
-                            (F.col("P.v") * F.col("r.v")).alias("c"))
-                    .groupBy("i").agg(F.sum("c").alias("s")))
-        r = (nodes.join(contrib, on="i", how="left_outer")
-                  .crossJoin(dangling_df)
-                  .select("i",
-                          (F.lit(1.0 - damping) * s_col
-                           + F.lit(damping)
-                           * (F.coalesce(F.col("s"), F.lit(0.0))
-                              + F.col("_dang") * s_col)).alias("v")))
-        r = r.localCheckpoint(eager=True)
-    has_out.unpersist()
-    P.unpersist()
-    if own_adj:
-        adj.unpersist()
-    return r.select("i", F.round(F.col("v"), 6).alias("ppr"))
-
-
 def degree_assortativity(A: GrMatrix) -> DataFrame:
     """Degree assortativity of a symmetric graph: the Pearson
     correlation of endpoint degrees over all (directed) edges — do
@@ -1205,20 +1078,14 @@ def modularity(A: GrMatrix, labels: DataFrame,
     oracle). Output: one row (n_edges, n_communities, q)."""
     lab = labels.select(F.col(node_col).cast("bigint").alias("_n"),
                         F.col(label_col).alias("_l"))
-    und = (A.df.select(F.least("i", "j").alias("u"),
-                       F.greatest("i", "j").alias("v"))
-              .where(F.col("u") != F.col("v"))
-              .distinct()
-              .localCheckpoint())
+    und = _undirected(A).localCheckpoint()
     m = und.count()
     spark = get_session()
     if m == 0:
         return spark.createDataFrame(
             [(0, 0, None)],
             "n_edges long, n_communities long, q double")
-    deg = (und.select(F.col("u").alias("_n"))
-              .unionAll(und.select(F.col("v").alias("_n")))
-              .groupBy("_n").agg(F.count("*").alias("_d")))
+    deg = _degrees(und)
     # d_c = sum of degrees per community; m_c = within-community edges
     dc = (deg.join(lab, on="_n")
              .groupBy("_l").agg(F.sum("_d").cast("bigint").alias("_dc")))
@@ -1261,14 +1128,8 @@ def rich_club(A: GrMatrix, k: int) -> DataFrame:
     re-shuffles the full edge list. All-integer output plus one
     double division, round 6; phi NULL when fewer than 2 rich
     nodes. Output: one row (k, n_rich, e_rich, phi)."""
-    und = (A.df.select(F.least("i", "j").alias("u"),
-                       F.greatest("i", "j").alias("v"))
-              .where(F.col("u") != F.col("v"))
-              .distinct()
-              .localCheckpoint())
-    deg = (und.select(F.col("u").alias("_n"))
-              .unionAll(und.select(F.col("v").alias("_n")))
-              .groupBy("_n").agg(F.count("*").alias("_d")))
+    und = _undirected(A).localCheckpoint()
+    deg = _degrees(und)
     rich = deg.where(F.col("_d") > k).select("_n")
     n_rich = rich.count()
     e_rich = (und.join(rich.withColumnRenamed("_n", "u"),
@@ -1296,13 +1157,8 @@ def degree_histogram(A: GrMatrix) -> DataFrame:
     (node degree, then nodes per degree) over the canonical edge set;
     the output is bounded by the max degree, never by n. share
     rounds 6."""
-    und = (A.df.select(F.least("i", "j").alias("u"),
-                       F.greatest("i", "j").alias("v"))
-              .where(F.col("u") != F.col("v"))
-              .distinct())
-    deg = (und.select(F.col("u").alias("_n"))
-              .unionAll(und.select(F.col("v").alias("_n")))
-              .groupBy("_n").agg(F.count("*").alias("_d")))
+    und = _undirected(A)
+    deg = _degrees(und)
     hist = deg.groupBy(F.col("_d").cast("bigint").alias("degree")) \
               .agg(F.count("*").cast("bigint").alias("n_nodes"))
     total = hist.agg(F.sum("n_nodes").alias("_t"))

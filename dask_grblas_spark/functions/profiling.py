@@ -1931,7 +1931,7 @@ def roc_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
              .groupBy("_s")
              .agg(F.sum("_y").cast("bigint").alias("_pos"),
                   F.sum(1 - F.col("_y")).cast("bigint").alias("_neg")))
-    pref, n_neg = _prefix_sum(per, [F.col("_s")], "_neg", "_cumneg")
+    pref, _ = _prefix_sum(per, [F.col("_s")], "_neg", "_cumneg")
     row = pref.agg(
         F.sum("_pos").cast("bigint").alias("n_pos"),
         F.sum("_neg").cast("bigint").alias("n_neg"),

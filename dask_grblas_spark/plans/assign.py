@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dtypes import GbType
+from ..partitions import sized_range
 from .extract import ResolvedIndex, dedup_last_wins
 
 
@@ -53,24 +54,13 @@ def axis_region_spec(rx: ResolvedIndex):
     return ("df", rx.df.select(F.col("idx")).distinct())
 
 
-def _sized_range(spark: SparkSession, start: int, end: int) -> DataFrame:
-    """``spark.range`` with a row-count-derived split count (~64k rows
-    per split, floor 1, cap defaultParallelism) instead of the default
-    ``defaultParallelism`` splits — a 25-row axis fill otherwise drags
-    32 near-empty splits through every consumer (r13, guide §2)."""
-    n = max(0, int(end) - int(start))
-    par = spark.sparkContext.defaultParallelism
-    k = max(1, min(par, -(-n // 65_536)))
-    return spark.range(start, end, 1, numPartitions=k)
-
-
 def axis_targets(rx: ResolvedIndex, spark: SparkSession, size: int,
                  col: str) -> DataFrame:
     """All target coordinates addressed by one axis, as a DataFrame —
     used for scalar broadcast fill (A5). Full-axis fill densifies by
     construction (the reference warns on it, base.py:243-252)."""
     if rx.kind == "int":
-        return _sized_range(spark, rx.value, rx.value + 1) \
+        return sized_range(spark, rx.value, rx.value + 1) \
             .select(F.col("id").alias(col))
     if rx.kind == "all":
         if size is None:
@@ -78,13 +68,13 @@ def axis_targets(rx: ResolvedIndex, spark: SparkSession, size: int,
                 "unmasked full-axis scalar fill needs a known logical size "
                 "(from_dataframe wrappers carry none); set .size/.nrows/"
                 ".ncols or supply a bounding mask")
-        return _sized_range(spark, 0, size).select(F.col("id").alias(col))
+        return sized_range(spark, 0, size).select(F.col("id").alias(col))
     if rx.kind == "pred":
         if rx.out_size is None:
             raise ValueError(
                 "unbounded slice scalar fill needs a known logical size; "
                 "set .size/.nrows/.ncols or supply a bounding mask")
-        return (_sized_range(spark, 0, rx.out_size)
+        return (sized_range(spark, 0, rx.out_size)
                 .select(rx.tgt_of(F.col("id")).alias(col)))
     return dedup_last_wins(rx.df).select(F.col("idx").alias(col))
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..core import GrMatrix, GrVector
 from ..functions.materialize import broadcast_if_small
+from ..partitions import partitions_for_rows
 
 __all__ = ["load_table", "customer_supplier_matrix", "nation_matrix",
            "customer_acctbal_vector", "customer_order_count_vector"]
@@ -35,9 +36,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _DERIVED_CACHE: dict[tuple, DataFrame] = {}
 
 
-_CACHE_ROWS_PER_PARTITION = 65_536
-
-
 def _cached_build(spark: SparkSession, sf_dir: str, name: str, build):
     key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _DERIVED_CACHE.get(key)
@@ -49,15 +47,11 @@ def _cached_build(spark: SparkSession, sf_dir: str, name: str, build):
         # the 625-row nation graph otherwise sits in 32 near-empty
         # partitions and every one of its many consumers (incl. every
         # round of the iterative loops) pays 32 task launches per
-        # read. Re-cache at a row-count-derived width (~64k rows per
-        # partition, floor 1, cap defaultParallelism — the
-        # _prep_adjacency sizing rule); the narrow coalesce costs one
-        # cheap pass over the already-cached aggregate and is a no-op
-        # decision at sizes that already fill the cores.
-        par = spark.sparkContext.defaultParallelism
-        k = max(1,
-                min(par, -(-int(n) // _CACHE_ROWS_PER_PARTITION)),
-                -(-int(n) // 1_000_000))  # never > ~1M rows/partition
+        # read. Re-cache at the row-count-derived width; the narrow
+        # coalesce costs one cheap pass over the already-cached
+        # aggregate and is a no-op decision at sizes that already
+        # fill the cores.
+        k = partitions_for_rows(n, spark.sparkContext.defaultParallelism)
         try:
             cur = df.rdd.getNumPartitions()
         except Exception:

@@ -96,7 +96,8 @@ def test_iterative_loops_release_their_caches(spark):
     evicts on its own), so repeated runs degraded the whole session.
     Every persist made inside a loop must be released by the time it
     returns. Checked via CacheManager emptiness (localCheckpoint blocks
-    are RDD-level, cleaned asynchronously, and NOT part of this leak)."""
+    are RDD-level, cleaned asynchronously, and NOT part of this leak).
+    An input the caller cached must stay cached."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     if not cm.isEmpty():
         pytest.skip("another test left session-level caches; emptiness "
@@ -106,7 +107,47 @@ def test_iterative_loops_release_their_caches(spark):
         alg.connected_components(A).to_dict()
         alg.bfs_level(A, 0).to_dict()
         alg.sssp(A, 0).to_dict()
+    # one run each suffices to show a leak: it stays in the CacheManager
+    alg.connected_components(A, vertices="edges").to_dict()
+    alg.pagerank(A, max_iters=2).to_dict()
+    alg.personalized_pagerank(A, [0], max_iters=2).collect()
+    alg.katz_centrality(A, iters=2).collect()
+    alg.hits(A, iters=2).collect()
+    alg.k_core(A, 2).to_dict()
+    alg.label_propagation(A, max_iters=2).to_dict()
     assert cm.isEmpty(), "iterative algorithms leaked cache entries"
+    shared = A.df.persist()
+    try:
+        alg.connected_components(
+            gb.GrMatrix(shared, A.dtype, 12, 12)).to_dict()
+        assert shared.storageLevel.useMemory, \
+            "an algorithm released a cache its caller owns"
+    finally:
+        shared.unpersist()
+    assert cm.isEmpty()
+
+
+def test_loop_releases_its_caches_when_a_round_raises(spark, monkeypatch):
+    """A round that raises (a cancelled job, a lost executor) must not
+    leave the adjacency or the round state in Spark's CacheManager."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    if not cm.isEmpty():
+        pytest.skip("another test left session-level caches; emptiness "
+                    "delta would be meaningless")
+    vxm = gb.GrVector.vxm
+    calls = []
+
+    def fail_in_round_2(self, *args, **kwargs):
+        calls.append(None)
+        if len(calls) == 2:
+            raise RuntimeError("round 2 failed")
+        return vxm(self, *args, **kwargs)
+
+    monkeypatch.setattr(gb.GrVector, "vxm", fail_in_round_2)
+    with pytest.raises(RuntimeError, match="round 2 failed"):
+        alg.bfs_level(fastsv_matrix(spark), 0)
+    assert len(calls) == 2
+    assert cm.isEmpty(), "a failed round leaked cache entries"
 
 
 def test_connected_components_sparse_hashed_ids(spark):
