@@ -259,6 +259,9 @@ def _stamp_row_id(df: DataFrame) -> DataFrame:
               .localCheckpoint())
 
 
+_INT64_MAX = 2 ** 63 - 1
+
+
 def _shuffle_parts(spark) -> int:
     """Target partition count for the range-partitioned exact-rank
     shuffles: spark.sql.shuffle.partitions when numeric, else (e.g.
@@ -270,37 +273,95 @@ def _shuffle_parts(spark) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def _range_scan(df: DataFrame, sort_cols: list, *aggs):
+    """The one range-partitioned scan behind the exact rank, quantile,
+    prefix-sum, KS and Pareto operators — a chunked fold without a
+    single-task global window.
+
+    ``repartitionByRange`` on the full sort key makes every one of the
+    `_shuffle_parts` partitions a contiguous, sample-balanced interval
+    of the total order (a trailing distinct tie-break splits even a
+    90%-constant leading key across partitions). The partition id is
+    tagged as ``_p`` and pinned by ONE eager localCheckpoint, so the
+    aggregate pass and every later window over ``_p`` see identical
+    placement; ``aggs`` are then evaluated per partition in one action
+    (numPartitions rows to the driver). Exactness never depends on
+    where the sampled boundaries land.
+
+    Returns (tagged, rows): the input columns plus ``_p``, and one
+    ``(_p, *aggs)`` row per non-empty partition in partition order."""
+    tagged = (df.repartitionByRange(_shuffle_parts(df.sparkSession),
+                                    *sort_cols)
+                .withColumn("_p", F.spark_partition_id())
+                .localCheckpoint())
+    rows = tagged.groupBy("_p").agg(*aggs).collect()
+    return tagged, sorted(rows, key=lambda r: r[0])
+
+
+def _exclusive_offsets(rows, k: int):
+    """Fold the first ``k`` aggregates of `_range_scan` rows into
+    exclusive per-partition offsets ({_p: [offset, ...]}) and the
+    exact totals ([total, ...]) as Python ints; NULL sums count 0.
+    A running sum outside int64 raises ARITHMETIC_OVERFLOW, as Spark's
+    ANSI sums do, instead of reaching the plan as an unbounded
+    literal."""
+    from pyspark.errors import ArithmeticException
+
+    offs, cum = {}, [0] * k
+    for r in rows:
+        offs[r[0]] = list(cum)
+        cum = [c + int(x or 0) for c, x in zip(cum, r[1:k + 1])]
+        if any(abs(c) > _INT64_MAX for c in cum):
+            raise ArithmeticException(
+                message="running sum past int64 in the range-scan "
+                        "offsets", errorClass="ARITHMETIC_OVERFLOW")
+    return offs, cum
+
+
+def _offset_col(offs: dict, i: int = 0):
+    """Each row's offset for aggregate ``i``, looked up by ``_p``."""
+    if not offs:
+        return F.lit(0)
+    return F.create_map(*[F.lit(x) for p, o in offs.items()
+                          for x in (p, o[i])])[F.col("_p")]
+
+
+def _rank_targets(spark, rows, probs: list[float]):
+    """Driver side of the exact (weighted) quantiles: rank
+    r = ceil(round(p * total, 6)) of the per-partition totals in
+    `_range_scan` ``rows`` falls in the last partition whose exclusive
+    offset is below r. Returns a (_p, p, _lr) relation with _lr the
+    rank local to that partition, or None when the total is 0."""
+    offs, (tot,) = _exclusive_offsets(rows, 1)
+    if not tot:
+        return None
+    wanted = []
+    for p in probs:
+        r = max(1, math.ceil(round(p * tot, 6)))
+        pid = max(q for q, (o,) in offs.items() if o < r)
+        wanted.append((pid, float(p), r - offs[pid][0]))
+    return spark.createDataFrame(wanted, "_p int, p double, _lr long")
+
+
 def exact_quantiles(df: DataFrame, col: str, probs: list[float],
                     nbins: int = 1024) -> DataFrame:
-    """(``nbins`` is IGNORED — kept for signature compatibility with
-    the retired equi-width-histogram implementation; partitioning now
-    follows spark.sql.shuffle.partitions via ``_shuffle_parts``.)
-
-    EXACT order-statistic quantiles of a double column WITHOUT a
-    global sort AND without a value-binned hot-bin straggler: the
-    range-partitioned prefix-count discipline (`_exact_rank` /
-    `exact_weighted_quantiles` family). repartitionByRange on the
-    tie-broken (value, row-id) key makes every partition a contiguous,
-    sample-balanced interval of the total order — a 90%-duplicate
-    column still balances because the distinct row-id splits the tie
-    run (the former equi-width value bins put the whole hot run in ONE
-    bin's row_number task). Per-partition row counts come to the driver
-    (numPartitions rows); the driver locates each quantile's partition
-    and local rank; one row_number window over ONLY the targeted
-    partitions (each ~n/numPartitions rows) reads the answers off.
+    """EXACT order-statistic quantiles of a double column without a
+    global sort: one `_range_scan` over the tie-broken (value, row-id)
+    key counts rows per partition, `_rank_targets` locates each
+    quantile's partition and local rank on the driver, and one
+    row_number window over ONLY the targeted partitions reads the
+    answers off. ``nbins`` is ignored (kept for signature
+    compatibility with the retired value-binned implementation).
 
     quantile(p) is the ceil(round(p*n, 6))-th smallest value (order
     statistic; the 6-decimal round guards the float product against
     0.5*60000 -> 30000.000000000004 -> ceil 30001, and the SQL oracle
     uses the same CEIL(ROUND(p*n, 6)) formula). Tie order among equal
     values cannot change the answer (any rank inside a tie run reads
-    the run's value). NULLs are excluded. ``nbins`` is kept for
-    signature compatibility; ranking no longer bins on value.
+    the run's value). NULLs are excluded.
     Output: (p, value) — one row per DISTINCT requested probability
     (a duplicated p would double its rows inside the targeted
     partition's row_number window and corrupt the rank)."""
-    import math
-
     from pyspark.sql.window import Window as W
 
     probs = list(dict.fromkeys(probs))
@@ -308,26 +369,11 @@ def exact_quantiles(df: DataFrame, col: str, probs: list[float],
     v = F.col(col).cast("double")
     base = _stamp_row_id(
         df.select(v.alias("_v")).where(v.isNotNull()))
-    nparts = _shuffle_parts(spark)
-    tagged = (base.repartitionByRange(nparts, F.col("_v"), F.col("_id"))
-                  .withColumn("_p", F.spark_partition_id())
-                  .localCheckpoint())
-    counts = dict(tagged.groupBy("_p").count().collect())
-    offs, cum = {}, 0
-    for pid in sorted(counts):
-        offs[pid] = cum
-        cum += counts[pid]
-    n = cum
-    if not n:
+    tagged, rows = _range_scan(base, [F.col("_v"), F.col("_id")],
+                               F.count("*"))
+    want_df = _rank_targets(spark, rows, probs)
+    if want_df is None:
         return spark.createDataFrame([], "p double, value double")
-    wanted = []
-    for p in probs:
-        r = max(1, math.ceil(round(p * n, 6)))
-        for pid in sorted(counts):
-            if offs[pid] + counts[pid] >= r:
-                wanted.append((pid, float(p), r - offs[pid]))
-                break
-    want_df = spark.createDataFrame(wanted, "_p int, p double, _lr long")
     # partition the window by (_p, p): a partition targeted by several
     # probabilities carries one row copy per probability
     wn = W.partitionBy("_p", "p").orderBy("_v", "_id")
@@ -675,37 +721,17 @@ def _exact_rank(df: DataFrame, sort_cols: list,
                 out_col: str = "_rank") -> tuple[DataFrame, int]:
     """EXACT dense 1..n global rank over the total order given by
     ``sort_cols`` (ascending Column expressions; the trailing column
-    must be a per-row tie-break so the composite key is distinct) —
-    no single-task global window AND no value-skew hazard:
-    repartitionByRange on the FULL sort key makes every partition a
-    contiguous, sample-balanced interval of the total order (ties on
-    the leading metric split across partitions because the tie-break
-    column is distinct — a 90%-constant metric still balances), the
-    numPartitions per-partition counts come to the driver (bounded),
-    and rank = partition offset + local row_number. Exactness does not
-    depend on where the sampled boundaries land; the partition id is
-    materialized (localCheckpoint) so the count pass and the rank pass
-    see identical placement. Returns (ranked_df, n) with ``out_col``
+    must be a per-row tie-break so the composite key is distinct):
+    one `_range_scan` counts rows per partition, and rank = partition
+    offset + local row_number. Returns (ranked_df, n) with ``out_col``
     added; input columns are preserved."""
     from pyspark.sql.window import Window as W
 
-    spark = df.sparkSession
-    nparts = _shuffle_parts(spark)
-    tagged = (df.repartitionByRange(nparts, *sort_cols)
-                .withColumn("_p", F.spark_partition_id())
-                .localCheckpoint())
-    hist = dict(tagged.groupBy("_p").count().collect())
-    if not hist:
-        return (tagged.withColumn(out_col, F.lit(None).cast("bigint"))
-                      .drop("_p"), 0)
-    offsets, cum = {}, 0
-    for p in sorted(hist):
-        offsets[p] = cum
-        cum += hist[p]
-    off = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+    tagged, rows = _range_scan(df, sort_cols, F.count("*"))
+    offs, (n,) = _exclusive_offsets(rows, 1)
     w = W.partitionBy("_p").orderBy(*sort_cols)
-    rank = (off[F.col("_p")] + F.row_number().over(w)).cast("bigint")
-    return tagged.withColumn(out_col, rank).drop("_p"), cum
+    rank = (_offset_col(offs) + F.row_number().over(w)).cast("bigint")
+    return tagged.withColumn(out_col, rank).drop("_p"), n
 
 
 def _exact_ntile(df: DataFrame, metric: str, ascending: bool,
@@ -990,23 +1016,18 @@ def exact_weighted_quantiles(df: DataFrame, col: str, weight_col: str,
                              nbins: int = 1024) -> DataFrame:
     """EXACT weighted quantiles without a global sort: quantile(p) is
     the smallest value whose cumulative weight (in value order) reaches
-    ceil(round(p * W, 6)). Range-partition on the tie-broken (value,
-    row-id) key (the _exact_rank discipline — a 90%-constant value
-    still balances across sampled interval partitions, unlike the
-    former equi-width value bins, whose hot bin ran one straggler
-    task); per-partition weight sums come to the driver (numPartitions
-    rows), locate each target's partition and local remainder there,
+    ceil(round(p * W, 6)). One `_range_scan` over the tie-broken
+    (value, row-id) key sums weights per partition, `_rank_targets`
+    locates each target's partition and local remainder on the driver,
     then ONE running-weight window over only the targeted partitions
-    (each ~n/numPartitions rows). Tie order among equal values cannot
-    change the answer (the run's last row always carries the run's
-    full cumulative weight). INTEGER weights make the comparison
+    reads the answers off. Tie order among equal values cannot change
+    the answer (the run's last row always carries the run's full
+    cumulative weight). INTEGER weights make the comparison
     engine-exact (integer cumulative sums have no float association
-    drift). ``nbins`` is kept for signature compatibility.
+    drift). ``nbins`` is ignored (signature compatibility).
     Output: (p, value) — one row per DISTINCT requested probability
     (a duplicated p would double its partition's rows under the
     running-weight window)."""
-    import math
-
     from pyspark.sql.window import Window as W
 
     probs = list(dict.fromkeys(probs))
@@ -1015,26 +1036,11 @@ def exact_weighted_quantiles(df: DataFrame, col: str, weight_col: str,
     base = _stamp_row_id(df.select(v.alias("_v"), w.alias("_w"))
                            .where(F.col("_w") > 0))
     spark = df.sparkSession
-    nparts = _shuffle_parts(spark)
-    tagged = (base.repartitionByRange(nparts, F.col("_v"), F.col("_id"))
-                  .withColumn("_p", F.spark_partition_id())
-                  .localCheckpoint())
-    sums = dict(tagged.groupBy("_p").agg(F.sum("_w")).collect())
-    offs, cum = {}, 0
-    for pid in sorted(sums):
-        offs[pid] = cum
-        cum += sums[pid]
-    tot = cum
-    if not tot:
+    tagged, rows = _range_scan(base, [F.col("_v"), F.col("_id")],
+                               F.sum("_w"))
+    want_df = _rank_targets(spark, rows, probs)
+    if want_df is None:
         return spark.createDataFrame([], "p double, value double")
-    wanted = []
-    for p in probs:
-        r = max(1, math.ceil(round(p * tot, 6)))
-        for pid in sorted(sums):
-            if offs[pid] + sums[pid] >= r:
-                wanted.append((pid, float(p), r - offs[pid]))
-                break
-    want_df = spark.createDataFrame(wanted, "_p int, p double, _lr long")
     # partition the window by (_p, p): a partition targeted by several
     # probabilities carries one row copy per probability, each with an
     # independent running sum
@@ -1403,15 +1409,10 @@ def ks_test(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
 
     Distributed-exact without a global sort: both samples collapse to
     ONE distinct-value relation with per-side counts (map-side
-    combined), whose cumulative sums come from the same
-    repartitionByRange discipline as _exact_rank — distinct values are
-    a tie-free sort key, so the sampled interval partitions balance
-    any distribution; per-partition side-sums come to the driver
-    (numPartitions rows) and cum = partition offset + local running
-    sum. D evaluates at every distinct value (the CDF steps only
-    there). Output: one row (n_a, n_b, d_stat r6)."""
-    from pyspark.sql.window import Window as W
-
+    combined), whose cumulative sums are one two-column `_prefix_sum`
+    over the value (distinct values are a tie-free sort key). D
+    evaluates at every distinct value (the CDF steps only there).
+    Output: one row (n_a, n_b, d_stat r6)."""
     def counted(df, name):
         v = F.col(col).cast("double")
         return (df.where(v.isNotNull())
@@ -1447,44 +1448,23 @@ def ks_test_tagged(df: DataFrame, col: str, a_cond) -> DataFrame:
 
 
 def _ks_from_rel(rel: DataFrame) -> DataFrame:
-    """Shared KS tail: range-partitioned cumulative sums over the
-    distinct-value (v, ca, cb) relation, D read off in one pass."""
-    from pyspark.sql.window import Window as W
-
+    """Shared KS tail over the distinct-value (v, ca, cb) relation:
+    both CDFs are one two-column `_prefix_sum` over v (distinct, so a
+    tie-free sort key), D read off in one pass."""
     spark = rel.sparkSession
-    nparts = _shuffle_parts(spark)
-    tagged = (rel.repartitionByRange(nparts, F.col("v"))
-                 .withColumn("_p", F.spark_partition_id())
-                 .localCheckpoint())
-    sums = {r["_p"]: (r["sa"], r["sb"]) for r in
-            tagged.groupBy("_p").agg(F.sum("ca").alias("sa"),
-                                     F.sum("cb").alias("sb")).collect()}
-    if not sums:
-        return spark.createDataFrame([(0, 0, None)],
-                                     "n_a long, n_b long, d_stat double")
-    offs, ca_cum, cb_cum = {}, 0, 0
-    for p in sorted(sums):
-        offs[p] = (ca_cum, cb_cum)
-        ca_cum += sums[p][0]
-        cb_cum += sums[p][1]
-    n_a, n_b = ca_cum, cb_cum
+    pref, (n_a, n_b) = _prefix_sum(rel, [F.col("v")], ["ca", "cb"],
+                                   ["_ea", "_eb"])
     if not n_a or not n_b:
         return spark.createDataFrame(
             [(int(n_a), int(n_b), None)],
             "n_a long, n_b long, d_stat double")
-    off_a = F.create_map(*[F.lit(x) for p, (a, _) in offs.items()
-                           for x in (p, a)])
-    off_b = F.create_map(*[F.lit(x) for p, (_, b) in offs.items()
-                           for x in (p, b)])
-    w = (W.partitionBy("_p").orderBy("v")
-          .rowsBetween(W.unboundedPreceding, 0))
-    fa = (off_a[F.col("_p")] + F.sum("ca").over(w)) / F.lit(float(n_a))
-    fb = (off_b[F.col("_p")] + F.sum("cb").over(w)) / F.lit(float(n_b))
+    fa = (F.col("_ea") + F.col("ca")) / F.lit(float(n_a))
+    fb = (F.col("_eb") + F.col("cb")) / F.lit(float(n_b))
     # round IN-PLAN (F.round = HALF_UP, the suite's cross-engine
     # discipline; Python round() is half-to-even) — rounding is
     # monotone, so max(round(x)) == round(max(x))
-    d = (tagged.select(F.round(F.abs(fa - fb), 6).alias("_d"))
-               .agg(F.max("_d").alias("d")).collect()[0]["d"])
+    d = (pref.select(F.round(F.abs(fa - fb), 6).alias("_d"))
+             .agg(F.max("_d").alias("d")).collect()[0]["d"])
     return spark.createDataFrame(
         [(int(n_a), int(n_b), float(d))],
         "n_a long, n_b long, d_stat double")
@@ -1739,172 +1719,37 @@ def winsorize(df: DataFrame, group_col: str, val_col: str,
 def _prefix_sum(df: DataFrame, sort_cols: list, val_col,
                 out_col="_psum"):
     """EXCLUSIVE prefix sum of one or several integral ``val_col``s
-    over the total order given by ``sort_cols`` (a DISTINCT composite
-    key) — the running-total sibling of `_exact_rank`, same
-    discipline: no single-task global window. repartitionByRange on
-    the full sort key makes each partition a contiguous interval of
-    the order; each row's prefix = partition offset + an
-    intra-partition running window. Multiple columns share ONE range
-    shuffle and one window pass (pr_auc needs two running totals —
-    paying the shuffle twice doubled its probe time).
+    over the total order given by ``sort_cols``: one `_range_scan`
+    sums every column per partition, `_exclusive_offsets` turns those
+    into partition offsets, and each row's prefix = its partition
+    offset + an intra-partition running window. Several columns share
+    the one range shuffle and one window pass (pr_auc needs two
+    running totals).
 
-    TWO ALGORITHMS behind one size gate (r12 verdict item 6; the
-    q326 "gate picks the algorithm" discipline — both branches return
-    identical rows, only the physical dataflow differs):
+    Preconditions: the sort key must be DISTINCT (ties would make the
+    order, hence the prefixes, partition-dependent), and the values
+    sum as int64 — a partition sum, offset or prefix past 2^63 - 1
+    raises ARITHMETIC_OVERFLOW instead of wrapping (in the plan under
+    Spark's default ANSI mode, in `_exclusive_offsets` on the driver).
 
-    - BELOW the gate (small input): the pre-r13 shape — the tagged
-      relation is localCheckpointed (cheap at this size), the
-      per-partition sums come to the driver (Python ints), and the
-      window pass reads the pinned placement. The checkpoint is what
-      makes the two passes agree; at small scale it costs less than
-      the single-plan overhead below (measured: +0.2-0.5 s fixed per
-      call at sf0.1).
-    - ABOVE the gate (the 100 TB shape): the pre-r13 checkpoint
-      would MATERIALIZE the full slim relation to executor disk
-      (~one copy of the distinct-score relation for continuous-score
-      AUC). Instead the per-partition sums become a sums/count-only
-      aggregate BRANCH of the same range exchange inside ONE plan:
-      the nparts-row branch turns into exclusive offsets via one
-      bounded window (nparts rows, single task by design) and
-      broadcast-joins back on the partition id. No materialization,
-      no driver collect, no second execution of the input.
-
-    Placement consistency of the single-plan branch: both branches
-    hang off the SAME repartitionByRange exchange, so within one
-    execution Spark's exchange reuse gives them identical
-    row->partition placement. Catalyst's per-branch column pruning
-    can defeat that reuse (the sums branch needs fewer columns), so
-    (a) the sums branch references EVERY input column (count
-    aggregates threaded through the guard below) to keep both
-    subtrees canonically identical, and (b) an in-plan tripwire
-    (`assert_true`, the quantile_sketch_merge discipline) verifies
-    per-partition row counts from the two branches agree and that
-    every partition id resolved an offset row — a divergent
-    placement raises loudly instead of returning silently wrong
-    prefixes.
-
-    Returns (df + out_col(s), None); no caller consumed the old
-    driver-side totals (they all re-aggregate in their own fold)."""
-    from .materialize import should_materialize
+    Returns (df + out_col(s), totals): the exact driver-side total
+    of each column — an int for one ``val_col``, a list for several."""
+    from pyspark.sql.window import Window as W
 
     single = isinstance(val_col, str)
     cols = [val_col] if single else list(val_col)
     outs = [out_col] if single else list(out_col)
     assert len(cols) == len(outs)
-    if should_materialize(df):
-        return _prefix_sum_single_plan(df, sort_cols, cols, outs)
-    return _prefix_sum_checkpointed(df, sort_cols, cols, outs)
-
-
-def _prefix_sum_checkpointed(df: DataFrame, sort_cols: list,
-                             cols: list, outs: list):
-    """The small-input prefix-sum branch: placement pinned by an
-    (at this size, cheap) localCheckpoint, offsets via one driver
-    collect of the nparts per-partition sums (see _prefix_sum)."""
-    from pyspark.sql.window import Window as W
-
-    spark = df.sparkSession
-    nparts = _shuffle_parts(spark)
-    tagged = (df.repartitionByRange(nparts, *sort_cols)
-                .withColumn("_p", F.spark_partition_id())
-                .localCheckpoint())
-    rows = (tagged.groupBy("_p")
-                  .agg(*[F.sum(F.col(c).cast("bigint")).alias(f"_s{i}")
-                         for i, c in enumerate(cols)])
-                  .collect())
-    sums = {r["_p"]: [int(r[f"_s{i}"] or 0) for i in range(len(cols))]
-            for r in rows}
-    offsets, cum = {}, [0] * len(cols)
-    for p in sorted(sums):
-        offsets[p] = list(cum)
-        cum = [a + b for a, b in zip(cum, sums[p])]
-    if not offsets:
-        for o in outs:
-            tagged = tagged.withColumn(o, F.lit(0).cast("bigint"))
-        return tagged.drop("_p"), None
+    vals = [F.col(c).cast("bigint") for c in cols]
+    tagged, rows = _range_scan(df, sort_cols, *[F.sum(v) for v in vals])
+    offs, totals = _exclusive_offsets(rows, len(cols))
     w = (W.partitionBy("_p").orderBy(*sort_cols)
           .rowsBetween(W.unboundedPreceding, -1))
-    for i, (c, o) in enumerate(zip(cols, outs)):
-        off = F.create_map(*[F.lit(x) for p, v in offsets.items()
-                             for x in (p, v[i])])
-        run = F.coalesce(F.sum(F.col(c).cast("bigint")).over(w),
-                         F.lit(0))
+    for i, (v, o) in enumerate(zip(vals, outs)):
+        run = F.coalesce(F.sum(v).over(w), F.lit(0))
         tagged = tagged.withColumn(
-            o, (off[F.col("_p")] + run).cast("bigint"))
-    return tagged.drop("_p"), None
-
-
-def _prefix_sum_single_plan(df: DataFrame, sort_cols: list,
-                            cols: list, outs: list):
-    """The at-scale prefix-sum branch: no materialization, offsets as
-    an in-plan aggregate branch of the shared range exchange with a
-    placement tripwire (see _prefix_sum)."""
-    from pyspark.sql.window import Window as W
-
-    spark = df.sparkSession
-    nparts = _shuffle_parts(spark)
-    tagged = (df.repartitionByRange(nparts, *sort_cols)
-                .withColumn("_p", F.spark_partition_id()))
-    extras = list(df.columns)
-    psums = (tagged.groupBy("_p")
-                   .agg(F.count(F.lit(1)).alias("_pcnt"),
-                        *[F.sum(F.col(c).cast("bigint")).alias(f"_s{i}")
-                          for i, c in enumerate(cols)],
-                        # reference every input column so this branch
-                        # prunes to the same schema as the main one —
-                        # the canonical-equality condition for
-                        # exchange reuse (consumed by the guard)
-                        *[F.count(F.col(c)).alias(f"_u{i}")
-                          for i, c in enumerate(extras)]))
-    # nparts rows, single task — bounded by construction, never the
-    # input relation
-    woff = W.orderBy("_p").rowsBetween(W.unboundedPreceding, -1)
-    offs = psums.select(
-        "_p", "_pcnt",
-        *[F.coalesce(F.sum(F.coalesce(F.col(f"_s{i}"), F.lit(0)))
-                      .over(woff), F.lit(0)).cast("bigint")
-           .alias(f"_o{i}") for i in range(len(cols))],
-        *[F.col(f"_u{i}") for i in range(len(extras))])
-    out = tagged.join(F.broadcast(offs), on="_p", how="left")
-    # ONE WindowExec: the guard count and every running sum share the
-    # same (partition, order) spec, only frames differ
-    wfull = W.partitionBy("_p").orderBy(*sort_cols)
-    chk = F.count(F.lit(1)).over(
-        wfull.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-    wrun = wfull.rowsBetween(W.unboundedPreceding, -1)
-    sel = [out[c] for c in out.columns]
-    sel.append(chk.alias("_chk_cnt"))
-    for i, c in enumerate(cols):
-        sel.append(F.coalesce(F.sum(F.col(c).cast("bigint")).over(wrun),
-                              F.lit(0)).alias(f"_run{i}"))
-    out = out.select(*sel)
-    # tripwire: the window's view of each partition must match the
-    # sums branch's (same row count, offset row present). The _u*
-    # terms are tautological (count >= 0) but keep the pruning
-    # alignment above live through the optimizer.
-    ucond = None
-    for i in range(len(extras)):
-        c = F.coalesce(F.col(f"_u{i}"), F.lit(-1)) >= F.lit(-1)
-        ucond = c if ucond is None else (ucond & c)
-    guard_cond = (F.col("_pcnt").isNotNull()
-                  & (F.col("_chk_cnt") == F.col("_pcnt")))
-    if ucond is not None:
-        guard_cond = guard_cond & ucond
-    out = (out.withColumn(
-               "_chk",
-               F.assert_true(guard_cond,
-                             F.lit("_prefix_sum: partition placement "
-                                   "diverged between the sums branch "
-                                   "and the window branch")))
-              .where(F.col("_chk").isNull()))
-    for i, o in enumerate(outs):
-        out = out.withColumn(
-            o, (F.col(f"_o{i}") + F.col(f"_run{i}")).cast("bigint"))
-    drop = (["_chk", "_chk_cnt", "_pcnt", "_p"]
-            + [f"_u{i}" for i in range(len(extras))]
-            + [f"_o{i}" for i in range(len(cols))]
-            + [f"_run{i}" for i in range(len(cols))])
-    return out.drop(*drop), None
+            o, (_offset_col(offs, i) + run).cast("bigint"))
+    return tagged.drop("_p"), (totals[0] if single else totals)
 
 
 def roc_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
@@ -2198,9 +2043,9 @@ def pr_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
     imbalance-robust companion to `roc_auc` for rare-positive
     filter tuning.
 
-    Plan: ONE grouped aggregate per distinct score, then TWO
-    range-partitioned `_prefix_sum` passes (positives and totals)
-    over the DESCENDING score order — no single-task global window.
+    Plan: ONE grouped aggregate per distinct score, then one
+    two-column `_prefix_sum` (positives and totals) over the
+    DESCENDING score order — no single-task global window.
     Each threshold's term pos*(cum_pos/cum_all) associates
     identically in both engines (IEEE division then multiply),
     quantizes at ROUND(.,6), and accumulates as DECIMAL(38,6) —
@@ -2516,9 +2361,9 @@ def auc_by_group(df: DataFrame, score_col: str, label_col,
     pref, _ = _prefix_sum(per, [F.col("grp"), F.col("_s")],
                           "_neg", "_gpref")
     # pref feeds TWO branches (the per-group base aggregate and the
-    # final join) — with _prefix_sum no longer checkpointing (r13),
-    # size-gate the sharing here so the double consumption does not
-    # re-run the whole prefix pipeline at scale (guide §2.4)
+    # final join); its window pass sits after _prefix_sum's pinned
+    # scan, so each branch would re-run that window — size-gate the
+    # sharing so the double consumption does not at scale (guide §2.4)
     from .materialize import materialize_if_large
     pref = materialize_if_large(pref)
     base = pref.groupBy("grp").agg(F.min("_gpref").alias("_base")) \

@@ -120,49 +120,37 @@ def pareto_frontier(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     Plan — the sweep WITHOUT a single-task global window: exact
     duplicates collapse to (x, y, n) first (duplicates of a frontier
     point are mutually non-dominated, so they share the
-    representative's fate); the prefix-min of y in (x, y) order then
-    follows the range-partitioned discipline of the _exact_rank
-    family: repartitionByRange on the full sort key, partition id
-    pinned via localCheckpoint, per-partition min(y) to the driver
-    (numPartitions rows), per-partition window runmin combined with
-    the driver prefix — every partition works a contiguous slice of
-    the order. Post-dedup, p survives iff no PRECEDING point in
-    (x asc, y asc) order has y <= p.y (same-x precedents have
-    strictly smaller y; smaller-x precedents with y <= p.y dominate).
+    representative's fate); the prefix-min of y in (x, y) order is
+    the profiling `_range_scan` collecting per-partition min(y), folded
+    here into the min of all PRECEDING partitions and combined with a
+    per-partition running-min window. Post-dedup, p survives iff no
+    PRECEDING point in (x asc, y asc) order has y <= p.y (same-x
+    precedents have strictly smaller y; smaller-x precedents with
+    y <= p.y dominate).
     Output: (x, y, n) — the frontier, n = source multiplicity."""
     from pyspark.sql.window import Window as W
 
-    spark = df.sparkSession
+    from .profiling import _range_scan
+
     pts = (df.select(F.col(x_col).cast("double").alias("x"),
                      F.col(y_col).cast("double").alias("y"))
              .where(F.col("x").isNotNull() & F.col("y").isNotNull())
              .groupBy("x", "y")
              .agg(F.count("*").cast("bigint").alias("n")))
-    raw = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        nparts = int(raw)
-    except (TypeError, ValueError):
-        nparts = spark.sparkContext.defaultParallelism
-    tagged = (pts.repartitionByRange(nparts, F.col("x"), F.col("y"))
-                 .withColumn("_p", F.spark_partition_id())
-                 .localCheckpoint())
-    pmins = dict(tagged.groupBy("_p").agg(F.min("y").alias("m"))
-                       .collect())
-    # prefix-min of the PRECEDING partitions, per partition id
-    prefix, cur = {}, None
-    for p in sorted(pmins):
-        prefix[p] = cur
-        cur = pmins[p] if cur is None else min(cur, pmins[p])
-    if not prefix:
+    tagged, rows = _range_scan(pts, [F.col("x"), F.col("y")], F.min("y"))
+    if not rows:
         return pts
-    pre = F.create_map(*[x for p, m in prefix.items()
-                         for x in (F.lit(p), F.lit(m))])
+    # prefix-min of the PRECEDING partitions, per partition id
+    prefix, cur = {}, float("inf")
+    for p, m in rows:
+        prefix[p] = cur
+        cur = min(cur, m)
+    pre = F.create_map(*[F.lit(x) for kv in prefix.items() for x in kv])
     w = (W.partitionBy("_p").orderBy("x", "y")
           .rowsBetween(W.unboundedPreceding, -1))
     local_min = F.min("y").over(w)
     best_before = F.least(F.coalesce(local_min, F.lit(float("inf"))),
-                          F.coalesce(pre[F.col("_p")],
-                                     F.lit(float("inf"))))
+                          pre[F.col("_p")])
     return (tagged.withColumn("_b", best_before)
                   .where(F.col("y") < F.col("_b"))
                   .select("x", "y", "n"))

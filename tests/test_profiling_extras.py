@@ -89,9 +89,8 @@ def test_prefix_sum_matches_serial(spark):
     df = spark.createDataFrame([(i, i % 7) for i in range(500)],
                                "k long, v long")
     out, tot = profiling._prefix_sum(df, [F.col("k")], "v", "_ps")
-    # r13: the driver-side total is gone with the checkpoint+collect
-    # (single-plan dataflow; no caller consumed it)
-    assert tot is None
+    # the driver-side total is exact (one int per value column)
+    assert tot == sum(i % 7 for i in range(500))
     got = {r["k"]: r["_ps"] for r in out.collect()}
     run = 0
     for i in range(500):
@@ -99,38 +98,45 @@ def test_prefix_sum_matches_serial(spark):
         run += i % 7
 
 
-def test_prefix_sum_multicol_and_extra_columns(spark, monkeypatch):
-    # both gate branches (r13: the gate picks the algorithm — small
-    # inputs keep the checkpoint-pinned shape, large ones the
-    # single-plan shape) must return identical prefixes; extra
-    # (non-sort, non-val) columns exercise the pruning-alignment path
-    # that keeps the single-plan branches on ONE range exchange
+def test_prefix_sum_multicol_and_extra_columns(spark):
+    # several value columns share one range scan; extra (non-sort,
+    # non-value) columns pass through untouched
     from pyspark.sql import functions as F
     rows = [(float(i), i % 5, i % 3, f"x{i}") for i in range(300)]
     df = spark.createDataFrame(rows, "k double, a long, b long, s string")
+    out, tot = profiling._prefix_sum(df, [F.col("k")], ["a", "b"],
+                                     ["pa", "pb"])
+    assert tot == [sum(i % 5 for i in range(300)),
+                   sum(i % 3 for i in range(300))]
+    got = sorted(out.collect(), key=lambda r: r["k"])
+    ra = rb = 0
+    for i, r in enumerate(got):
+        assert r["pa"] == ra and r["pb"] == rb
+        assert r["s"] == f"x{i}"
+        ra += i % 5
+        rb += i % 3
 
-    def check(out):
-        got = sorted(out.collect(), key=lambda r: r["k"])
-        ra = rb = 0
-        for i, r in enumerate(got):
-            assert r["pa"] == ra and r["pb"] == rb
-            assert r["s"] == f"x{i}"  # extra column survives untouched
-            ra += i % 5
-            rb += i % 3
 
-    # below the gate: checkpoint branch
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_BYTES", str(1 << 60))
-    out_small, _ = profiling._prefix_sum(df, [F.col("k")], ["a", "b"],
-                                         ["pa", "pb"])
-    check(out_small)
-    # above the gate: single-plan branch — no localCheckpoint, exactly
-    # one range exchange subtree reused by the sums branch
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_BYTES", "0")
-    out_big, _ = profiling._prefix_sum(df, [F.col("k")], ["a", "b"],
-                                       ["pa", "pb"])
-    check(out_big)
-    plan = out_big._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan
+def test_prefix_sum_int64_overflow_raises(spark):
+    # sums are int64: four values of 2^62 total 2^64, which must fail
+    # loudly wherever the range scan places the rows — never wrap
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+    df = spark.createDataFrame([(i, 2 ** 62) for i in range(4)],
+                               "k long, v long")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        # one partition: Spark's ANSI sum overflows in the plan; four:
+        # the driver-side offset fold does
+        for parts in ("1", "4"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            with pytest.raises(ArithmeticException,
+                               match="ARITHMETIC_OVERFLOW"):
+                out, _ = profiling._prefix_sum(df, [F.col("k")], "v",
+                                               "_ps")
+                out.collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_pr_auc_known_value(spark):
