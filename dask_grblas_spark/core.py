@@ -37,7 +37,7 @@ from .plans import ewise as ewise_plans
 from .plans import extract as extract_plans
 from .plans import matmul as matmul_plans
 from .plans import reduce as reduce_plans
-from .plans.merge import apply_mask, merge_into
+from .plans.merge import apply_mask
 
 __all__ = ["GrScalar", "GrVector", "GrMatrix", "TransposedMatrix",
            "Vector", "Matrix", "Scalar", "get_session",
@@ -110,6 +110,15 @@ def _dup_agg(dup_op, col, dtype: GbType):
     raise TypeError(f"Invalid dup_op: {dup_op!r}")
 
 
+def plan_leaves(df: DataFrame) -> int:
+    """Leaf count of df's logical plan, counting the plans of its
+    subqueries too (the merge's mask and index membership tests)."""
+    lp = df._jdf.queryExecution().logical()
+    subs = lp.subqueriesAll()
+    return lp.collectLeaves().size() + sum(
+        subs.apply(k).collectLeaves().size() for k in range(subs.size()))
+
+
 class BaseType:
     """Shared wrapper behavior (reference /root/reference/dask_grblas/
     base.py)."""
@@ -133,19 +142,21 @@ class BaseType:
     def df(self) -> DataFrame:
         return self._df
 
-    # In-place updates compose merge plans that reference the previous plan
-    # several times (region split + mask keep/drop + accum union), so
-    # chained updates grow the Catalyst tree ~3-5x PER MUTATION — by depth
-    # ~5 task serialization OOMs the driver regardless of data size. Cut
-    # lineage whenever the logical plan's leaf count crosses a bound; the
-    # reference gets the same effect from dask's per-op materialization
-    # boundaries. Counting mutations is NOT enough — growth is
-    # multiplicative, so the bound must look at the actual plan.
+    # In-place updates stack merge plans: the descriptor merge reads the
+    # previous plan once and adds its own new/mask/index leaves, so chained
+    # updates grow the Catalyst tree linearly (masked vector sub-assigns by
+    # a list: 5, 9, 13, 17, 21 leaves after 1-5 of them with accum, 8, 15,
+    # 22, 29, 36 without). A loop of assigns still grows without limit, and
+    # planning and task serialization cost grows with it, so cut lineage
+    # whenever the plan's leaf count crosses a bound (after about 11 of the
+    # first kind, 6 of the second); the reference gets the same effect from dask's per-op
+    # materialization boundaries. The bound looks at the actual plan, as
+    # ops differ in how many leaves they add.
     _MAX_PLAN_LEAVES = 48
 
     def _set_df(self, df: DataFrame):
         try:
-            n_leaves = df._jdf.queryExecution().logical().collectLeaves().size()
+            n_leaves = plan_leaves(df)
         except Exception:
             n_leaves = 0
         if n_leaves > self._MAX_PLAN_LEAVES:
@@ -657,6 +668,8 @@ class GrVector(BaseType):
 
     def __contains__(self, index):
         rx = self._resolve_indices(index)[0]
+        if rx.kind != "int":
+            raise TypeError("membership only supports single elements")
         return self._df.filter(F.col("i") == rx.value).limit(1).count() > 0
 
     def __iter__(self):
@@ -710,13 +723,8 @@ class GrVector(BaseType):
         if isinstance(dup_op, BinaryOp):
             dup_op = monoid._registry[dup_op.name]
         new_df = assign_plans.reduce_assign_build(rhs.df, rx, dup_op, self.dtype)
-        upd = Updater(self, mask=mask, accum=accum, replace=replace)
-        mask_t = resolve_mask(mask)
-        region = ("axis", [("i", assign_plans.axis_region_spec(rx))])
-        merged = merge_into(self._df, new_df, ["i"], accum=upd._accum_fn(),
-                            mask=mask_t, replace=replace, region=region,
-                            mask_scope="target")
-        self._set_df(merged)
+        Updater(self, mask=mask, accum=accum, replace=replace)._merge(
+            new_df, resolve_mask(mask), [("i", rx)])
 
 
 # ===========================================================================
@@ -995,6 +1003,8 @@ class GrMatrix(BaseType):
 
     def __contains__(self, index):
         rr, rc = self._resolve_indices(index)
+        if rr.kind != "int" or rc.kind != "int":
+            raise TypeError("membership only supports single elements")
         return (self._df.filter((F.col("i") == rr.value)
                                 & (F.col("j") == rc.value)).limit(1).count() > 0)
 
@@ -1188,10 +1198,8 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
 
     axes: list of (key_col, ResolvedIndex, axis_size). The object's
     coordinates (positions in the extracted region) are translated to
-    target coordinates, then merged through the descriptor pipeline with a
-    region spec scoping replace/deletion correctly."""
-    from .plans.merge import merge_into
-
+    target coordinates, then merged through the descriptor pipeline with
+    the addressed region scoping replace/deletion correctly."""
     spark = get_session()
     dtype = parent.dtype
     int_axes = [a for a in axes if a[1].kind == "int"]
@@ -1263,10 +1271,6 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
                 spark, _py_value(obj, dtype), dtype,
                 [(rx, size, col) for col, rx, size in axes])
 
-    # ---- region spec ----
-    region = ("axis", [(col, assign_plans.axis_region_spec(rx))
-                       for col, rx, _size in axes])
-
     # ---- mask: translate coords for subassign / band assigns ----
     band_vector_mask = False
     mask_t = resolve_mask(updater.mask)
@@ -1306,11 +1310,8 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
     if band_vector_mask:
         scope = "region"
 
-    merged = merge_into(parent.df, new_df, parent._key_cols,
-                        accum=updater._accum_fn(), mask=mask_t,
-                        replace=updater.replace, region=region,
-                        mask_scope=scope)
-    parent._set_df(merged)
+    updater._merge(new_df, mask_t, [(col, rx) for col, rx, _size in axes],
+                   scope)
 
 
 # ===========================================================================

@@ -69,7 +69,7 @@ class Expr:
         df = self.build(mask_t)
         keys = ["i"] if self.kind == "vector" else ["i", "j"]
         if mask_t is not None and not self.pushdown and self.kind != "scalar":
-            df = apply_mask(df, keys, mask_t[0], mask_t[1], keep_pass=True)
+            df = apply_mask(df, keys, mask_t[0], mask_t[1])
         if out_dtype != self.dtype:
             df = df.select(*keys[: 0] if self.kind == "scalar" else keys,
                            F.col("v").cast(out_dtype.spark_type).alias("v")) \
@@ -142,6 +142,15 @@ class Updater:
 
         return fn
 
+    def _merge(self, new_df, mask_t, region=None, mask_scope="target"):
+        """parent(mask, accum, replace)[region] << new_df, with the mask
+        already resolved to target coordinates (plans/merge.py)."""
+        parent = self.parent
+        parent._set_df(merge_into(parent.df, new_df, parent._key_cols,
+                                  accum=self._accum_fn(), mask=mask_t,
+                                  replace=self.replace, region=region,
+                                  mask_scope=mask_scope))
+
     def update(self, rhs):
         from . import core
 
@@ -191,10 +200,7 @@ class Updater:
             keys = parent._key_cols
             new_df = new_df.select(*keys,
                                    F.col("v").cast(parent.dtype.spark_type).alias("v"))
-        merged = merge_into(parent.df, new_df, parent._key_cols,
-                            accum=self._accum_fn(), mask=mask_t,
-                            replace=self.replace, region=None)
-        parent._set_df(merged)
+        self._merge(new_df, mask_t)
 
     def _update_scalar(self, rhs):
         from . import core

@@ -5,7 +5,7 @@ final merge expr.py:1013-1073, last-wins dedup expr.py:1463-1499
 (SURVEY.md section 2.6). The Spark shape: translate the assigned object's
 output-position coordinates to target coordinates through the (pos, idx)
 index map (broadcast join / pure arithmetic for slices), then hand the
-result to the ONE descriptor merge pipeline with a region spec.
+result to the ONE descriptor merge pipeline with the addressed region.
 
 reduce_assign (A6): the reference builds an iso-valued CSC selection
 matrix and multiplies (scatter-as-matmul, expr.py:652-776); in Spark the
@@ -39,19 +39,6 @@ def axis_scatter(df: DataFrame, pos_col: str, rx: ResolvedIndex,
     return (df.join(F.broadcast(idx), df[pos_col] == F.col("__p"))
               .select(F.col("__tgt").alias(out_col),
                       *[df[c] for c in others]))
-
-
-def axis_region_spec(rx: ResolvedIndex):
-    """Region membership spec for one axis (consumed by merge.split_region
-    'axis' kind): which target coordinates the index addresses."""
-    if rx.kind == "int":
-        v = rx.value
-        return ("pred", lambda c: c == v)
-    if rx.kind == "all":
-        return ("all", None)
-    if rx.kind == "pred":
-        return ("pred", rx.pred)
-    return ("df", rx.df.select(F.col("idx")).distinct())
 
 
 def axis_targets(rx: ResolvedIndex, spark: SparkSession, size: int,

@@ -3,13 +3,13 @@
 Every mutating op in the reference funnels through `Updater.update`
 (/root/reference/dask_grblas/expr.py:566-649) into the masked/accum merge
 at base.py:279-334, with the GrB_assign vs GxB_subassign split at
-expr.py:1036-1071. This module is the Spark analogue — ONE pipeline built
-from joins/unions that implements:
+expr.py:1036-1071. This module is the Spark analogue — ONE pass over
+the old object that implements:
 
     C(mask, accum, replace)[region] << new
 
 GraphBLAS spec semantics implemented here:
-  Z = accum ? (C_in_region UNION-merge new, combining with accum) : new
+  Z = accum ? (old UNION-merge new, combining with accum) : new
   inside region : result = Z where mask passes;
                   old kept where mask fails unless replace (then deleted)
   outside region: old kept, except GrB_assign-style replace deletes old
@@ -17,10 +17,19 @@ GraphBLAS spec semantics implemented here:
                   'target'); GxB_subassign prunes only inside the region
                   (mask_scope 'region').
 
-All presence tests are row-existence (values are never NULL by
-construction), so the whole pipeline is shuffles on the entry keys —
-no densification, no driver round-trips. At scale each step is a plain
-equi-join Catalyst can plan (broadcast when mask/index sides are small).
+The plan reads the old relation exactly once, so a chain of k updates
+grows the Catalyst plan linearly in k:
+  1. new entries failing the mask are dropped (one semi or anti join);
+  2. one filter on old keeps the entries that survive. Its membership
+     tests are correlated EXISTS subqueries on the mask keys and on a
+     list region's distinct targets, which Spark plans as semi, anti or
+     existence joins (broadcast when small, never repeating an old row);
+     an int, slice or all region is a Column predicate;
+  3. without accum the survivors and the masked new entries have
+     disjoint keys, so the result is their union and old is never
+     shuffled; with accum, one full outer join (GraphX's
+     `outerJoinVertices` shape) combines the two where both are present.
+No densification, and nothing is collected to the client.
 """
 
 from __future__ import annotations
@@ -29,6 +38,8 @@ from functools import reduce as _reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .extract import dedup_last_wins
 
 
 def _join_cond(keys, left="l", right="r") -> Column:
@@ -69,58 +80,21 @@ def check_mask_keys(mask_keys: DataFrame, keys: list[str]):
 
 
 def apply_mask(df: DataFrame, keys: list[str], mask_keys: DataFrame,
-               complement: bool, keep_pass: bool = True) -> DataFrame:
-    """Keep rows passing (keep_pass) or failing (not keep_pass) the mask."""
+               complement: bool) -> DataFrame:
+    """Keep the rows passing the mask."""
     check_mask_keys(mask_keys, keys)
-    semi = complement == (not keep_pass)  # XOR
-    how = "left_semi" if semi else "left_anti"
-    return df.join(mask_keys, on=keys, how=how)
+    return df.join(mask_keys, on=keys,
+                   how="left_anti" if complement else "left_semi")
 
 
-def split_region(old_df: DataFrame, keys: list[str], region) -> tuple[DataFrame, DataFrame]:
-    """Split old entries into (inside-region, outside-region).
-
-    region: None -> whole object; ("pred", fn) predicate on key columns;
-    ("df", keys_df) explicit key membership; ("axis", [(col, axis_spec)])
-    per-axis membership where axis_spec is ("pred", fn(Column)->Column),
-    ("df", one-column DataFrame named `col`) or ("all", None).
-    """
-    if region is None:
-        return old_df, old_df.limit(0)
-    kind, spec = region
-    if kind == "pred":
-        pred = spec(old_df)
-        return old_df.filter(pred), old_df.filter(~pred)
-    if kind == "df":
-        return (old_df.join(spec, on=keys, how="left_semi"),
-                old_df.join(spec, on=keys, how="left_anti"))
-    if kind == "axis":
-        inside = old_df
-        all_pred = True
-        pred_acc = F.lit(True)
-        for col, (akind, aspec) in spec:
-            if akind == "all":
-                continue
-            if akind == "pred":
-                pred_acc = pred_acc & aspec(F.col(col))
-            else:
-                all_pred = False
-        if all_pred:
-            return old_df.filter(pred_acc), old_df.filter(~pred_acc)
-        for col, (akind, aspec) in spec:
-            if akind == "all":
-                continue
-            if akind == "pred":
-                inside = inside.filter(aspec(F.col(col)))
-            else:  # df membership for this axis
-                adf = aspec
-                if adf.columns != [col]:
-                    adf = adf.select(F.col(adf.columns[0]).alias(col))
-                inside = inside.join(F.broadcast(adf.distinct()), on=col,
-                                     how="left_semi")
-        outside = old_df.join(inside.select(*keys), on=keys, how="left_anti")
-        return inside, outside
-    raise ValueError(f"unknown region kind {kind!r}")
+def _exists(key_set: DataFrame, keys: list[str]) -> Column:
+    """Is the `__old` row's key in `key_set`, as a correlated EXISTS.
+    Spark plans it as a semi, anti or existence join, none of which
+    repeats an outer row, so a key set with repeated keys is fine."""
+    ks = key_set.alias("__ks")
+    return ks.where(_reduce(lambda a, b: a & b,
+                            [F.col(f"__ks.{k}") == F.col(f"__old.{k}").outer()
+                             for k in keys])).exists()
 
 
 def merge_into(old_df: DataFrame, new_df: DataFrame, keys: list[str], *,
@@ -128,32 +102,47 @@ def merge_into(old_df: DataFrame, new_df: DataFrame, keys: list[str], *,
                region=None, mask_scope: str = "target") -> DataFrame:
     """The descriptor merge (see module docstring).
 
+    new_df must lie inside the region (the assign paths build it there).
     accum: callable (old_col, new_col) -> Column, already dtype-typed.
     mask : (mask_keys_df, complement) in TARGET coordinates, or None.
-    region: see split_region. mask_scope: 'target' (GrB_assign / whole-
-    object update) or 'region' (GxB_subassign).
+    region: None (whole object) or [(key_col, ResolvedIndex)], one per
+    restricted axis. mask_scope: 'target' (GrB_assign / whole-object
+    update) or 'region' (GxB_subassign).
     """
-    old_in, old_out = split_region(old_df, keys, region)
-
-    if accum is not None:
-        z = union_merge(old_in, new_df, keys, accum)
-    else:
-        z = new_df
-
     if mask is not None:
-        mask_keys, complement = mask
-        inside = apply_mask(z, keys, mask_keys, complement, keep_pass=True)
-        if not replace:
-            kept_old = apply_mask(old_in, keys, mask_keys, complement, keep_pass=False)
-            inside = inside.unionByName(kept_old)
+        # a new entry failing the mask never wins, accum or not
+        new_df = apply_mask(new_df, keys, *mask)
+    if region is None and accum is None and (mask is None or replace):
+        # nothing of the old object survives: no need to read it
+        return new_df
+
+    inside = F.lit(True)
+    for col, rx in region or []:
+        if rx.kind == "int":
+            inside = inside & (F.col(col) == rx.value)
+        elif rx.kind == "df":
+            # the distinct targets, spelled like the last-wins dedup of
+            # the scatter so the two share one exchange
+            ids = dedup_last_wins(rx.df).select(F.col("idx").alias(col))
+            inside = inside & _exists(F.broadcast(ids), [col])
+        else:  # 'all' / 'pred'
+            inside = inside & rx.pred(F.col(col))
+    passes = F.lit(True)
+    if mask is not None:
+        passes = _exists(mask[0], keys)
+        if mask[1]:
+            passes = ~passes
+
+    # the old entries that stay: without accum, not where Z is taken; with
+    # replace, not where the region fails the mask, and at GrB_assign
+    # scope not where the mask fails anywhere
+    if replace and mask_scope == "target":
+        keep = passes & ~inside if accum is None else passes
+    elif replace:
+        keep = ~inside if accum is None else ~inside | passes
     else:
-        inside = z
-
-    outside = old_out
-    if region is not None and replace and mask is not None and mask_scope == "target":
-        mask_keys, complement = mask
-        outside = apply_mask(outside, keys, mask_keys, complement, keep_pass=True)
-
-    if region is None:
-        return inside
-    return inside.unionByName(outside)
+        keep = ~(inside & passes) if accum is None else None
+    old = old_df if keep is None else old_df.alias("__old").filter(keep)
+    if accum is None:
+        return new_df.select(*keys, "v").unionByName(old.select(*keys, "v"))
+    return union_merge(old, new_df, keys, accum)

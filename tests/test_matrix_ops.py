@@ -168,3 +168,11 @@ def test_mxm_positional_semiring(A):
             if j == j2:
                 exp[(i, k)] = min(exp.get((i, k), 10**9), k)
     assert got.to_dict() == exp
+
+
+def test_contains_rejects_non_scalar_index(A):
+    # entry (3, 0) exists, so a silent False would be a wrong answer
+    assert (3, 0) in A and (0, 0) not in A
+    for index in (([3], 0), (slice(None), 0)):
+        with pytest.raises(TypeError, match="single elements"):
+            index in A

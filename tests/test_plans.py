@@ -344,6 +344,66 @@ def test_tpch_promo_broadcasts_part(spark):
         or "GreaterThanOrEqual(l_shipdate" in plan, plan
 
 
+def test_descriptor_merge_reads_old_object_once(spark, tmp_path,
+                                                monkeypatch):
+    """`w[idx](mask, accum) << obj` is one keyed pass over the old object:
+    no Union in the plan, one scan of the old relation, and a chain of
+    updates grows the logical plan linearly (with the lineage cut
+    lifted), not geometrically."""
+    from dask_grblas_spark import binary
+    from dask_grblas_spark.core import BaseType, plan_leaves
+    from dask_grblas_spark.sources import io
+
+    monkeypatch.setattr(BaseType, "_MAX_PLAN_LEAVES", 1 << 30)
+    path = str(tmp_path / "w.parquet")
+    spark.createDataFrame([(0, 1.0), (2, 2.0), (5, 3.0)],
+                          "i long, v double").write.parquet(path)
+    w = io.vector_from_parquet(path, size=8)
+    m = gb.Vector.from_values([0, 1], [True, True], size=3)
+    obj = gb.Vector.from_values([0, 1, 2], [1.0, 1.0, 1.0], size=3)
+
+    w[[0, 2, 4]](m.S, accum=binary.plus) << obj
+    plan = _optimized(w.df)
+    assert "Union" not in plan, plan
+    assert plan.count(" parquet") == 1, plan
+
+    one = plan_leaves(w.df)
+    for _ in range(4):
+        w[[0, 2, 4]](m.S, accum=binary.plus) << obj
+    assert plan_leaves(w.df) <= 5 * one, (one, plan_leaves(w.df))
+    # mask positions {0, 1} -> targets {0, 2}; target 4 fails the mask
+    assert w.to_dict() == {0: 6.0, 2: 7.0, 5: 3.0}
+
+
+def test_unaccumulated_update_does_not_shuffle_old(spark, tmp_path):
+    """Without accum the masked new entries and the surviving old ones
+    have disjoint keys, so the merge is their union and the old object
+    is only filtered: a row assign adds no exchange, and a masked update
+    joins old with the broadcast mask, never shuffling it."""
+    from dask_grblas_spark.sources import io
+
+    apath, wpath = str(tmp_path / "A.parquet"), str(tmp_path / "w.parquet")
+    spark.createDataFrame([(0, 0, 1.0), (1, 2, 2.0), (3, 1, 3.0)],
+                          "i long, j long, v double").write.parquet(apath)
+    spark.createDataFrame([(0, 1.0), (2, 2.0), (5, 3.0)],
+                          "i long, v double").write.parquet(wpath)
+
+    A = io.matrix_from_parquet(apath, nrows=4, ncols=4)
+    A[1, :] << gb.Vector.from_values([0, 3], [5.0, 6.0], size=4)
+    plan = _physical(A.df)
+    assert "Exchange" not in plan, plan
+    assert A.to_dict() == {(0, 0): 1.0, (1, 0): 5.0, (1, 3): 6.0,
+                           (3, 1): 3.0}
+
+    w = io.vector_from_parquet(wpath, size=8)
+    m = gb.Vector.from_values([0, 1, 4], [True, True, True], size=8)
+    w(m.S) << gb.Vector.from_values([0, 1, 2, 4], [1.0, 1.0, 1.0, 1.0],
+                                    size=8)
+    plan = _physical(w.df)
+    assert "hashpartitioning" not in plan, plan
+    assert w.to_dict() == {0: 1.0, 1: 1.0, 2: 2.0, 4: 1.0, 5: 3.0}
+
+
 def test_merge_into_rewrites_only_touched_partitions(spark, tmp_path):
     """merge_into_partitioned must leave untouched partitions'
     FILES physically intact (same paths + mtimes) — proof the write

@@ -16,7 +16,7 @@ from __future__ import annotations
 import operator
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 import dask_grblas_spark as gb
@@ -146,6 +146,69 @@ class TestExtractAssignProperties:
             if p in o:
                 want[t] = o[p]
         assert w.to_dict() == want
+
+    @pytest.mark.parametrize("subassign", [True, False],
+                             ids=["subassign", "assign"])
+    @given(old=vec, obj=vec, mask=vec,
+           idx=st.lists(st.integers(0, 9), min_size=1, max_size=6),
+           use_mask=st.booleans(), value_mask=st.booleans(),
+           repeat_mask=st.booleans(), complement=st.booleans(),
+           use_accum=st.booleans(), replace=st.booleans())
+    # a new entry failing the mask must not win, accum or not
+    @example(old={0: 1, 2: 5}, obj={0: 3, 1: 4, 2: 6}, mask={0: 1},
+             idx=[2, 0, 2], use_mask=True, value_mask=False,
+             repeat_mask=False, complement=False, use_accum=True,
+             replace=False)
+    # a mask whose keys repeat, on old entries in and out of the region
+    @example(old={0: 1, 2: 5, 4: 2}, obj={0: 3, 1: 4}, mask={0: 1, 2: 1, 4: 1},
+             idx=[0, 2], use_mask=True, value_mask=False,
+             repeat_mask=True, complement=False, use_accum=True,
+             replace=False)
+    @settings(**SETTINGS)
+    def test_assign_full_descriptor_space(self, subassign, old, obj, mask,
+                                          idx, use_mask, value_mask,
+                                          repeat_mask, complement,
+                                          use_accum, replace):
+        """Region x mask x accum x replace at random, duplicate indices
+        included. GxB_subassign `w[idx](desc) << obj` takes the mask in
+        region (position) coordinates and prunes only the region;
+        GrB_assign `w(desc)[idx] << obj` takes it in target coordinates
+        and its replace prunes the whole target. A mask wrapping a
+        relation whose keys repeat (`from_dataframe` over a multigraph
+        edge list) must not repeat output entries."""
+        obj = {p % len(idx): x for p, x in obj.items()}
+        replace = replace and use_mask
+        kw = {"accum": binary.plus if use_accum else None,
+              "replace": replace}
+        mask_keys = None
+        if use_mask:
+            if subassign:
+                mask = {p % len(idx): x for p, x in mask.items()}
+            m = _v(mask, size=len(idx) if subassign else 10)
+            if repeat_mask:
+                m = gb.Vector.from_dataframe(m.df.unionByName(m.df),
+                                             size=m.size)
+            mk = gb.mask.ValueMask(m) if value_mask \
+                else gb.mask.StructuralMask(m)
+            kw["mask"] = ~mk if complement else mk
+            mask_keys = model.mask_keys_of(mask, value_mask)
+            if subassign:
+                mask_keys = {idx[p] for p in mask_keys}
+        w = _v(old)
+        if subassign:
+            w[idx](**kw) << _v(obj, size=len(idx))
+        else:
+            w(**kw)[idx] << _v(obj, size=len(idx))
+        # duplicate targets: the last position wins, even where the
+        # object has no entry
+        last = {t: p for p, t in enumerate(idx)}
+        new = {t: obj[p] for t, p in last.items() if p in obj}
+        merge = model.subassign_merge if subassign else model.merge
+        want = merge(old, new, accum=operator.add if use_accum else None,
+                     mask_keys=mask_keys, complement=complement,
+                     replace=replace, region=set(idx))
+        assert w.to_dict() == want
+        assert w.df.count() == len(want)
 
 
 @pytest.mark.usefixtures("spark")

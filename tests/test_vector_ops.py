@@ -148,3 +148,11 @@ def test_infix_matmul(v, A):
     exp = model.vxm(V_DATA, dict(), lambda a, b: a + b, lambda a, b: a * b)
     # A fixture passed separately below; just check type here
     assert isinstance(got, gb.GrVector)
+
+
+def test_contains_rejects_non_scalar_index(v):
+    # entries 1 and 2 exist, so a silent False would be a wrong answer
+    assert 1 in v and 3 not in v
+    for index in ([1, 2], slice(0, 3)):
+        with pytest.raises(TypeError, match="single elements"):
+            index in v
