@@ -18,8 +18,11 @@ them are then skipped rather than forcing an eager aggregation.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce as _reduce
+
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -27,7 +30,7 @@ from .dtypes import (BOOL, FP64, INT64, GbType, from_storage,
                      infer_from_values, lit_storage, lookup_dtype, to_storage)
 from .exceptions import (DimensionMismatch, EmptyObject, IndexOutOfBound,
                          OutputNotEmpty)
-from .expr import (AmbiguousAssignOrExtract, Expr, Updater,
+from .expr import (AmbiguousAssignOrExtract, Assigner, Expr, Updater,
                    _normalize_call_args, _scalar_merge)
 from .mask import StructuralMask, ValueMask, resolve_mask
 from .operators import (Aggregator, BinaryOp, Monoid, Semiring, binary,
@@ -58,7 +61,8 @@ def get_session() -> SparkSession:
         return s
     import os
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     return (SparkSession.builder
             .master(f"local[{cpus}]")
             .appName("dask_grblas_spark")
@@ -71,27 +75,19 @@ def get_session() -> SparkSession:
             .getOrCreate())
 
 
-def _vector_schema(dtype: GbType) -> T.StructType:
-    return T.StructType([T.StructField("i", T.LongType(), False),
-                         T.StructField("v", dtype.spark_type, False)])
-
-
-def _matrix_schema(dtype: GbType) -> T.StructType:
-    return T.StructType([T.StructField("i", T.LongType(), False),
-                         T.StructField("j", T.LongType(), False),
-                         T.StructField("v", dtype.spark_type, False)])
-
-
-def _scalar_schema(dtype: GbType) -> T.StructType:
-    return T.StructType([T.StructField("v", dtype.spark_type, True)])
+def _schema(keys: list[str], dtype: GbType) -> T.StructType:
+    """(keys..., v): a keyed entry's value is never null, an empty
+    scalar's is."""
+    return T.StructType([T.StructField(k, T.LongType(), False) for k in keys]
+                        + [T.StructField("v", dtype.spark_type, not keys)])
 
 
 def _scalar_df_from_value(value, dtype: GbType) -> DataFrame:
     spark = get_session()
     if value is None:
-        return spark.createDataFrame([], _scalar_schema(dtype))
+        return spark.createDataFrame([], _schema([], dtype))
     return spark.createDataFrame([(to_storage(value, dtype),)],
-                                 _scalar_schema(dtype))
+                                 _schema([], dtype))
 
 
 def _dup_agg(dup_op, col, dtype: GbType):
@@ -125,6 +121,8 @@ class BaseType:
 
     kind: str = ""
     _key_cols: list[str] = []
+    # the dimension attributes, one per key column
+    _dims: tuple[str, ...] = ()
 
     def __init__(self):
         self._df: DataFrame = None
@@ -166,16 +164,18 @@ class BaseType:
 
     @property
     def shape(self):
-        raise NotImplementedError
+        return tuple(getattr(self, d) for d in self._dims)
+
+    def _set_shape(self, shape):
+        for dim, n in zip(self._dims, shape):
+            setattr(self, dim, n)
+
+    def _rebuild(self, df, dtype, name=None):
+        return _BY_RANK[len(self._dims)](df, dtype, *self.shape, name=name)
 
     def _as_expr(self) -> Expr:
         df = self._df  # snapshot: wrapper may be rebound later
-        meta = {}
-        if self.kind == "vector":
-            meta = {"size": self.size}
-        elif self.kind == "matrix":
-            meta = {"nrows": self.nrows, "ncols": self.ncols}
-        return Expr(self.kind, self.dtype, lambda mask: df, **meta)
+        return _out_expr(self.shape, self.dtype, lambda mask: df)
 
     # -- descriptor entry point --------------------------------------------
     def __call__(self, *args, mask=None, accum=None, replace=False,
@@ -328,6 +328,190 @@ class BaseType:
         out = j.agg(F.coalesce(F.bool_and(ok), F.lit(True)).alias("v"))
         return GrScalar(out, BOOL)
 
+    # -- construction bodies: the subclasses keep the signatures -------------
+    @classmethod
+    def _empty(cls, dtype, shape, name):
+        dt = lookup_dtype(dtype)
+        df = get_session().createDataFrame([], _schema(cls._key_cols, dt))
+        return cls(df, dt, *shape, name=name)
+
+    @classmethod
+    def _coo_df(cls, coords, values, shape, trust_shape, dup_op, dtype):
+        """The body of from_values and build: one coordinate array per key
+        column. A None dimension is inferred from its coordinates
+        (reference vector.py:120-126, matrix.py:141-150); a known one is
+        bounds-checked unless trusted. Returns (df, dtype, shape)."""
+        words, inputs, source = cls._coo_names
+        coords = [np.asarray(c, dtype="int64") for c in coords]
+        values = np.asarray(values)
+        if values.ndim == 0:
+            values = np.broadcast_to(values, coords[0].shape)
+        if any(c.shape != values.shape for c in coords):
+            raise ValueError(f"{inputs} must have the same length")
+        dt = lookup_dtype(dtype) if dtype is not None else infer_from_values(values)
+        shape = list(shape)
+        for k, (c, dim, word) in enumerate(zip(coords, cls._dims, words)):
+            if shape[k] is None:
+                if c.size == 0:
+                    raise ValueError(
+                        f"No {dim} given and no {source} to infer from")
+                shape[k] = int(c.max()) + 1
+            elif not trust_shape and c.size and int(c.max()) >= shape[k]:
+                raise IndexOutOfBound(
+                    f"{word} {int(c.max())} >= {dim} {shape[k]}")
+        rows = [(*map(int, key), to_storage(v, dt))
+                for *key, v in zip(*coords, values)]
+        df = get_session().createDataFrame(rows, _schema(cls._key_cols, dt))
+        if dup_op is not None:
+            df = df.groupBy(*cls._key_cols).agg(
+                _dup_agg(dup_op, F.col("v"), dt).cast(dt.spark_type).alias("v"))
+        return df, dt, shape
+
+    @classmethod
+    def _from_df(cls, df, cols, value_col, shape, dtype, name):
+        dt = lookup_dtype(dtype) if dtype is not None \
+            else lookup_dtype(df.schema[value_col].dataType)
+        out = df.select(*[F.col(c).cast("bigint").alias(k)
+                          for c, k in zip(cols, cls._key_cols)],
+                        F.col(value_col).cast(dt.spark_type).alias("v"))
+        return cls(out, dt, *shape, name=name)
+
+    def _build(self, coords, values, shape, dup_op, clear):
+        """Populate a must-be-empty object (reference vector.py:448-504)."""
+        if not clear and self.nvals > 0:
+            raise OutputNotEmpty(f"{self.kind} must be empty before build()")
+        shape = [n if n is not None else cur for n, cur in zip(shape, self.shape)]
+        df, _, _ = self._coo_df(coords, values, shape, False, dup_op,
+                                self.dtype)
+        self._set_shape(shape)
+        self._set_df(df)
+
+    def _resize(self, shape):
+        """Grow = metadata-only; shrink drops out-of-range entries
+        (reference vector.py:236-270). An unknown current dimension (None)
+        must filter too: entries beyond the new bound may exist."""
+        cut = [F.col(k) < n for k, old, n in zip(self._key_cols, self.shape, shape)
+               if old is None or n < old]
+        if cut:
+            self._set_df(self._df.filter(_reduce(operator.and_, cut)))
+        self._set_shape(shape)
+
+    # -- element-wise (E1-E3) -----------------------------------------------
+    def ewise_add(self, other, op=None, *, require_monoid=True) -> Expr:
+        other = _as_kind(other, self.kind)
+        _check_same_shape(self, other)
+        op = _resolve_binary(op, default=monoid.plus)
+        op = op.binaryop if isinstance(op, Monoid) else op
+        out_dt = op.out_dtype(self.dtype, other.dtype)
+        a_df, b_df, keys = self._df, other._df, self._key_cols
+        a_dt, b_dt = self.dtype, other.dtype
+        build = lambda mask: ewise_plans.ewise_add(a_df, b_df, keys, op, out_dt,  # noqa: E731
+                                                   a_dt, b_dt)
+        return _out_expr(self.shape, out_dt, build)
+
+    def ewise_mult(self, other, op=None) -> Expr:
+        other = _as_kind(other, self.kind)
+        _check_same_shape(self, other)
+        op = _resolve_binary(op, default=binary.times)
+        op = op.binaryop if isinstance(op, Monoid) else op
+        out_dt = op.out_dtype(self.dtype, other.dtype)
+        a_df, b_df, keys = self._df, other._df, self._key_cols
+        build = lambda mask: ewise_plans.ewise_mult(a_df, b_df, keys, op, out_dt)  # noqa: E731
+        return _out_expr(self.shape, out_dt, build)
+
+    def _reduce_scalar(self, op=None) -> Expr:
+        op = _resolve_reduce_op(op, self.dtype)
+        out_dt = reduce_plans.out_dtype_of(op, self.dtype)
+        df, dtype = self._df, self.dtype
+        build = lambda mask: reduce_plans.reduce_scalar(df, op, dtype, ["i"])  # noqa: E731
+        return Expr("scalar", out_dt, build)
+
+    # -- extract / assign (X1-X5, A3-A7) --------------------------------------
+    def _resolve_indices(self, index):
+        if len(self._key_cols) == 1:
+            index = (index,)
+        elif not isinstance(index, tuple) or len(index) != len(self._key_cols):
+            raise TypeError("Matrix indexing requires A[rows, cols]")
+        spark = get_session()
+        return [extract_plans.resolve_index(ix, n, spark)
+                for ix, n in zip(index, self.shape)]
+
+    def _extract_expr(self, resolved, input_mask=None) -> Expr:
+        """Filter the int axes, gather the others; the result has one axis
+        per gathered one, named i then j: a scalar, vector or matrix."""
+        axes = list(zip(self._key_cols, resolved))
+        ints = [(k, rx) for k, rx in axes if rx.kind == "int"]
+        gathered = [(k, rx) for k, rx in axes if rx.kind != "int"]
+        out_keys = GrMatrix._key_cols[:len(gathered)]
+        df = self._df
+        mask_t = resolve_mask(input_mask)
+        if mask_t is not None:  # X3: filter the SOURCE before extraction
+            mk, complement = mask_t
+            keys = self._key_cols
+            if len(mk.columns) < len(keys):
+                # a Vector input_mask on a row/col extract (reference
+                # expr.py:1296-1351) applies to the axis that is kept
+                if len(gathered) != 1:
+                    raise TypeError("Mask object must be type Matrix")
+                keys = [gathered[0][0]]
+                mk = mk.withColumnRenamed("i", keys[0])
+            df = apply_mask(df, keys, mk, complement)
+        if ints:
+            df = df.filter(_at(ints)).drop(*[k for k, _ in ints])
+        for (k, rx), out in zip(gathered, out_keys):
+            if k != out:
+                df = df.withColumnRenamed(k, out)
+            df = extract_plans.axis_gather(df, out, rx, out)
+        out = df.select(*out_keys, "v")
+        return _out_expr(tuple(rx.out_size for _, rx in gathered), self.dtype,
+                         lambda mask: out)
+
+    def __getitem__(self, index):
+        return AmbiguousAssignOrExtract(self, index)
+
+    def __setitem__(self, index, obj):
+        Assigner(Updater(self), self._resolve_indices(index),
+                 subassign=False).update(obj)
+
+    def _point(self, index, what) -> Column:
+        resolved = self._resolve_indices(index)
+        if any(rx.kind != "int" for rx in resolved):
+            raise TypeError(f"{what} only supports single elements")
+        return _at(zip(self._key_cols, resolved))
+
+    def __delitem__(self, index):
+        self._set_df(self._df.filter(~self._point(index, "del")))
+
+    def __contains__(self, index):
+        pred = self._point(index, "membership")
+        return self._df.filter(pred).limit(1).count() > 0
+
+    def __iter__(self):
+        keys = self._key_cols
+        for row in self._df.select(*keys).sort(*keys).toLocalIterator():
+            yield row[0] if len(keys) == 1 else tuple(row)
+
+    def _assign(self, resolved, obj, updater: Updater, subassign: bool):
+        _generic_assign(self, list(zip(self._key_cols, resolved, self.shape)),
+                        obj, updater, subassign)
+
+    # -- export (C17) ---------------------------------------------------------
+    def to_values(self, dtype=None):
+        keys = self._key_cols
+        rows = self._df.sort(*keys).collect()
+        dt = lookup_dtype(dtype) if dtype is not None else self.dtype
+        n = len(rows)
+        coords = [np.fromiter((r[k] for r in rows), dtype="int64", count=n)
+                  for k in keys]
+        vals = np.fromiter((from_storage(r["v"], self.dtype) for r in rows),
+                           dtype=dt.np_name, count=n)
+        return (*coords, vals)
+
+    def to_dict(self) -> dict:
+        keys = self._key_cols
+        return {(r[keys[0]] if len(keys) == 1 else tuple(r[k] for k in keys)):
+                from_storage(r["v"], self.dtype) for r in self._df.collect()}
+
     def __repr__(self):  # pragma: no cover
         nm = f" {self.name!r}" if self.name else ""
         return f"<{type(self).__name__}{nm} {self.dtype.name} shape={self.shape}>"
@@ -342,6 +526,8 @@ class GrScalar(BaseType):
 
     kind = "scalar"
     _key_cols: list[str] = []
+    # a scalar has no keys to index, test or iterate
+    __getitem__ = __setitem__ = __delitem__ = __contains__ = __iter__ = None
 
     def __init__(self, df: DataFrame, dtype: GbType, name=None):
         super().__init__()
@@ -351,8 +537,7 @@ class GrScalar(BaseType):
 
     @classmethod
     def new(cls, dtype, *, name=None) -> "GrScalar":
-        dt = lookup_dtype(dtype)
-        return cls(_scalar_df_from_value(None, dt), dt, name=name)
+        return cls._empty(dtype, (), name)
 
     @classmethod
     def from_value(cls, value, dtype=None, *, name=None) -> "GrScalar":
@@ -364,10 +549,6 @@ class GrScalar(BaseType):
         else:
             dt = lookup_dtype(dtype)
         return cls(_scalar_df_from_value(value, dt), dt, name=name)
-
-    @property
-    def shape(self):
-        return ()
 
     @property
     def value(self):
@@ -411,9 +592,6 @@ class GrScalar(BaseType):
     @property
     def nvals(self) -> int:
         return 0 if self.is_empty else 1
-
-    def _rebuild(self, df, dtype, name=None):
-        return GrScalar(df, dtype, name=name)
 
     def __bool__(self):
         v = self.value
@@ -460,6 +638,9 @@ class GrVector(BaseType):
 
     kind = "vector"
     _key_cols = ["i"]
+    _dims = ("size",)
+    # from_values wording: coordinate names, the inputs, what sizes come from
+    _coo_names = (("index",), "indices and values", "indices")
 
     def __init__(self, df: DataFrame, dtype: GbType, size, name=None):
         super().__init__()
@@ -471,52 +652,21 @@ class GrVector(BaseType):
     # -- construction (C1, C4, C6) ------------------------------------------
     @classmethod
     def new(cls, dtype, size=0, *, name=None, **_ignored) -> "GrVector":
-        dt = lookup_dtype(dtype)
-        spark = get_session()
-        return cls(spark.createDataFrame([], _vector_schema(dt)), dt, size,
-                   name=name)
+        return cls._empty(dtype, (size,), name)
 
     @classmethod
     def from_values(cls, indices, values, size=None, *, trust_size=False,
                     dup_op=None, dtype=None, name=None, **_ignored):
-        indices = np.asarray(indices, dtype="int64")
-        values = np.asarray(values)
-        if values.ndim == 0:
-            values = np.broadcast_to(values, indices.shape)
-        if indices.shape != values.shape:
-            raise ValueError("indices and values must have the same length")
-        dt = lookup_dtype(dtype) if dtype is not None else infer_from_values(values)
-        if size is None:
-            if indices.size == 0:
-                raise ValueError("No size given and no indices to infer from")
-            size = int(indices.max()) + 1  # reference vector.py:120-126
-        elif not trust_size and indices.size and int(indices.max()) >= size:
-            raise IndexOutOfBound(f"index {int(indices.max())} >= size {size}")
-        spark = get_session()
-        rows = [(int(i), _py_value(v, dt)) for i, v in zip(indices, values)]
-        df = spark.createDataFrame(rows, _vector_schema(dt))
-        if dup_op is not None:
-            df = df.groupBy("i").agg(
-                _dup_agg(dup_op, F.col("v"), dt).cast(dt.spark_type).alias("v"))
-        return cls(df, dt, size, name=name)
+        df, dt, shape = cls._coo_df([indices], values, [size], trust_size,
+                                    dup_op, dtype)
+        return cls(df, dt, *shape, name=name)
 
     @classmethod
     def from_dataframe(cls, df: DataFrame, size=None, *, index_col="i",
                        value_col="v", dtype=None, name=None) -> "GrVector":
         """Wrap an existing DataFrame as a sparse vector (the scale path —
         parquet/SQL results become vectors with zero data movement)."""
-        dt = lookup_dtype(dtype) if dtype is not None \
-            else lookup_dtype(df.schema[value_col].dataType)
-        out = df.select(F.col(index_col).cast("bigint").alias("i"),
-                        F.col(value_col).cast(dt.spark_type).alias("v"))
-        return cls(out, dt, size, name=name)
-
-    def _rebuild(self, df, dtype, name=None):
-        return GrVector(df, dtype, self.size, name=name)
-
-    @property
-    def shape(self):
-        return (self.size,)
+        return cls._from_df(df, [index_col], value_col, (size,), dtype, name)
 
     @property
     def ss(self):
@@ -527,88 +677,32 @@ class GrVector(BaseType):
 
     def build(self, indices, values, *, dup_op=None, clear=False, size=None,
               **_ignored):
-        """Populate a must-be-empty vector (reference vector.py:448-504)."""
-        if not clear and self.nvals > 0:
-            raise OutputNotEmpty("vector must be empty before build()")
-        new = GrVector.from_values(indices, values,
-                                   size=size if size is not None else self.size,
-                                   dup_op=dup_op, dtype=self.dtype)
-        if size is not None:
-            self.size = size
-        self._set_df(new.df)
+        self._build([indices], values, [size], dup_op, clear)
 
     def resize(self, size):
-        """Grow = metadata-only; shrink drops out-of-range entries
-        (reference vector.py:236-270). Unknown current size (None) must
-        filter too — entries beyond the new bound may exist."""
-        if self.size is None or size < self.size:
-            self._set_df(self._df.filter(F.col("i") < size))
-        self.size = size
-
-    # -- element-wise (E1-E3) -------------------------------------------------
-    def ewise_add(self, other, op=None, *, require_monoid=True) -> Expr:
-        other = _as_vector(other)
-        _check_same_shape(self, other)
-        op = _resolve_binary(op, default=monoid.plus)
-        if require_monoid and not isinstance(op, Monoid) \
-                and op.name not in monoid._registry:
-            # the reference defaults to requiring a monoid for ewise_add
-            pass  # we allow any binary op, like grblas with require_monoid=False
-        op = op.binaryop if isinstance(op, Monoid) else op
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        a_df, b_df = self._df, other._df
-        a_dt, b_dt = self.dtype, other.dtype
-        build = lambda mask: ewise_plans.ewise_add(a_df, b_df, ["i"], op, out_dt,  # noqa: E731
-                                                   a_dt, b_dt)
-        return Expr("vector", out_dt, build, size=self.size)
-
-    def ewise_mult(self, other, op=None) -> Expr:
-        other = _as_vector(other)
-        _check_same_shape(self, other)
-        op = _resolve_binary(op, default=binary.times)
-        op = op.binaryop if isinstance(op, Monoid) else op
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        a_df, b_df = self._df, other._df
-        build = lambda mask: ewise_plans.ewise_mult(a_df, b_df, ["i"], op, out_dt)  # noqa: E731
-        return Expr("vector", out_dt, build, size=self.size)
+        self._resize((size,))
 
     def apply(self, op, right=None, *, left=None) -> Expr:
         return _apply(self, op, right, left)
 
     # -- matmul (M3) -----------------------------------------------------------
     def vxm(self, other, op=None) -> Expr:
-        if isinstance(other, TransposedMatrix):
-            pass  # df view already transposed
         if not isinstance(other, GrMatrix):
             raise TypeError("vxm requires a Matrix")
-        op = _resolve_semiring(op)
-        if None not in (self.size, other.nrows) and self.size != other.nrows:
-            raise DimensionMismatch(
-                f"vxm: vector size {self.size} != matrix nrows {other.nrows}")
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        v_df, a_df = self._df, other.df
-        bc = _broadcastable(self)
-        build = lambda mask: matmul_plans.vxm(v_df, a_df, op, self.dtype,  # noqa: E731
-                                              other.dtype, mask=mask,
-                                              broadcast_v=bc)
-        return Expr("vector", out_dt, build, size=other.ncols, pushdown=True)
+        return _matmul(self, other, op,
+                       "vxm: vector size {} != matrix nrows {}")
 
     def __matmul__(self, other):
         return self.vxm(other)
 
     # -- reduce (R1) -------------------------------------------------------------
-    def reduce(self, op=None) -> Expr:
-        op = _resolve_reduce_op(op, self.dtype)
-        out_dt = reduce_plans.out_dtype_of(op, self.dtype)
-        df = self._df
-        build = lambda mask: reduce_plans.reduce_scalar(df, op, self.dtype, ["i"])  # noqa: E731
-        return Expr("scalar", out_dt, build)
+    reduce = BaseType._reduce_scalar
 
     def inner(self, other, op=None) -> Expr:
         """vector·vector inner product (reference stub vector.py:371-421 —
         implemented here)."""
         op = _resolve_semiring(op)
-        other = _as_vector(other)
+        other = _as_kind(other, "vector")
         _check_same_shape(self, other)
         mult = op.binaryop
         prod = self.ewise_mult(other, mult)
@@ -623,7 +717,7 @@ class GrVector(BaseType):
         """vector·vector outer product -> Matrix (reference stub)."""
         op = _resolve_binary(op, default=binary.times)
         op = op.binaryop if isinstance(op, Monoid) else op
-        other = _as_vector(other)
+        other = _as_kind(other, "vector")
         out_dt = op.out_dtype(self.dtype, other.dtype)
         a = self._df.alias("A")
         b = other._df.alias("B")
@@ -634,69 +728,11 @@ class GrVector(BaseType):
         build = lambda mask: df  # noqa: E731
         return Expr("matrix", out_dt, build, nrows=self.size, ncols=other.size)
 
-    # -- extract / assign (X1-X5, A3-A7) ----------------------------------------
-    def _resolve_indices(self, index):
-        spark = get_session()
-        return [extract_plans.resolve_index(index, self.size, spark)]
-
-    def _extract_expr(self, resolved, input_mask=None) -> Expr:
-        (rx,) = resolved
-        df = self._df
-        mask_t = resolve_mask(input_mask)
-        if mask_t is not None:  # X3: filter the SOURCE before extraction
-            df = apply_mask(df, ["i"], mask_t[0], mask_t[1])
-        if rx.kind == "int":
-            out = df.filter(F.col("i") == rx.value).select("v")
-            return Expr("scalar", self.dtype, lambda mask: out)
-        out = extract_plans.axis_gather(df, "i", rx, "i").select("i", "v")
-        return Expr("vector", self.dtype, lambda mask: out, size=rx.out_size)
-
-    def __getitem__(self, index):
-        return AmbiguousAssignOrExtract(self, index)
-
-    def __setitem__(self, index, obj):
-        from .expr import Assigner
-
-        Assigner(Updater(self), self._resolve_indices(index),
-                 subassign=False).update(obj)
-
-    def __delitem__(self, index):
-        rx = self._resolve_indices(index)[0]
-        if rx.kind != "int":
-            raise TypeError("del only supports single elements")
-        self._set_df(self._df.filter(F.col("i") != rx.value))
-
-    def __contains__(self, index):
-        rx = self._resolve_indices(index)[0]
-        if rx.kind != "int":
-            raise TypeError("membership only supports single elements")
-        return self._df.filter(F.col("i") == rx.value).limit(1).count() > 0
-
-    def __iter__(self):
-        for row in self._df.select("i").sort("i").toLocalIterator():
-            yield row[0]
-
-    def _assign(self, resolved, obj, updater: Updater, subassign: bool):
-        (rx,) = resolved
-        _generic_assign(self, [("i", rx, self.size)], obj, updater, subassign)
-
-    # -- export (C17) ---------------------------------------------------------
-    def to_values(self, dtype=None):
-        rows = self._df.sort("i").collect()
-        dt = lookup_dtype(dtype) if dtype is not None else self.dtype
-        idx = np.fromiter((r["i"] for r in rows), dtype="int64", count=len(rows))
-        vals = np.fromiter((from_storage(r["v"], self.dtype) for r in rows),
-                           dtype=dt.np_name, count=len(rows))
-        return idx, vals
-
-    def to_dict(self) -> dict:
-        return {r["i"]: from_storage(r["v"], self.dtype)
-                for r in self._df.collect()}
-
     # -- reshapes ---------------------------------------------------------------
     def diag(self, k: int = 0) -> "GrMatrix":
-        """Vector -> diagonal matrix (reference ss.diag, SURVEY C13)."""
-        n = self.size + abs(k)
+        """Vector -> diagonal matrix (reference ss.diag, SURVEY C13); an
+        unknown size gives unknown dims."""
+        n = None if self.size is None else self.size + abs(k)
         df = self._df.select((F.col("i") + max(0, -k)).alias("i"),
                              (F.col("i") + max(0, k)).alias("j"), "v")
         return GrMatrix(df, self.dtype, n, n)
@@ -736,6 +772,8 @@ class GrMatrix(BaseType):
 
     kind = "matrix"
     _key_cols = ["i", "j"]
+    _dims = ("nrows", "ncols")
+    _coo_names = (("row", "col"), "rows, columns, values", "values")
 
     def __init__(self, df: DataFrame, dtype: GbType, nrows, ncols, name=None):
         super().__init__()
@@ -748,43 +786,15 @@ class GrMatrix(BaseType):
     # -- construction (C2, C5, C6) -----------------------------------------
     @classmethod
     def new(cls, dtype, nrows=0, ncols=0, *, name=None, **_ignored):
-        dt = lookup_dtype(dtype)
-        spark = get_session()
-        return cls(spark.createDataFrame([], _matrix_schema(dt)), dt,
-                   nrows, ncols, name=name)
+        return cls._empty(dtype, (nrows, ncols), name)
 
     @classmethod
     def from_values(cls, rows, columns, values, nrows=None, ncols=None, *,
                     trust_shape=False, dup_op=None, dtype=None, name=None,
                     **_ignored):
-        rows = np.asarray(rows, dtype="int64")
-        columns = np.asarray(columns, dtype="int64")
-        values = np.asarray(values)
-        if values.ndim == 0:
-            values = np.broadcast_to(values, rows.shape)
-        if not (rows.shape == columns.shape == values.shape):
-            raise ValueError("rows, columns, values must have the same length")
-        dt = lookup_dtype(dtype) if dtype is not None else infer_from_values(values)
-        if nrows is None:
-            if rows.size == 0:
-                raise ValueError("No nrows given and no values to infer from")
-            nrows = int(rows.max()) + 1  # reference matrix.py:141-150
-        elif not trust_shape and rows.size and int(rows.max()) >= nrows:
-            raise IndexOutOfBound(f"row {int(rows.max())} >= nrows {nrows}")
-        if ncols is None:
-            if columns.size == 0:
-                raise ValueError("No ncols given and no values to infer from")
-            ncols = int(columns.max()) + 1
-        elif not trust_shape and columns.size and int(columns.max()) >= ncols:
-            raise IndexOutOfBound(f"col {int(columns.max())} >= ncols {ncols}")
-        spark = get_session()
-        data = [(int(r), int(c), _py_value(v, dt))
-                for r, c, v in zip(rows, columns, values)]
-        df = spark.createDataFrame(data, _matrix_schema(dt))
-        if dup_op is not None:
-            df = df.groupBy("i", "j").agg(
-                _dup_agg(dup_op, F.col("v"), dt).cast(dt.spark_type).alias("v"))
-        return cls(df, dt, nrows, ncols, name=name)
+        df, dt, shape = cls._coo_df([rows, columns], values, [nrows, ncols],
+                                    trust_shape, dup_op, dtype)
+        return cls(df, dt, *shape, name=name)
 
     @classmethod
     def from_dataframe(cls, df: DataFrame, nrows=None, ncols=None, *,
@@ -793,19 +803,8 @@ class GrMatrix(BaseType):
         """Wrap an existing DataFrame as a sparse matrix — THE ingestion
         path at scale (a parquet scan or SQL result becomes a matrix with
         zero data movement; dims may stay None/unknown)."""
-        dt = lookup_dtype(dtype) if dtype is not None \
-            else lookup_dtype(df.schema[value_col].dataType)
-        out = df.select(F.col(row_col).cast("bigint").alias("i"),
-                        F.col(col_col).cast("bigint").alias("j"),
-                        F.col(value_col).cast(dt.spark_type).alias("v"))
-        return cls(out, dt, nrows, ncols, name=name)
-
-    def _rebuild(self, df, dtype, name=None):
-        return GrMatrix(df, dtype, self.nrows, self.ncols, name=name)
-
-    @property
-    def shape(self):
-        return (self.nrows, self.ncols)
+        return cls._from_df(df, [row_col, col_col], value_col, (nrows, ncols),
+                            dtype, name)
 
     @property
     def ss(self):
@@ -814,55 +813,15 @@ class GrMatrix(BaseType):
 
     def build(self, rows, columns, values, *, dup_op=None, clear=False,
               nrows=None, ncols=None, **_ignored):
-        if not clear and self.nvals > 0:
-            raise OutputNotEmpty("matrix must be empty before build()")
-        new = GrMatrix.from_values(
-            rows, columns, values,
-            nrows=nrows if nrows is not None else self.nrows,
-            ncols=ncols if ncols is not None else self.ncols,
-            dup_op=dup_op, dtype=self.dtype)
-        if nrows is not None:
-            self.nrows = nrows
-        if ncols is not None:
-            self.ncols = ncols
-        self._set_df(new.df)
+        self._build([rows, columns], values, [nrows, ncols], dup_op, clear)
 
     def resize(self, nrows, ncols):
-        cond = F.lit(True)
-        if self.nrows is None or nrows < self.nrows:
-            cond = cond & (F.col("i") < nrows)
-        if self.ncols is None or ncols < self.ncols:
-            cond = cond & (F.col("j") < ncols)
-        self._set_df(self._df.filter(cond))
-        self.nrows, self.ncols = nrows, ncols
+        self._resize((nrows, ncols))
 
     # -- transpose (lazy view; reference matrix.py:682-754) -------------------
     @property
     def T(self) -> "TransposedMatrix":
         return TransposedMatrix(self)
-
-    # -- element-wise -----------------------------------------------------------
-    def ewise_add(self, other, op=None, *, require_monoid=True) -> Expr:
-        other = _as_matrix(other)
-        _check_same_shape(self, other)
-        op = _resolve_binary(op, default=monoid.plus)
-        op = op.binaryop if isinstance(op, Monoid) else op
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        a_df, b_df = self.df, other.df
-        a_dt, b_dt = self.dtype, other.dtype
-        build = lambda mask: ewise_plans.ewise_add(a_df, b_df, ["i", "j"], op, out_dt,  # noqa: E731
-                                                   a_dt, b_dt)
-        return Expr("matrix", out_dt, build, nrows=self.nrows, ncols=self.ncols)
-
-    def ewise_mult(self, other, op=None) -> Expr:
-        other = _as_matrix(other)
-        _check_same_shape(self, other)
-        op = _resolve_binary(op, default=binary.times)
-        op = op.binaryop if isinstance(op, Monoid) else op
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        a_df, b_df = self.df, other.df
-        build = lambda mask: ewise_plans.ewise_mult(a_df, b_df, ["i", "j"], op, out_dt)  # noqa: E731
-        return Expr("matrix", out_dt, build, nrows=self.nrows, ncols=self.ncols)
 
     def apply(self, op, right=None, *, left=None) -> Expr:
         return _apply(self, op, right, left)
@@ -871,34 +830,12 @@ class GrMatrix(BaseType):
     def mxm(self, other, op=None) -> Expr:
         if not isinstance(other, GrMatrix):
             raise TypeError("mxm requires a Matrix")
-        op = _resolve_semiring(op)
-        if None not in (self.ncols, other.nrows) and self.ncols != other.nrows:
-            raise DimensionMismatch(
-                f"mxm: A.ncols {self.ncols} != B.nrows {other.nrows}")
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        a_df, b_df = self.df, other.df
-        bc_a, bc_b = _broadcastable(self), _broadcastable(other)
-        build = lambda mask: matmul_plans.mxm(a_df, b_df, op, self.dtype,  # noqa: E731
-                                              other.dtype, mask=mask,
-                                              broadcast_a=bc_a and not bc_b,
-                                              broadcast_b=bc_b)
-        return Expr("matrix", out_dt, build, nrows=self.nrows,
-                    ncols=other.ncols, pushdown=True)
+        return _matmul(self, other, op, "mxm: A.ncols {} != B.nrows {}")
 
     def mxv(self, other, op=None) -> Expr:
         if not isinstance(other, GrVector):
             raise TypeError("mxv requires a Vector")
-        op = _resolve_semiring(op)
-        if None not in (self.ncols, other.size) and self.ncols != other.size:
-            raise DimensionMismatch(
-                f"mxv: A.ncols {self.ncols} != v.size {other.size}")
-        out_dt = op.out_dtype(self.dtype, other.dtype)
-        a_df, v_df = self.df, other.df
-        bc = _broadcastable(other)
-        build = lambda mask: matmul_plans.mxv(a_df, v_df, op, self.dtype,  # noqa: E731
-                                              other.dtype, mask=mask,
-                                              broadcast_v=bc)
-        return Expr("vector", out_dt, build, size=self.nrows, pushdown=True)
+        return _matmul(self, other, op, "mxv: A.ncols {} != v.size {}")
 
     def __matmul__(self, other):
         if isinstance(other, GrVector):
@@ -909,7 +846,7 @@ class GrMatrix(BaseType):
         """Implemented for full parity — the reference declares kronecker
         but cannot execute it (matrix.py:461-464, dispatch gap
         expr.py:278-279; SURVEY M6)."""
-        other = _as_matrix(other)
+        other = _as_kind(other, "matrix")
         op = _resolve_binary(op, default=binary.times)
         op = op.binaryop if isinstance(op, Monoid) else op
         out_dt = op.out_dtype(self.dtype, other.dtype)
@@ -938,100 +875,7 @@ class GrMatrix(BaseType):
         build = lambda mask: reduce_plans.reduce_columnwise(df, op, self.dtype)  # noqa: E731
         return Expr("vector", out_dt, build, size=self.ncols)
 
-    def reduce_scalar(self, op=None) -> Expr:
-        op = _resolve_reduce_op(op, self.dtype)
-        out_dt = reduce_plans.out_dtype_of(op, self.dtype)
-        df = self.df
-        build = lambda mask: reduce_plans.reduce_scalar(df, op, self.dtype, ["i"])  # noqa: E731
-        return Expr("scalar", out_dt, build)
-
-    # -- extract / assign ------------------------------------------------------------
-    def _resolve_indices(self, index):
-        if not isinstance(index, tuple) or len(index) != 2:
-            raise TypeError("Matrix indexing requires A[rows, cols]")
-        spark = get_session()
-        return [extract_plans.resolve_index(index[0], self.nrows, spark),
-                extract_plans.resolve_index(index[1], self.ncols, spark)]
-
-    def _extract_expr(self, resolved, input_mask=None) -> Expr:
-        rr, rc = resolved
-        df = self.df
-        mask_t = resolve_mask(input_mask)
-        if mask_t is not None:
-            mk = mask_t[0]
-            if len(mk.columns) == 1:
-                # Vector input_mask on a row/col extract (reference
-                # expr.py:1296-1351): applies to the non-dropped axis
-                axis = "j" if rr.kind == "int" else "i"
-                mk = mk.withColumnRenamed("i", axis)
-                df = apply_mask(df, [axis], mk, mask_t[1])
-            else:
-                df = apply_mask(df, ["i", "j"], mk, mask_t[1])
-        if rr.kind == "int" and rc.kind == "int":
-            out = df.filter((F.col("i") == rr.value)
-                            & (F.col("j") == rc.value)).select("v")
-            return Expr("scalar", self.dtype, lambda mask: out)
-        if rr.kind == "int":
-            out = df.filter(F.col("i") == rr.value).drop("i") \
-                    .withColumnRenamed("j", "i")
-            out = extract_plans.axis_gather(out, "i", rc, "i").select("i", "v")
-            return Expr("vector", self.dtype, lambda mask: out, size=rc.out_size)
-        if rc.kind == "int":
-            out = df.filter(F.col("j") == rc.value).drop("j")
-            out = extract_plans.axis_gather(out, "i", rr, "i").select("i", "v")
-            return Expr("vector", self.dtype, lambda mask: out, size=rr.out_size)
-        out = extract_plans.axis_gather(df, "i", rr, "i")
-        out = extract_plans.axis_gather(out, "j", rc, "j").select("i", "j", "v")
-        return Expr("matrix", self.dtype, lambda mask: out,
-                    nrows=rr.out_size, ncols=rc.out_size)
-
-    def __getitem__(self, index):
-        return AmbiguousAssignOrExtract(self, index)
-
-    def __setitem__(self, index, obj):
-        from .expr import Assigner
-
-        Assigner(Updater(self), self._resolve_indices(index),
-                 subassign=False).update(obj)
-
-    def __delitem__(self, index):
-        rr, rc = self._resolve_indices(index)
-        if rr.kind != "int" or rc.kind != "int":
-            raise TypeError("del only supports single elements")
-        self._set_df(self._df.filter(~((F.col("i") == rr.value)
-                                       & (F.col("j") == rc.value))))
-
-    def __contains__(self, index):
-        rr, rc = self._resolve_indices(index)
-        if rr.kind != "int" or rc.kind != "int":
-            raise TypeError("membership only supports single elements")
-        return (self._df.filter((F.col("i") == rr.value)
-                                & (F.col("j") == rc.value)).limit(1).count() > 0)
-
-    def __iter__(self):
-        it = self._df.select("i", "j").sort("i", "j").toLocalIterator()
-        for row in it:
-            yield (row[0], row[1])
-
-    def _assign(self, resolved, obj, updater: Updater, subassign: bool):
-        rr, rc = resolved
-        _generic_assign(self, [("i", rr, self.nrows), ("j", rc, self.ncols)],
-                        obj, updater, subassign)
-
-    # -- export -------------------------------------------------------------------
-    def to_values(self, dtype=None):
-        rows = self._df.sort("i", "j").collect()
-        dt = lookup_dtype(dtype) if dtype is not None else self.dtype
-        n = len(rows)
-        ri = np.fromiter((r["i"] for r in rows), dtype="int64", count=n)
-        ci = np.fromiter((r["j"] for r in rows), dtype="int64", count=n)
-        vals = np.fromiter((from_storage(r["v"], self.dtype) for r in rows),
-                           dtype=dt.np_name, count=n)
-        return ri, ci, vals
-
-    def to_dict(self) -> dict:
-        return {(r["i"], r["j"]): from_storage(r["v"], self.dtype)
-                for r in self._df.collect()}
+    reduce_scalar = BaseType._reduce_scalar
 
     def diag(self, k: int = 0) -> "GrVector":
         """Extract the k-th diagonal as a Vector (reference matrix.py:314-373)."""
@@ -1079,14 +923,12 @@ GrVector.to_coo = GrVector.to_values
 GrMatrix.from_coo = GrMatrix.from_values
 GrMatrix.to_coo = GrMatrix.to_values
 
+_BY_RANK = (GrScalar, GrVector, GrMatrix)
+
 
 # ===========================================================================
 # shared helpers
 # ===========================================================================
-
-def _py_value(v, dtype: GbType):
-    return to_storage(v, dtype)
-
 
 def _check_same_shape(a, b):
     for x, y in zip(a.shape, b.shape):
@@ -1094,16 +936,21 @@ def _check_same_shape(a, b):
             raise DimensionMismatch(f"shape mismatch: {a.shape} vs {b.shape}")
 
 
-def _as_vector(x) -> GrVector:
-    if isinstance(x, GrVector):
+def _as_kind(x, kind: str):
+    if isinstance(x, BaseType) and x.kind == kind:
         return x
-    raise TypeError(f"Expected Vector, got {type(x).__name__}")
+    raise TypeError(f"Expected {kind.capitalize()}, got {type(x).__name__}")
 
 
-def _as_matrix(x) -> GrMatrix:
-    if isinstance(x, GrMatrix):
-        return x
-    raise TypeError(f"Expected Matrix, got {type(x).__name__}")
+def _out_expr(shape, dtype: GbType, build, **kw) -> Expr:
+    """An Expr whose kind follows from its rank: scalar, vector, matrix."""
+    cls = _BY_RANK[len(shape)]
+    return Expr(cls.kind, dtype, build, **dict(zip(cls._dims, shape)), **kw)
+
+
+def _at(axes) -> Column:
+    """key == index on every (key, int ResolvedIndex) axis."""
+    return _reduce(operator.and_, [F.col(k) == rx.value for k, rx in axes])
 
 
 def _resolve_binary(op, default):
@@ -1156,6 +1003,25 @@ def _broadcastable(obj) -> bool:
     return False
 
 
+def _matmul(a, b, op, mismatch: str) -> Expr:
+    """a (+).(x) b over a's last axis and b's first: the body of mxm, mxv
+    and vxm. The right side is broadcast when it is small, else the left;
+    a matrix facing a vector never is (the vector is the small side of a
+    frontier step)."""
+    op = _resolve_semiring(op)
+    n, m = a.shape[-1], b.shape[0]
+    if None not in (n, m) and n != m:
+        raise DimensionMismatch(mismatch.format(n, m))
+    rank_a, rank_b = len(a._key_cols), len(b._key_cols)
+    hint_b = rank_b <= rank_a and _broadcastable(b)
+    hint_a = rank_a <= rank_b and not hint_b and _broadcastable(a)
+    out_dt = op.out_dtype(a.dtype, b.dtype)
+    args = (a.df, b.df, a._key_cols, b._key_cols, op, a.dtype, b.dtype)
+    build = lambda mask: matmul_plans.contract(  # noqa: E731
+        *args, mask=mask, broadcast_a=hint_a, broadcast_b=hint_b)
+    return _out_expr(a.shape[:-1] + b.shape[1:], out_dt, build, pushdown=True)
+
+
 def _apply(parent, op, right, left) -> Expr:
     """apply(unary) / apply(binary, right=s) / apply(binary, left=s)
     (reference vector.py:430-442, matrix.py:466-478)."""
@@ -1164,8 +1030,6 @@ def _apply(parent, op, right, left) -> Expr:
     if isinstance(op, Monoid):
         op = op.binaryop
     keys = parent._key_cols
-    meta = ({"size": parent.size} if parent.kind == "vector"
-            else {"nrows": parent.nrows, "ncols": parent.ncols})
     df = parent.df
     if right is None and left is None:
         if isinstance(op, BinaryOp):
@@ -1173,7 +1037,7 @@ def _apply(parent, op, right, left) -> Expr:
         out_dt = op.out_dtype(parent.dtype)
         build = lambda mask: ewise_plans.apply_unary(df, keys, op, out_dt,  # noqa: E731
                                                      parent.dtype)
-        return Expr(parent.kind, out_dt, build, **meta)
+        return _out_expr(parent.shape, out_dt, build)
     if not isinstance(op, BinaryOp):
         raise TypeError("unary op apply does not take left=/right=")
     if right is not None and left is not None:
@@ -1190,7 +1054,7 @@ def _apply(parent, op, right, left) -> Expr:
               else op.out_dtype(parent.dtype, s_dt))
     build = lambda mask: ewise_plans.apply_bound(df, keys, op, out_dt,  # noqa: E731
                                                  scalar_on_left=on_left, **kw)
-    return Expr(parent.kind, out_dt, build, **meta)
+    return _out_expr(parent.shape, out_dt, build)
 
 
 def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
@@ -1268,7 +1132,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
         else:
             # unmasked / complement-masked: full-fill densifies by design
             new_df = assign_plans.scalar_fill(
-                spark, _py_value(obj, dtype), dtype,
+                spark, to_storage(obj, dtype), dtype,
                 [(rx, size, col) for col, rx, size in axes])
 
     # ---- mask: translate coords for subassign / band assigns ----

@@ -67,19 +67,12 @@ class Expr:
         out_dtype = lookup_dtype(dtype) if dtype is not None else self.dtype
         mask_t = resolve_mask(mask)
         df = self.build(mask_t)
-        keys = ["i"] if self.kind == "vector" else ["i", "j"]
-        if mask_t is not None and not self.pushdown and self.kind != "scalar":
+        keys = ["i", "j"][:len(self.shape)]
+        if mask_t is not None and not self.pushdown and keys:
             df = apply_mask(df, keys, mask_t[0], mask_t[1])
         if out_dtype != self.dtype:
-            df = df.select(*keys[: 0] if self.kind == "scalar" else keys,
-                           F.col("v").cast(out_dtype.spark_type).alias("v")) \
-                if self.kind != "scalar" else \
-                df.select(F.col("v").cast(out_dtype.spark_type).alias("v"))
-        if self.kind == "scalar":
-            return core.GrScalar(df, out_dtype, name=name)
-        if self.kind == "vector":
-            return core.GrVector(df, out_dtype, self.size, name=name)
-        return core.GrMatrix(df, out_dtype, self.nrows, self.ncols, name=name)
+            df = df.select(*keys, F.col("v").cast(out_dtype.spark_type).alias("v"))
+        return core._BY_RANK[len(keys)](df, out_dtype, *self.shape, name=name)
 
     dup = new
 

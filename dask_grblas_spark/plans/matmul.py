@@ -1,9 +1,11 @@
-"""Semiring matrix-multiply plans: mxm / mxv / vxm (+ kronecker).
+"""Semiring matrix-multiply plans: one contraction for mxm / mxv / vxm
+(+ kronecker).
 
 Reference semantics: C[i,k] = MONOID_j mult(A[i,j], B[j,k]) over stored
 pairs only (/root/reference/dask_grblas/expr.py:86-164, 1961-2008). Spark
 plan: equi-join on the contraction key + hash aggregate with the monoid's
-aggregate expression — Catalyst gives partial (map-side) aggregation and
+aggregate expression (GraphX's mrTriplets shape: one keyed join, one
+aggregate) — Catalyst gives partial (map-side) aggregation and
 AQE picks broadcast vs shuffle join at runtime.
 
 Mask pushdown (SURVEY.md section 4): a mask on the OUTPUT keys is applied
@@ -42,58 +44,31 @@ def _pushdown(pairs: DataFrame, keys: list[str], mask) -> DataFrame:
     return pairs.join(mask_keys, on=keys, how=how)
 
 
-def mxm(a_df: DataFrame, b_df: DataFrame, sr: Semiring,
-        a_dtype: GbType, b_dtype: GbType, mask=None,
-        broadcast_a: bool = False, broadcast_b: bool = False) -> DataFrame:
+def contract(a_df: DataFrame, b_df: DataFrame, a_keys: list[str],
+             b_keys: list[str], sr: Semiring, a_dtype: GbType,
+             b_dtype: GbType, mask=None, broadcast_a: bool = False,
+             broadcast_b: bool = False) -> DataFrame:
+    """C = A (+).(x) B joining A's last key to B's first: mxm (i, j)(i, j),
+    mxv (i, j)(i) and vxm (i)(i, j). The output keys, named i then j, are
+    A's other key and B's other key. Positional ops read each side's first
+    and last key; a vector's one key is both. The hints force a broadcast
+    of a side that is known to be small, like a frontier vector."""
     mult_dtype = sr.binaryop.out_dtype(a_dtype, b_dtype)
     out_dtype = sr.monoid.out_dtype(mult_dtype, mult_dtype)
     a = _maybe_broadcast(a_df.alias("A"), broadcast_a)
     b = _maybe_broadcast(b_df.alias("B"), broadcast_b)
-    ctx = PositionalContext(ai=F.col("A.i"), aj=F.col("A.j"),
-                            bi=F.col("B.i"), bj=F.col("B.j"))
+    ai, aj = F.col(f"A.{a_keys[0]}"), F.col(f"A.{a_keys[-1]}")
+    bi, bj = F.col(f"B.{b_keys[0]}"), F.col(f"B.{b_keys[-1]}")
+    ctx = PositionalContext(ai=ai, aj=aj, bi=bi, bj=bj)
     mult = sr.binaryop(F.col("A.v"), F.col("B.v"), mult_dtype, ctx)
-    pairs = (a.join(b, F.col("A.j") == F.col("B.i"))
-              .select(F.col("A.i").alias("i"), F.col("B.j").alias("j"),
+    free = [ai][:len(a_keys) - 1] + [bj][:len(b_keys) - 1]
+    keys = ["i", "j"][:len(free)]
+    pairs = (a.join(b, aj == bi)
+              .select(*[c.alias(k) for c, k in zip(free, keys)],
                       mult.alias("v")))
-    pairs = _pushdown(pairs, ["i", "j"], mask)
-    return (pairs.groupBy("i", "j")
+    pairs = _pushdown(pairs, keys, mask)
+    return (pairs.groupBy(*keys)
                  .agg(sr.monoid.agg(F.col("v"), out_dtype).alias("v")))
-
-
-def mxv(a_df: DataFrame, v_df: DataFrame, sr: Semiring,
-        a_dtype: GbType, v_dtype: GbType, mask=None,
-        broadcast_v: bool = True) -> DataFrame:
-    """w[i] = MONOID_j mult(A[i,j], v[j]). The vector side is broadcast by
-    default — in iterative algorithms the frontier is usually far smaller
-    than the matrix; pass broadcast_v=False when the vector is huge."""
-    mult_dtype = sr.binaryop.out_dtype(a_dtype, v_dtype)
-    out_dtype = sr.monoid.out_dtype(mult_dtype, mult_dtype)
-    a = a_df.alias("A")
-    v = _maybe_broadcast(v_df.alias("B"), broadcast_v)
-    ctx = PositionalContext(ai=F.col("A.i"), aj=F.col("A.j"),
-                            bi=F.col("B.i"), bj=F.col("B.i"))
-    mult = sr.binaryop(F.col("A.v"), F.col("B.v"), mult_dtype, ctx)
-    pairs = (a.join(v, F.col("A.j") == F.col("B.i"))
-              .select(F.col("A.i").alias("i"), mult.alias("v")))
-    pairs = _pushdown(pairs, ["i"], mask)
-    return pairs.groupBy("i").agg(sr.monoid.agg(F.col("v"), out_dtype).alias("v"))
-
-
-def vxm(v_df: DataFrame, a_df: DataFrame, sr: Semiring,
-        v_dtype: GbType, a_dtype: GbType, mask=None,
-        broadcast_v: bool = True) -> DataFrame:
-    """w[j] = MONOID_i mult(v[i], A[i,j]) (row vector times matrix)."""
-    mult_dtype = sr.binaryop.out_dtype(v_dtype, a_dtype)
-    out_dtype = sr.monoid.out_dtype(mult_dtype, mult_dtype)
-    v = _maybe_broadcast(v_df.alias("A"), broadcast_v)
-    a = a_df.alias("B")
-    ctx = PositionalContext(ai=F.col("A.i"), aj=F.col("A.i"),
-                            bi=F.col("B.i"), bj=F.col("B.j"))
-    mult = sr.binaryop(F.col("A.v"), F.col("B.v"), mult_dtype, ctx)
-    pairs = (v.join(a, F.col("A.i") == F.col("B.i"))
-              .select(F.col("B.j").alias("i"), mult.alias("v")))
-    pairs = _pushdown(pairs, ["i"], mask)
-    return pairs.groupBy("i").agg(sr.monoid.agg(F.col("v"), out_dtype).alias("v"))
 
 
 def kronecker(a_df: DataFrame, b_df: DataFrame, op, a_dtype: GbType,

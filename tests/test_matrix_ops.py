@@ -176,3 +176,14 @@ def test_contains_rejects_non_scalar_index(A):
     for index in (([3], 0), (slice(None), 0)):
         with pytest.raises(TypeError, match="single elements"):
             index in A
+
+
+def test_vector_input_mask_rejected_on_2d_extract(A):
+    # a Vector input_mask is defined for a row or column extract only; on
+    # a 2-D extract it used to filter the rows silently
+    m = vec_from({1: True}, dtype="BOOL")
+    with pytest.raises(TypeError, match="Mask object must be type Matrix"):
+        A[[0, 1, 2], [0, 1, 2]].new(input_mask=m.S)
+    # a row extract keeps it, on the kept (column) axis
+    got = A[0, :].new(input_mask=m.S)
+    assert got.to_dict() == {1: A_DATA[(0, 1)]}

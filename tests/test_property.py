@@ -211,6 +211,78 @@ class TestExtractAssignProperties:
         assert w.df.count() == len(want)
 
 
+def _row(obj, r):
+    """Index r of a vector, or of column 0 of an n x 1 matrix."""
+    if obj.kind == "vector":
+        return r
+    return (r, 0) if isinstance(r, int) else (r, slice(None))
+
+
+def _subassign_accum(x, y, i, idx):
+    # y's kind, sized to the region
+    region = y[_row(y, list(range(len(idx))))].new()
+    x[_row(x, idx)](accum=binary.plus) << region
+    return x
+
+
+def _delitem(x, y, i, idx):
+    del x[_row(x, i)]
+    return x
+
+
+def _resize(x, y, i, idx):
+    x.resize(i + 1, *x.shape[1:])
+    return x
+
+
+# each takes (obj, other, int index, index list) of one kind
+RANK_OPS = {
+    "ewise_add": lambda x, y, i, idx: x.ewise_add(y, monoid.plus).new(),
+    "ewise_mult": lambda x, y, i, idx: x.ewise_mult(y, binary.times).new(),
+    "extract_int": lambda x, y, i, idx: x[_row(x, i)].new(),
+    "extract_slice": lambda x, y, i, idx: x[_row(x, slice(i, None, 2))].new(),
+    "extract_list": lambda x, y, i, idx: x[_row(x, idx + idx[:1])].new(),
+    "contains": lambda x, y, i, idx: _row(x, i) in x,
+    "delitem": _delitem,
+    "to_values": lambda x, y, i, idx: [a.tolist() for a in x.to_values()],
+    "resize": _resize,
+    "subassign_accum": _subassign_accum,
+}
+
+
+def _read(out):
+    """A result as plain data; an n x 1 matrix is read on column 0."""
+    if isinstance(out, (bool, list)):
+        return out
+    if out.kind == "scalar":
+        return out.value
+    d = out.to_dict()
+    if out.kind == "matrix":
+        assert out.shape[1] == 1 and all(j == 0 for _, j in d)
+        d = {i: x for (i, _), x in d.items()}
+    return out.shape[0], d
+
+
+@pytest.mark.usefixtures("spark")
+class TestRankTwinProperties:
+    """Vector and Matrix share one implementation per op, generic in the
+    key columns: each op on a vector v of size n must equal the same op
+    on v as an n x 1 matrix, read back on column 0."""
+
+    @pytest.mark.parametrize("op", sorted(RANK_OPS))
+    @given(a=vec, b=vec, i=st.integers(0, 9),
+           idx=st.lists(st.integers(0, 9), min_size=1, max_size=5))
+    @settings(**dict(SETTINGS, max_examples=2))
+    def test_vector_equals_n_by_1_matrix(self, op, a, b, i, idx):
+        f = RANK_OPS[op]
+        got_v = _read(f(_v(a), _v(b), i, idx))
+        got_m = _read(f(_v(a)._as_matrix(), _v(b)._as_matrix(), i, idx))
+        if op == "to_values":  # (i, v) against (i, j, v)
+            assert got_m[1] == [0] * len(got_m[0])
+            del got_m[1]
+        assert got_v == got_m
+
+
 @pytest.mark.usefixtures("spark")
 class TestAlgorithmProperties:
     @given(edges=st.sets(st.tuples(st.integers(0, 11), st.integers(0, 11)),

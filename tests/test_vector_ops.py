@@ -156,3 +156,9 @@ def test_contains_rejects_non_scalar_index(v):
     for index in ([1, 2], slice(0, 3)):
         with pytest.raises(TypeError, match="single elements"):
             index in v
+
+
+def test_diag_of_unknown_size_vector(v):
+    D = gb.Vector.from_dataframe(v.df).diag(1)
+    assert (D.nrows, D.ncols) == (None, None)
+    assert D.to_dict() == {(k, k + 1): x for k, x in V_DATA.items()}
