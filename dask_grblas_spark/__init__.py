@@ -17,7 +17,7 @@ from .core import (GrMatrix, GrScalar, GrVector, Matrix, Scalar,
                    diag, get_session, row_stack)
 from .dtypes import lookup_dtype
 from .exceptions import (DimensionMismatch, EmptyObject, GrblasSparkException,
-                         IndexOutOfBound, OutputNotEmpty)
+                         IndexOutOfBound, InvalidValue, OutputNotEmpty)
 from .expr import replace
 from .mask import (ComplementedStructuralMask, ComplementedValueMask,
                    StructuralMask, ValueMask)
@@ -38,5 +38,5 @@ __all__ = [
     "StructuralMask", "ValueMask", "ComplementedStructuralMask",
     "ComplementedValueMask", "replace",
     "GrblasSparkException", "DimensionMismatch", "OutputNotEmpty",
-    "IndexOutOfBound", "EmptyObject",
+    "IndexOutOfBound", "EmptyObject", "InvalidValue",
 ]

@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 from .dtypes import (BOOL, FP64, INT64, GbType, from_storage,
                      infer_from_values, lit_storage, lookup_dtype, to_storage)
 from .exceptions import (DimensionMismatch, EmptyObject, IndexOutOfBound,
-                         OutputNotEmpty)
+                         InvalidValue, OutputNotEmpty)
 from .expr import (AmbiguousAssignOrExtract, Assigner, Expr, Updater,
                    _normalize_call_args, _scalar_merge)
 from .mask import StructuralMask, ValueMask, resolve_mask
@@ -40,6 +40,7 @@ from .plans import ewise as ewise_plans
 from .plans import extract as extract_plans
 from .plans import matmul as matmul_plans
 from .plans import reduce as reduce_plans
+from .plans.local import local_df
 from .plans.merge import apply_mask
 
 __all__ = ["GrScalar", "GrVector", "GrMatrix", "TransposedMatrix",
@@ -83,11 +84,8 @@ def _schema(keys: list[str], dtype: GbType) -> T.StructType:
 
 
 def _scalar_df_from_value(value, dtype: GbType) -> DataFrame:
-    spark = get_session()
-    if value is None:
-        return spark.createDataFrame([], _schema([], dtype))
-    return spark.createDataFrame([(to_storage(value, dtype),)],
-                                 _schema([], dtype))
+    return local_df(get_session(), _schema([], dtype),
+                    [[] if value is None else [value]])
 
 
 def _dup_agg(dup_op, col, dtype: GbType):
@@ -104,6 +102,20 @@ def _dup_agg(dup_op, col, dtype: GbType):
             f"dup_op {dup_op.name!r} is not associative-aggregatable; "
             f"use a monoid")
     raise TypeError(f"Invalid dup_op: {dup_op!r}")
+
+
+def _check_unique(coords, keys):
+    """Raise InvalidValue on a key given twice: every merge, mask and
+    nvals counts one entry per key."""
+    order = np.lexsort(coords[::-1])
+    keyed = [c[order] for c in coords]
+    repeat = np.flatnonzero(np.logical_and.reduce(
+        [k[1:] == k[:-1] for k in keyed]))
+    if repeat.size:
+        at = tuple(int(k[repeat[0]]) for k in keyed)
+        raise InvalidValue(
+            f"{dict(zip(keys, at))} is given more than once; pass dup_op "
+            f"to combine repeated entries")
 
 
 def plan_leaves(df: DataFrame) -> int:
@@ -332,7 +344,8 @@ class BaseType:
     @classmethod
     def _empty(cls, dtype, shape, name):
         dt = lookup_dtype(dtype)
-        df = get_session().createDataFrame([], _schema(cls._key_cols, dt))
+        df = local_df(get_session(), _schema(cls._key_cols, dt),
+                      [[]] * (len(cls._key_cols) + 1))
         return cls(df, dt, *shape, name=name)
 
     @classmethod
@@ -340,7 +353,8 @@ class BaseType:
         """The body of from_values and build: one coordinate array per key
         column. A None dimension is inferred from its coordinates
         (reference vector.py:120-126, matrix.py:141-150); a known one is
-        bounds-checked unless trusted. Returns (df, dtype, shape)."""
+        bounds-checked unless trusted. Without dup_op a repeated key is
+        an error (GrB_INVALID_VALUE). Returns (df, dtype, shape)."""
         words, inputs, source = cls._coo_names
         coords = [np.asarray(c, dtype="int64") for c in coords]
         values = np.asarray(values)
@@ -359,9 +373,10 @@ class BaseType:
             elif not trust_shape and c.size and int(c.max()) >= shape[k]:
                 raise IndexOutOfBound(
                     f"{word} {int(c.max())} >= {dim} {shape[k]}")
-        rows = [(*map(int, key), to_storage(v, dt))
-                for *key, v in zip(*coords, values)]
-        df = get_session().createDataFrame(rows, _schema(cls._key_cols, dt))
+        if dup_op is None:
+            _check_unique(coords, cls._key_cols)
+        df = local_df(get_session(), _schema(cls._key_cols, dt),
+                      [*coords, values])
         if dup_op is not None:
             df = df.groupBy(*cls._key_cols).agg(
                 _dup_agg(dup_op, F.col("v"), dt).cast(dt.spark_type).alias("v"))
@@ -1123,8 +1138,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
                 elif rx.kind == "pred":
                     fill = fill.filter(rx.pred(F.col(col)))
                 elif rx.kind == "df":
-                    tgt = assign_plans.dedup_last_wins(rx.df) \
-                        .select(F.col("idx").alias(col))
+                    tgt = rx.last_wins().select(F.col("idx").alias(col))
                     fill = fill.join(tgt, on=col, how="left_semi")
                 # "all": no restriction
             new_df = fill.select(
@@ -1151,7 +1165,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
             for col, rx, _size in int_axes:
                 mk = mk.select(F.lit(rx.value).cast("bigint").alias(col),
                                *mk.columns)
-            mk = mk.select(*parent._key_cols).distinct()
+            mk = mk.select(*parent._key_cols)
         elif len(mk.columns) == 1 and len(axes) == 2:
             # GrB_Row/Col_assign: vector mask in TARGET coords of the open
             # axis, band-scoped (reference expr.py:1756-1765)

@@ -178,6 +178,33 @@ def to_storage(v, dtype: GbType):
     return int(v)
 
 
+def to_storage_array(values, dtype: GbType):
+    """The column form of to_storage: values -> one Arrow array of the
+    storage type. Arrow's safe cast keeps the checks the row path's
+    schema verifier made: an integer out of range for the storage type
+    raises (INT8 300, UINT64 2**63, where a numpy astype would wrap), and
+    so does NaN or an infinity into an integer type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arr = np.asarray(values)
+    kind, pa_type = arr.dtype.kind, to_arrow_type(dtype.spark_type)
+    if (arr.ndim != 1 or kind not in "biufc"
+            or (kind == "c" and not dtype.is_complex)):
+        # objects, strings, (re, im) tuples, complex into a real type:
+        # the row rule, value by value
+        return pa.array([to_storage(v, dtype) for v in values], type=pa_type)
+    if dtype.is_complex:
+        c = arr.astype(dtype.np_name)
+        return pa.StructArray.from_arrays([c.real, c.imag],
+                                          fields=list(pa_type))
+    if dtype.is_bool or dtype.is_float:
+        arr = arr.astype(dtype.np_name)
+    elif kind == "f":
+        arr = np.trunc(arr)  # int() truncates toward zero
+    return pa.array(arr, type=pa_type)
+
+
 def from_storage(v, dtype: GbType):
     """Row value read back from Spark -> python value (struct -> complex)."""
     if v is not None and dtype.is_complex:

@@ -1,5 +1,6 @@
 """Error types mirroring the GraphBLAS error surface the reference raises
-(via grblas): DimensionMismatch, OutputNotEmpty, IndexOutOfBound, EmptyObject.
+(via grblas): DimensionMismatch, OutputNotEmpty, IndexOutOfBound, EmptyObject,
+InvalidValue.
 Reference: build() error cases /root/reference/dask_grblas/vector.py:448-504.
 """
 
@@ -22,6 +23,11 @@ class IndexOutOfBound(GrblasSparkException, IndexError):
 
 class EmptyObject(GrblasSparkException):
     pass
+
+
+class InvalidValue(GrblasSparkException, ValueError):
+    """GraphBLAS 2.0 GrB_INVALID_VALUE: e.g. from_values/build given the
+    same index twice without a dup_op."""
 
 
 class MonoidScaleWarning(UserWarning):

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..dtypes import GbType
 from ..partitions import sized_range
-from .extract import ResolvedIndex, dedup_last_wins
+from .extract import ResolvedIndex
 
 
 def axis_scatter(df: DataFrame, pos_col: str, rx: ResolvedIndex,
@@ -34,7 +34,7 @@ def axis_scatter(df: DataFrame, pos_col: str, rx: ResolvedIndex,
         return df.select(F.col(pos_col).cast("bigint").alias(out_col), *others)
     if rx.kind == "pred":
         return df.select(rx.tgt_of(F.col(pos_col)).alias(out_col), *others)
-    idx = dedup_last_wins(rx.df) if dedup else rx.df
+    idx = rx.last_wins() if dedup else rx.df
     idx = idx.select(F.col("pos").alias("__p"), F.col("idx").alias("__tgt"))
     return (df.join(F.broadcast(idx), df[pos_col] == F.col("__p"))
               .select(F.col("__tgt").alias(out_col),
@@ -63,7 +63,7 @@ def axis_targets(rx: ResolvedIndex, spark: SparkSession, size: int,
                 "set .size/.nrows/.ncols or supply a bounding mask")
         return (sized_range(spark, 0, rx.out_size)
                 .select(rx.tgt_of(F.col("id")).alias(col)))
-    return dedup_last_wins(rx.df).select(F.col("idx").alias(col))
+    return rx.last_wins().select(F.col("idx").alias(col))
 
 
 def scalar_fill(spark: SparkSession, value, dtype: GbType,

@@ -5,12 +5,15 @@ the extract pipeline expr.py:1265-1444 (SURVEY.md section 2.5). Index forms:
 int (incl. negative), list (duplicates allowed -> fan-out), slice (any
 step), numpy array, or a distributed (pos, idx) DataFrame.
 
-Spark mapping: a list/array index becomes a small (pos, idx) DataFrame and
-extraction is one equi-join (broadcast — index lists are tiny next to the
-data); a slice needs NO join at all: range predicate + reindex arithmetic,
-fully pushed down to the scan. The reference's 'reorder fragments to index
-order' stage (expr.py:1199-1245) has no physical analogue — the pos column
-IS the output coordinate.
+Spark mapping: a list/array index is resolved on the driver to an int64
+array and becomes a small (pos, idx) LocalRelation (`local.local_df`), so
+extraction is one broadcast equi-join and builds its index with no job;
+an assign's last-wins dedup of such a list is numpy on the driver too
+(`last_wins_pairs`). Only a DataFrame index keeps the window
+(`dedup_last_wins`). A slice needs NO join at all: range predicate +
+reindex arithmetic, fully pushed down to the scan. The reference's
+'reorder fragments to index order' stage (expr.py:1199-1245) has no
+physical analogue — the pos column IS the output coordinate.
 """
 
 from __future__ import annotations
@@ -22,6 +25,10 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..exceptions import IndexOutOfBound
+from .local import local_df
+
+_POS_IDX = T.StructType([T.StructField("pos", T.LongType(), False),
+                         T.StructField("idx", T.LongType(), False)])
 
 
 def _exact_div(num: Column, den: int) -> Column:
@@ -40,10 +47,11 @@ class ResolvedIndex:
     kind: 'int' | 'all' | 'pred' (slice) | 'df' (explicit list)
     """
 
-    __slots__ = ("kind", "out_size", "value", "pred", "pos_of", "tgt_of", "df")
+    __slots__ = ("kind", "out_size", "value", "pred", "pos_of", "tgt_of",
+                 "df", "arr")
 
     def __init__(self, kind, out_size=None, value=None, pred=None,
-                 pos_of=None, tgt_of=None, df=None):
+                 pos_of=None, tgt_of=None, df=None, arr=None):
         self.kind = kind
         self.out_size = out_size    # logical size of the extracted axis
         self.value = value          # for 'int'
@@ -51,6 +59,16 @@ class ResolvedIndex:
         self.pos_of = pos_of        # Column -> Column: target index -> output pos
         self.tgt_of = tgt_of        # Column -> Column: output pos -> target index
         self.df = df                # (pos, idx) DataFrame for 'df'
+        self.arr = arr              # the int64 targets of a literal list
+
+    def last_wins(self) -> DataFrame:
+        """The (pos, idx) map of a 'df' index with one row per target, the
+        last position winning: the assign semantics. A literal list is
+        resolved in numpy on the driver; a DataFrame index by a window."""
+        if self.arr is None:
+            return dedup_last_wins(self.df)
+        return local_df(self.df.sparkSession, _POS_IDX,
+                        last_wins_pairs(self.arr))
 
 
 def resolve_index(idx, size: int | None, spark: SparkSession) -> ResolvedIndex:
@@ -126,11 +144,8 @@ def resolve_index(idx, size: int | None, spark: SparkSession) -> ResolvedIndex:
         arr = np.where(arr < 0, arr + size, arr).astype("int64")
         if arr.size and (arr.min() < 0 or arr.max() >= size):
             raise IndexOutOfBound(f"index out of bounds for size {size}")
-    schema = T.StructType([T.StructField("pos", T.LongType(), False),
-                           T.StructField("idx", T.LongType(), False)])
-    df = spark.createDataFrame(
-        [(int(p), int(v)) for p, v in enumerate(arr)], schema)
-    return ResolvedIndex("df", out_size=int(arr.size), df=df)
+    df = local_df(spark, _POS_IDX, [np.arange(arr.size), arr])
+    return ResolvedIndex("df", out_size=int(arr.size), df=df, arr=arr)
 
 
 def axis_gather(df: DataFrame, axis_col: str, rx: ResolvedIndex,
@@ -152,10 +167,17 @@ def axis_gather(df: DataFrame, axis_col: str, rx: ResolvedIndex,
                       *[df[c] for c in others]))
 
 
+def last_wins_pairs(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(pos, idx) of an ASSIGN index list with duplicate targets resolved:
+    the last occurrence wins (SuiteSparse spec; reference `_uniquify`,
+    dask_grblas/expr.py:1463-1499). Sorted by idx."""
+    idx, first_from_end = np.unique(arr[::-1], return_index=True)
+    return arr.size - 1 - first_from_end, idx
+
+
 def dedup_last_wins(idx_df: DataFrame) -> DataFrame:
-    """Duplicate target indices in an ASSIGN index list: last occurrence
-    wins (SuiteSparse spec; reference `_uniquify`
-    /root/reference/dask_grblas/expr.py:1463-1499)."""
+    """`last_wins_pairs` for a DataFrame index: a window over idx, with
+    its own exchange. A literal list never comes here."""
     w = Window.partitionBy("idx").orderBy(F.col("pos").desc())
     return (idx_df.withColumn("__rn", F.row_number().over(w))
                   .filter(F.col("__rn") == 1).drop("__rn"))

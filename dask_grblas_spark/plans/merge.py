@@ -39,8 +39,6 @@ from functools import reduce as _reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .extract import dedup_last_wins
-
 
 def _join_cond(keys, left="l", right="r") -> Column:
     return _reduce(lambda a, b: a & b,
@@ -121,9 +119,9 @@ def merge_into(old_df: DataFrame, new_df: DataFrame, keys: list[str], *,
         if rx.kind == "int":
             inside = inside & (F.col(col) == rx.value)
         elif rx.kind == "df":
-            # the distinct targets, spelled like the last-wins dedup of
-            # the scatter so the two share one exchange
-            ids = dedup_last_wins(rx.df).select(F.col("idx").alias(col))
+            # the distinct targets: the same last-wins map the scatter
+            # joins (a LocalRelation for a literal list)
+            ids = rx.last_wins().select(F.col("idx").alias(col))
             inside = inside & _exists(F.broadcast(ids), [col])
         else:  # 'all' / 'pred'
             inside = inside & rx.pred(F.col(col))

@@ -26,6 +26,24 @@ def test_from_values_dup_op(spark):
     assert v.to_dict() == {0: 2, 1: 3}
 
 
+def test_from_values_duplicates_without_dup_op_raise(spark):
+    """A key given twice without dup_op is GrB_INVALID_VALUE: the object
+    would otherwise hold two entries for one key."""
+    with pytest.raises(gb.InvalidValue):
+        gb.Vector.from_values([2, 0, 2], [1, 2, 3])
+    with pytest.raises(gb.InvalidValue):
+        gb.Matrix.from_values([0, 1, 0], [1, 1, 1], [1, 2, 3])
+    v = gb.Vector.new("INT64", 4)
+    with pytest.raises(ValueError):
+        v.build([1, 1], [5, 6])
+    m = gb.Matrix.new("INT64", 3, 3)
+    with pytest.raises(gb.InvalidValue):
+        m.build([2, 2], [0, 0], [5, 6])
+    # the same row or column alone is no repeat
+    m.build([0, 0, 1], [0, 1, 0], [1, 2, 3])
+    assert m.to_dict() == {(0, 0): 1, (0, 1): 2, (1, 0): 3}
+
+
 def test_from_values_bounds_check(spark):
     with pytest.raises(gb.IndexOutOfBound):
         gb.Vector.from_values([0, 9], [1, 2], size=5)

@@ -511,3 +511,33 @@ def test_quantile_sketch_build_broadcasts_counts(spark):
     # exactly one hash exchange total — the grouped COUNT's partial-
     # agg fold (tiny); the base itself is never repartitioned on g
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+def test_driver_literals_are_local_relations(spark, A):
+    """Index lists, from_values coordinates and an assign's last-wins
+    dedup are built on the driver as LocalRelations: no RDD for Spark to
+    plan jobs around, and no window to dedup a literal list."""
+    from dask_grblas_spark import binary
+
+    C = gb.Matrix.from_values([0, 1], [0, 1], [1.0, 1.0], 4, 4)
+    M = gb.Matrix.from_values([0, 2], [0, 1], [True, True], 3, 2)
+    B = gb.Matrix.from_values([0, 1, 2], [0, 1, 1], [10.0, 20.0, 30.0], 3, 2)
+    C[[1, 2, 1], [1, 3]](M.S, accum=binary.plus) << B
+    outs = [A[[3, 0, 0], [2, 5]].new(),
+            gb.Vector.from_values([0, 2], [1.0, 2.0], size=4), C]
+    for out in outs:
+        plan = _optimized(out.df)
+        for node in ("LogicalRDD", "ExistingRDD", "Window"):
+            assert node not in plan, plan
+    # row 1 is addressed at positions 0 and 2: the last one wins
+    assert C.to_dict() == {(0, 0): 1.0, (1, 1): 1.0, (1, 3): 30.0}
+
+
+def test_dataframe_index_assign_keeps_window(spark):
+    """A distributed (pos, idx) index is not on the driver: its last-wins
+    dedup stays a window."""
+    idx = spark.createDataFrame([(0, 1), (1, 3), (2, 1)], "pos long, idx long")
+    w = gb.Vector.new("FP64", 6)
+    w[idx] << gb.Vector.from_values([0, 1, 2], [1.0, 2.0, 3.0], size=3)
+    assert "Window" in _optimized(w.df)
+    assert w.to_dict() == {1: 3.0, 3: 2.0}

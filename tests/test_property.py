@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import operator
 
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
@@ -297,10 +298,10 @@ class TestAlgorithmProperties:
         n = 12
         es = [(i, j) for i, j in edges if i != j]
         if es:
-            rows = [e[0] for e in es] + [e[1] for e in es]
-            cols = [e[1] for e in es] + [e[0] for e in es]
-            A = gb.Matrix.from_values(rows, cols, [1] * len(rows),
-                                      nrows=n, ncols=n)
+            # one entry per key: (i, j) and (j, i) may both be drawn
+            sym = sorted(set(es) | {(j, i) for i, j in es})
+            A = gb.Matrix.from_values([e[0] for e in sym], [e[1] for e in sym],
+                                      [1] * len(sym), nrows=n, ncols=n)
         else:
             A = gb.Matrix.new("INT64", n, n)
         got = alg.connected_components(A).to_dict()
@@ -322,6 +323,32 @@ class TestAlgorithmProperties:
             comp_min[r] = min(comp_min.get(r, v), v)
         expect = {v: comp_min[find(v)] for v in range(n)}
         assert got == expect
+
+
+@given(idx=st.lists(st.integers(0, 5), min_size=1, max_size=12))
+@example(idx=[3, 1, 3, 3, 0, 1])
+@settings(**dict(SETTINGS, max_examples=5))
+def test_driver_last_wins_equals_window(spark, idx):
+    """The numpy last-wins dedup of a literal index list gives the same
+    (pos, idx) pairs as the window that dedups a DataFrame index."""
+    from dask_grblas_spark.plans.extract import (dedup_last_wins,
+                                                 last_wins_pairs)
+
+    pos, tgt = last_wins_pairs(np.asarray(idx, dtype="int64"))
+    df = spark.createDataFrame(list(enumerate(idx)), "pos long, idx long")
+    got = sorted((r.pos, r.idx) for r in dedup_last_wins(df).collect())
+    assert got == sorted(zip(pos.tolist(), tgt.tolist()))
+
+
+@pytest.mark.parametrize("dtype, top, over", [("INT8", 127, 300),
+                                             ("UINT64", 2**63 - 1, 2**63)])
+def test_from_values_checks_storage_range(spark, dtype, top, over):
+    """A value past the storage type's range raises instead of wrapping
+    (INT8 is stored as tinyint, UINT64 as bigint)."""
+    assert gb.Vector.from_values([0], [top], size=1,
+                                 dtype=dtype).to_dict() == {0: top}
+    with pytest.raises(ValueError):
+        gb.Vector.from_values([0], [over], size=1, dtype=dtype)
 
 
 # ---- pipeline-layer properties (round 4 ops) ----------------------------
