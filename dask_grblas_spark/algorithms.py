@@ -11,16 +11,18 @@ rest.
   and ``connected_components``. It partitions the adjacency once by
   source (``_prep_adjacency``), then per round asks the algorithm's step
   for the next frontier (``frontier vxm A``, filtered to what improved)
-  and a merge into the state, persists and counts the frontier (one
-  action per round), stops when it is empty, and checkpoints state and
-  frontier every ``_CHECKPOINT_EVERY`` rounds. Components' pointer jump
-  is its own step every ``_JUMP_EVERY`` rounds.
+  and a merge into the state, checkpoints the frontier and reads its
+  size from an Observation on that same action (one action per round),
+  stops when it is empty, and checkpoints the state every
+  ``_CHECKPOINT_EVERY`` rounds. Components' pointer jump is its own step
+  every ``_JUMP_EVERY`` rounds.
 * ``_power_iteration`` — ``pagerank`` and ``personalized_pagerank``: the
-  degree-normalized transition matrix, the dangling-mass join and the
-  contribution aggregate, one checkpointed job per iteration; each caller
-  keeps its own start vector and update expression. ``katz_centrality``
-  and ``hits`` share its edge prelude (``_edge_prelude``: the adjacency
-  cached once per join key, hash-partitioned by row count).
+  degree-normalized transition matrix (``_transition``) and the
+  contribution aggregate, one checkpoint per iteration that also
+  observes the next dangling mass and the L1 change; each caller keeps
+  its own start vector and update expression. ``katz_centrality`` and
+  ``hits`` share the edge prelude (``_edge_prelude``: the adjacency
+  cached once per join key, hash-partitioned by entry count).
 * ``_Cache`` — the one owner of every persist an algorithm makes. It
   persists only what is not cached already, so a relation someone else
   cached (the derived-relation cache in ``sources/tpch.py``) is never
@@ -28,6 +30,12 @@ rest.
   a round raises. Anything returned from inside its ``with`` block is
   eagerly checkpointed first, so it no longer reads the caches being
   released.
+
+One action is not one job: under AQE every exchange's map stage runs as
+a job of its own. Traced on a 1024-vertex, 21k-edge R-MAT graph on 4
+cores, a BFS round runs 3-4 jobs, a components round 2-6 (its pointer
+jump round 15), a PageRank iteration 5, a Katz iteration 5 and a HITS
+iteration 20.
 
 Every partition count comes from ``partitions.partitions_for_rows``.
 Frontier loops ship only the CHANGED entries each round; dense-state
@@ -39,8 +47,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from .core import GrMatrix, GrVector, get_session
@@ -133,6 +142,23 @@ def _nodes(n: int) -> DataFrame:
     return sized_range(get_session(), 0, n).select(F.col("id").alias("i"))
 
 
+def _observe(df: DataFrame, **metrics):
+    """``df`` with ``n`` (its row count) and the named aggregate
+    ``metrics`` attached as an Observation: the action that materializes
+    the returned DataFrame also fills ``obs.get`` (a dict by name), so a
+    loop reads its round scalars without a job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n"),
+                      *(c.alias(k) for k, c in metrics.items())), obs
+
+
+def _checkpoint(df: DataFrame, **metrics):
+    """Eagerly checkpoint ``df``; returns the checkpoint and the observed
+    ``metrics`` (see ``_observe``), both from that one action."""
+    df, obs = _observe(df, **metrics)
+    return df.localCheckpoint(eager=True), obs.get
+
+
 def _symmetric_edges(A: GrMatrix) -> DataFrame:
     """Distinct (i, j) pairs of A | A.T: both directions of every edge,
     self loops once."""
@@ -159,43 +185,72 @@ def _degrees(und: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
 
 def _improved(cand_df: DataFrame, cur_df: DataFrame) -> DataFrame:
     """Entries of cand that are new or strictly smaller than current —
-    the GraphBLAS `w(accum=min)` frontier trick as one left join."""
+    the GraphBLAS `w(accum=min)` frontier trick as one anti join (no
+    current entry at or below the candidate).
+
+    A checkpoint keeps its source plan's size estimate, and an anti
+    join's estimate is its left side's alone. With a left join here the
+    frontier's estimate would take in the state's and the merged state's
+    the frontier's, so the estimates' digit counts grow geometrically
+    with the rounds until planning stalls (seen on a 64-vertex path)."""
     c = cand_df.alias("c")
     o = cur_df.alias("o")
-    return (c.join(o, F.col("c.i") == F.col("o.i"), "left_outer")
-             .filter(F.col("o.v").isNull() | (F.col("c.v") < F.col("o.v")))
-             .select(F.col("c.i").alias("i"), F.col("c.v").alias("v")))
+    return c.join(o, (F.col("c.i") == F.col("o.i"))
+                  & (F.col("o.v") <= F.col("c.v")), "left_anti")
 
 
-def _merge_min(cur_df: DataFrame, imp_df: DataFrame) -> DataFrame:
-    """Overwrite current entries with improved ones (imp wins)."""
-    keep = cur_df.join(imp_df.select("i"), on="i", how="left_anti")
-    return keep.unionByName(imp_df)
+def _merge_min(cur_df: DataFrame, imp_df: DataFrame,
+               how: str = "full_outer") -> DataFrame:
+    """Overwrite current entries with improved ones (imp wins), as one
+    outer join; ``how="left_outer"`` when every improved key is a
+    current key already. It keeps the checkpointed imp out of a Union:
+    Spark 4.1's ``InferFiltersFromConstraints`` failed there (``key not
+    found`` in ``UnionBase.rewriteConstraints``) while ``_improved`` was
+    a left join, and an anti join plus union ran 53 jobs where this
+    runs 41 (components, 1024-vertex R-MAT, 4 rounds)."""
+    return (cur_df.join(imp_df.withColumnRenamed("v", "_v"), on="i",
+                        how=how)
+                  .select("i", F.coalesce("_v", "v").alias("v")))
+
+
+def _entries(A: GrMatrix, cache: _Cache, factor: int = 1):
+    """(A's entries, the partition count for ``factor`` times their
+    number). The number is A's cached ``nvals`` when the caller already
+    waited on A; otherwise the entries are persisted and counted, so a
+    derived A is computed once."""
+    if A._nvals_cache is not None:
+        return A.df, partitions_for_rows(factor * A._nvals_cache)
+    df = cache.persist(A.df)
+    return df, partitions_for_rows(factor * df.count())
 
 
 def _prep_adjacency(A: GrMatrix, cache: _Cache, undirected: bool = False):
     """Hash-partition the adjacency (of A | A.T with ``undirected``) by
-    source vertex ONCE, sized by its measured edge count, so every
-    round's join reuses one exchange. Returns (adjacency, partitions);
-    the partition count also sizes the loop state.
+    source vertex ONCE, sized by A's entry count (twice it, an upper
+    bound, for A | A.T), so every round's join reuses one exchange.
+    Returns (adjacency, partitions); the partition count also sizes the
+    loop state. One action (the eager persist of the partitioned
+    adjacency), plus a count when A's ``nvals`` is not known yet.
 
-    An input that fits one partition and already sits in a few splits is
-    reused as is: frontier sides broadcast, so source partitioning only
-    helps the huge-frontier shuffle join."""
+    A directed input that fits one partition and already sits in a few
+    splits is reused as is, with no action: frontier sides broadcast, so
+    source partitioning only helps the huge-frontier shuffle join."""
+    raw, parts = _entries(A, cache, 2 if undirected else 1)
     if undirected:
-        # cache A before symmetrize: A | A.T reads it from two plan
-        # branches, and Spark does not dedupe the underlying fact join
-        raw = cache.persist(A.df, eager=True)
-        adj, parts = _prep_adjacency(
-            symmetrize(GrMatrix(raw, A.dtype, A.nrows, A.ncols)), cache)
-        cache.drop(raw)
-        return adj, parts
-    base = cache.persist(A.df)
-    parts = partitions_for_rows(base.count())
-    adj = base
-    if parts > 1 or base.rdd.getNumPartitions() > 4:
-        adj = cache.persist(base.repartition(parts, "i"), eager=True)
-        cache.drop(base)
+        # symmetrize's A | A.T (max combine): one scan of A emits both
+        # directions, and the (i, j) aggregate reuses the exchange by i
+        both = F.explode(F.array(
+            F.struct("i", "j", "v"),
+            F.struct(F.col("j").alias("i"), F.col("i").alias("j"), "v")))
+        base = (raw.select(both.alias("e")).select("e.*")
+                   .repartition(parts, "i")
+                   .groupBy("i", "j").agg(F.max("v").alias("v")))
+    elif parts == 1 and raw.rdd.getNumPartitions() <= 4:
+        return GrMatrix(cache.persist(raw), A.dtype, A.nrows, A.ncols), parts
+    else:
+        base = raw.repartition(parts, "i")
+    adj = cache.persist(base, eager=True)
+    cache.drop(raw)
     return GrMatrix(adj, A.dtype, A.nrows, A.ncols), parts
 
 
@@ -206,10 +261,13 @@ def _frontier_loop(A: GrMatrix, start, step,
     ``start(adj)`` gives the initial state, which is also the first
     frontier. ``step(rnd, state, frontier, adj, keep)`` returns
     ``(delta, merge)``: the next frontier's rows and a function from the
-    persisted frontier DataFrame to the next state's DataFrame. ``keep``
-    persists a DataFrame as round state, sized like the loop. The loop
-    stops on the first empty frontier, keeping the state that produced
-    it, and releases the round caches at every checkpoint."""
+    checkpointed frontier DataFrame to the next state's DataFrame.
+    ``keep`` persists a DataFrame as round state, sized like the loop.
+    Each frontier is eagerly checkpointed, and its size is observed on
+    that same action, so a round is one action; the state is
+    checkpointed every ``_CHECKPOINT_EVERY`` rounds, which also releases
+    the round caches. The loop stops on the first empty frontier,
+    keeping the state that produced it."""
     with _Cache() as cache, _Cache() as rounds:
         adj, parts = _prep_adjacency(A, cache, undirected)
 
@@ -217,22 +275,27 @@ def _frontier_loop(A: GrMatrix, start, step,
             return rounds.persist(df.coalesce(parts))
 
         init = start(adj.df)
-        state = frontier = GrVector(keep(init.df), init.dtype, init.size)
+
+        def frontier_of(df):
+            ckpt, m = _checkpoint(df.coalesce(parts))
+            out = GrVector(ckpt, init.dtype, init.size)
+            out._nvals_cache = m["n"]
+            return out
+
+        state = frontier = frontier_of(init.df)
         rnd = 0
         while frontier.nvals > 0:
             rnd += 1
             delta, merge = step(rnd, state, frontier, adj, keep)
-            nxt = GrVector(keep(delta), state.dtype, state.size)
+            nxt = frontier_of(delta)
             if nxt.nvals == 0:
                 break
             state = GrVector(merge(nxt.df), state.dtype, state.size)
             frontier = nxt
             if rnd % _CHECKPOINT_EVERY == 0:
-                # cut both lineages: the state grows by merge and the
-                # frontier nests every previous round's plan; nothing
+                # cut the state's lineage, which grows by merge; nothing
                 # reads the round caches after that
                 state.checkpoint(compact=True)
-                frontier.checkpoint()
                 rounds.release()
         return state.checkpoint(compact=True)
 
@@ -301,7 +364,7 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
         imp = _improved(cand.df, labels.df)
         if rnd % _JUMP_EVERY:
             # cheap frontier round: only the improved entries move
-            return imp, lambda fr: keep(_merge_min(labels.df, fr))
+            return imp, lambda fr: _merge_min(labels.df, fr, "left_outer")
         # FastSV shortcut round (pointer jumping): l[i] <- l[l[i]].
         # Labels are vertex ids with the invariant l[v] <= v, so l is
         # defined at every label value and jumping only decreases. Run
@@ -311,7 +374,7 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
         # depth per jump, bounding the loop at O(log n) jump phases.
         # Small-diameter graphs finish before paying for many jumps.
         # Cost: two n-row self-joins, so not done every round.
-        merged = keep(_merge_min(labels.df, imp))
+        merged = keep(_merge_min(labels.df, imp, "left_outer"))
         m, p = merged.alias("m"), merged.alias("p")
         jumped = keep(
             m.join(p, F.col("m.v") == F.col("p.i"), "left_outer")
@@ -368,21 +431,20 @@ def k_core(A: GrMatrix, k: int) -> GrVector:
     common late-round case, semi-join on the survivors when round 1 of
     a sparse graph with high k drops the majority (the build side would
     otherwise be the huge one); either side broadcasts when under 1M
-    rows, so the edge relation never reshuffles; an eager
-    localCheckpoint per round caps lineage (the same discipline as the
-    CC/SSSP loops). Rounds are bounded by the graph's degeneracy
+    rows, so the edge relation never reshuffles. Two actions per
+    round, both eager checkpoints that cap lineage: the degrees (which
+    also observe the drop and total counts the next side choice reads)
+    and the surviving edges. Rounds are bounded by the graph's degeneracy
     ordering depth — single digits on real graphs."""
     if k < 1:
         raise ValueError("k must be >= 1")
     edges = _symmetric_edges(A).localCheckpoint(eager=True)
     while True:
-        deg = (edges.groupBy("i").agg(F.count("*").alias("v"))
-               .localCheckpoint(eager=True))
-        counts = deg.agg(
-            F.sum((F.col("v") < k).cast("bigint")).alias("n_drop"),
-            F.count("*").alias("n_total")).collect()[0]
+        deg, counts = _checkpoint(
+            edges.groupBy("i").agg(F.count("*").alias("v")),
+            n_drop=F.sum((F.col("v") < k).cast("bigint")))
         n_drop = counts["n_drop"] or 0
-        n_keep = counts["n_total"] - n_drop
+        n_keep = counts["n"] - n_drop
         if n_drop == 0:
             break
         if n_drop <= n_keep:
@@ -439,23 +501,34 @@ def label_propagation(A: GrMatrix, max_iters: int = 5) -> GrVector:
     return GrVector(labels, INT64, A.nrows)
 
 
-def _edge_prelude(A: GrMatrix, cache: _Cache, *keys: str,
-                  transition: bool = False):
-    """The power iterations' edge relation, cached once per join key in
-    ``keys`` and hash-partitioned by the adjacency's row count, so every
-    iteration reuses one exchange: distinct (i, j) pairs, or with
-    ``transition`` the degree-normalized entries (i, j, v = 1/outdeg(i)).
-    Returns (cached adjacency, [edges per key])."""
-    adj = cache.persist(A.df)
-    parts = partitions_for_rows(adj.count())
-    if transition:
-        outdeg = adj.groupBy("i").agg(F.count("*").alias("d"))
-        edges = (adj.join(outdeg, on="i")
-                    .select("i", "j", (F.lit(1.0) / F.col("d")).alias("v")))
-    else:
-        edges = adj.select("i", "j").distinct()
-    return adj, [cache.persist(edges.repartition(parts, key), eager=True)
-                 for key in keys]
+def _edge_prelude(A: GrMatrix, cache: _Cache, *keys: str) -> list[DataFrame]:
+    """The power iterations' edge relation, the distinct (i, j) pairs,
+    cached once per join key in ``keys`` and hash-partitioned by A's
+    entry count, so every iteration reuses one exchange. One action per
+    key (its eager persist), plus a count when A's ``nvals`` is not
+    known yet. Returns [edges per key]."""
+    adj, parts = _entries(A, cache)
+    if len(keys) > 1:
+        # each key's copy reads A: compute a derived A once
+        adj = cache.persist(adj)
+    edges = adj.select("i", "j").distinct()
+    out = [cache.persist(edges.repartition(parts, key), eager=True)
+           for key in keys]
+    cache.drop(adj)
+    return out
+
+
+def _transition(A: GrMatrix, cache: _Cache) -> DataFrame:
+    """The degree-normalized entries (i, j, v = 1/outdeg(i)), cached and
+    hash-partitioned by i like ``_edge_prelude``. The out-degrees are a
+    window over that one exchange, so A is read once; one action."""
+    adj, parts = _entries(A, cache)
+    outdeg = F.count(F.lit(1)).over(Window.partitionBy("i"))
+    P = cache.persist(adj.repartition(parts, "i")
+                         .select("i", "j", (F.lit(1.0) / outdeg).alias("v")),
+                      eager=True)
+    cache.drop(adj)
+    return P
 
 
 def _power_iteration(A: GrMatrix, start, update, iters: int,
@@ -465,37 +538,41 @@ def _power_iteration(A: GrMatrix, start, update, iters: int,
     on vertices with no out-edge; r_0 = start. Stops early once the L1
     change drops below ``tol`` (never with tol = 0). Returns (i, v).
 
-    Each iteration is one job: the dangling mass is a 1-row aggregate
-    crossJoined into the plan (broadcast by Spark), and the eager
-    checkpoint of r is the only action; the L1 check is the only other
-    driver read, skipped for fixed-iteration runs."""
-    n = A.nrows
+    The rank state (i, v, dangling) is also the vertex frame, so an
+    iteration is r left-joined with the contribution aggregate and
+    checkpointed once: that checkpoint is the iteration's only action,
+    and the scalars the loop reads back (the next dangling mass, the L1
+    change) are observed on it. r_0 is an eager persist that observes
+    the first dangling mass."""
     with _Cache() as cache:
-        adj, (P,) = _edge_prelude(A, cache, "i", transition=True)
-        has_out = cache.persist(adj.select("i").distinct(), eager=True)
-        nodes = _nodes(n)
-        r = cache.persist(nodes.select("i", start.alias("v")))
+        P = _transition(A, cache)
+        dangling = F.sum(F.when(F.col("dangling"), F.col("v")))
+        has_out = P.select("i", F.lit(False).alias("dangling")).distinct()
+        r, obs = _observe(
+            _nodes(A.nrows).join(has_out, on="i", how="left_outer")
+                           .select("i", start.alias("v"),
+                                   F.coalesce("dangling", F.lit(True))
+                                    .alias("dangling")),
+            dang=dangling)
+        r = cache.persist(r, eager=True)
+        dang = obs.get["dang"]
         for _ in range(iters):
-            dang = (r.join(has_out, on="i", how="left_anti")
-                     .agg(F.coalesce(F.sum("v"), F.lit(0.0)).alias("_d")))
             contrib = (P.alias("P")
                         .join(r.alias("r"), F.col("P.i") == F.col("r.i"))
                         .select(F.col("P.j").alias("i"),
                                 (F.col("P.v") * F.col("r.v")).alias("c"))
                         .groupBy("i").agg(F.sum("c").alias("s")))
-            r_new = (nodes.join(contrib, on="i", how="left_outer")
-                          .crossJoin(dang)
-                          .select("i", update(F.coalesce("s", F.lit(0.0)),
-                                              F.col("_d")).alias("v"))
-                          .localCheckpoint(eager=True))
-            done = tol > 0 and (
-                r_new.alias("a").join(r.alias("b"), on="i")
-                     .agg(F.sum(F.abs(F.col("a.v") - F.col("b.v"))))
-                     .collect()[0][0] < tol)
-            r = r_new
-            if done:
+            step = (r.join(contrib, on="i", how="left_outer")
+                     .select("i", "dangling", F.col("v").alias("_old"),
+                             update(F.coalesce("s", F.lit(0.0)),
+                                    F.lit(dang or 0.0)).alias("v")))
+            r, m = _checkpoint(step, dang=dangling,
+                               l1=F.sum(F.abs(F.col("v") - F.col("_old"))))
+            r = r.drop("_old")
+            dang = m["dang"]
+            if tol > 0 and m["l1"] < tol:
                 break
-        return r
+        return r.select("i", "v")
 
 
 def pagerank(A: GrMatrix, damping: float = 0.85, max_iters: int = 20,
@@ -576,7 +653,7 @@ def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
     with _Cache() as cache:
-        _, (edges_i,) = _edge_prelude(A, cache, "i")
+        (edges_i,) = _edge_prelude(A, cache, "i")
         nodes = _nodes(A.nrows)
         x = nodes.select("i", F.lit(float(beta)).alias("x"))
         for _ in range(iters):
@@ -601,11 +678,12 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
 
     Same plan shape as pagerank: each half-step is one join + map-side
     aggregate against the cached adjacency, the normalizer is an
-    in-plan 1-row aggregate (crossJoined, broadcast by Spark) so every
-    iteration is exactly one job per half-step, and localCheckpoint
-    bounds the plan tree. Fixed iterations, no driver convergence
-    reads — fully replayable as unrolled SQL CTEs (final values rounded
-    to 6 decimals absorb distributed-sum drift, the q37 precedent).
+    in-plan 1-row aggregate (crossJoined, broadcast by Spark) so each
+    half-step is one action, its checkpoint, which also bounds the plan
+    tree (about 10 jobs under AQE; see the module docstring). Fixed
+    iterations, no convergence value read back — fully replayable as
+    unrolled SQL CTEs (final values rounded to 6 decimals absorb
+    distributed-sum drift, the q37 precedent).
 
     Returns a DataFrame (i, hub, authority) over all n vertices
     (isolated vertices carry 0.0)."""
@@ -619,7 +697,7 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
         # iteration (measured 87.6 s -> 41.2 s at 20M edges on local[32],
         # together with checkpointing a before h consumes it — otherwise
         # h's checkpoint re-executes a's whole plan)
-        _, (edges_i, edges_j) = _edge_prelude(A, cache, "i", "j")
+        edges_i, edges_j = _edge_prelude(A, cache, "i", "j")
         nodes = _nodes(n)
         h = nodes.select("i", F.lit(1.0 / n).alias("h"))
         for _ in range(iters):
@@ -914,26 +992,25 @@ def k_truss(A: GrMatrix, k: int = 4, max_iters: int = 30) -> DataFrame:
 
     Plan per round: one degree agg + one wedge self-join bounded by
     oriented out-degree (arboricity bound — no deg² hub blowup) + one
-    closing equi-join + an edge-count agg; the surviving edge set is
-    eagerly checkpointed each round (lineage cut, the iterative-loop
-    house rule) and the convergence check rides the same count.
+    closing equi-join; the surviving edge set is eagerly checkpointed
+    each round (lineage cut, the iterative-loop house rule), and the
+    convergence check reads its size observed on that same action.
 
     Output: (a, b, support) for the surviving canonical edges, with
     their fixpoint support."""
     if k < 3:
         raise ValueError("k_truss requires k >= 3")
-    und = _undirected(A, "a", "b").localCheckpoint(eager=True)
-    n_prev = und.count()
+    und, counts = _checkpoint(_undirected(A, "a", "b"))
+    n_prev = counts["n"]
     if n_prev == 0:
         return und.withColumn("support", F.lit(None).cast("bigint"))
     for _ in range(max_iters):
         # prior rounds carry a support column — re-derive it fresh
         sup = _edge_support(und.select("a", "b"))
-        kept = (und.select("a", "b").join(sup, on=["a", "b"])
-                   .where(F.col("support") >= k - 2)
-                   .localCheckpoint(eager=True))
-        n = kept.count()
-        und = kept
+        und, counts = _checkpoint(
+            und.select("a", "b").join(sup, on=["a", "b"])
+               .where(F.col("support") >= k - 2))
+        n = counts["n"]
         if n == n_prev or n == 0:
             break
         n_prev = n

@@ -139,6 +139,11 @@ def resolve_index(idx, size: int | None, spark: SparkSession) -> ResolvedIndex:
         # negative indices need a known size to resolve
         if arr.size and arr.min() < 0:
             raise IndexOutOfBound("negative index requires a known size")
+        # a uint64 index past the int64 coordinate range would wrap
+        # negative in the cast below
+        if arr.size and arr.max() > np.iinfo(np.int64).max:
+            raise IndexOutOfBound(f"index {arr.max()} beyond the int64 "
+                                  "coordinate range")
         arr = arr.astype("int64")
     else:
         arr = np.where(arr < 0, arr + size, arr).astype("int64")

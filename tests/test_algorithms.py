@@ -84,6 +84,74 @@ def test_pagerank(spark):
     assert sum(pr.values()) == pytest.approx(1.0, rel=1e-6)
 
 
+def test_multi_round_loops_on_a_path(spark):
+    """SSSP, BFS and components on a path longer than 2 *
+    _CHECKPOINT_EVERY: later rounds merge a checkpointed frontier into a
+    checkpointed state, the shape in which Spark's union-constraint
+    inference failed. One more vertex stays isolated."""
+    n = 4 * alg._CHECKPOINT_EVERY + 3
+    rows = list(range(n - 1)) + list(range(1, n))
+    cols = list(range(1, n)) + list(range(n - 1))
+    A = gb.Matrix.from_values(rows, cols, [1.0] * len(rows),
+                              nrows=n + 1, ncols=n + 1)
+    assert alg.sssp(A, 0).to_dict() == {i: float(i) for i in range(n)}
+    assert alg.bfs_level(A, 0).to_dict() == {i: i for i in range(n)}
+    assert alg.connected_components(A).to_dict() == {
+        **{i: 0 for i in range(n)}, n: n}
+
+
+def test_improved_keeps_the_candidate_size_estimate(spark):
+    """A checkpoint keeps its source plan's size estimate, so a frontier
+    whose estimate took in the state's would compound round over round
+    until planning stalls (a 64-round SSSP did)."""
+    from pyspark.sql import functions as F
+
+    def estimate(df):
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(str(stats.sizeInBytes()))
+
+    cand = spark.range(3).select(F.col("id").alias("i"),
+                                 F.col("id").cast("double").alias("v"))
+    cur = spark.range(10**6).select(F.col("id").alias("i"),
+                                    F.lit(0.0).alias("v"))
+    assert estimate(alg._improved(cand, cur)) == estimate(cand)
+
+
+def test_loop_rounds_run_no_count_or_collect(spark, monkeypatch):
+    """A loop round is one action: the frontier size, the dangling mass
+    and the L1 change are observed on the round's checkpoint, so no
+    DataFrame.count or collect happens after a loop's first checkpoint;
+    only the prelude's eager persists count. The peeling loops observe
+    their counts the same way."""
+    DataFrame = type(spark.range(0))
+    events = []
+    for name in ("count", "collect", "localCheckpoint"):
+        orig = getattr(DataFrame, name)
+
+        def spy(self, *args, _orig=orig, _name=name, **kwargs):
+            events.append(_name)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    A = fastsv_matrix(spark).wait()
+    W = gb.Matrix.from_values([0, 0, 1, 2, 1], [1, 2, 2, 3, 3],
+                              [1.0, 4.0, 2.0, 1.0, 7.0], nrows=4,
+                              ncols=4).wait()
+    cycle = gb.Matrix.from_values([0, 1, 2], [1, 2, 0], [1, 1, 1],
+                                  nrows=3, ncols=3).wait()
+    runs = [lambda: alg.bfs_level(A, 0), lambda: alg.sssp(W, 0),
+            lambda: alg.k_core(A, 2), lambda: alg.k_truss(A, 3),
+            lambda: alg.pagerank(cycle, max_iters=20, tol=1e-9)]
+    for run in runs:
+        events.clear()
+        run()
+        assert "localCheckpoint" in events
+        in_loop = events[events.index("localCheckpoint"):]
+        assert "count" not in in_loop and "collect" not in in_loop, events
+    # pagerank stopped on its observed L1 change, before max_iters
+    assert events.count("localCheckpoint") < 20
+
+
 def test_symmetrize(spark):
     A = gb.Matrix.from_values([0], [1], [5], nrows=2, ncols=2)
     S = alg.symmetrize(A)

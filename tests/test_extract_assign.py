@@ -38,6 +38,19 @@ def test_extract_out_of_bounds(v):
         v[7]
 
 
+def test_extract_unknown_size_rejects_uint64_past_int64(spark):
+    """A from_dataframe wrapper has no size, so no bounds check; a uint64
+    index of 2**63 or more must still not wrap to a negative int64."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    u = gb.Vector.from_dataframe(
+        spark.range(3).select(F.col("id").alias("i"), F.col("id").alias("v")))
+    with pytest.raises(gb.IndexOutOfBound):
+        u[np.array([1, 2**63], dtype="uint64")].new()
+    assert u[np.array([1, 2], dtype="uint64")].new().to_dict() == {0: 1, 1: 2}
+
+
 def test_matrix_extract_forms(A):
     M = gb.Matrix.from_values([k[0] for k in A_DATA], [k[1] for k in A_DATA],
                               list(A_DATA.values()), nrows=7, ncols=7)
