@@ -3,19 +3,19 @@ semiring primitives.
 
 GraphX has no Python API in Apache Spark, so the loops are what
 GraphFrames runs under the hood: DataFrame message-aggregation rounds,
-with a checkpoint every few rounds to cut lineage (SURVEY.md section 4).
+with a checkpoint every round to cut lineage (SURVEY.md section 4).
 Each algorithm supplies only its own step; three shared pieces do the
 rest.
 
 * ``_frontier_loop`` — the semi-naive fixpoint of ``bfs_level``, ``sssp``
   and ``connected_components``. It partitions the adjacency once by
-  source (``_prep_adjacency``), then per round asks the algorithm's step
-  for the next frontier (``frontier vxm A``, filtered to what improved)
-  and a merge into the state, checkpoints the frontier and reads its
-  size from an Observation on that same action (one action per round),
-  stops when it is empty, and checkpoints the state every
-  ``_CHECKPOINT_EVERY`` rounds. Components' pointer jump is its own step
-  every ``_JUMP_EVERY`` rounds.
+  source (``_prep_adjacency``). Its state (i, v, _a) marks the frontier
+  in ``_a``; per round the algorithm's step turns the state and its
+  frontier (``frontier vxm A``) into the next state, which is
+  checkpointed once, with its size and its frontier's observed on that
+  same action (one action per round). The loop stops when the frontier
+  is empty. Components' pointer jump is its own step every
+  ``_JUMP_EVERY`` rounds.
 * ``_power_iteration`` — ``pagerank`` and ``personalized_pagerank``: the
   degree-normalized transition matrix (``_transition``) and the
   contribution aggregate, one checkpoint per iteration that also
@@ -31,11 +31,23 @@ rest.
   eagerly checkpointed first, so it no longer reads the caches being
   released.
 
+The loops are round-invariant: every round after the first runs the
+plan the first ran, so it reuses the classes Spark compiled for it
+(Spark's codegen cache is keyed by the generated code and holds 100 of
+them by default). Three rules keep it so. A value that changes per round
+rides in the data, never in a literal: a BFS level is its frontier's
+plus one, and PageRank's dangling mass is a cross-joined local row
+(``_scalars``). Every join is hinted from a count the driver already
+holds (``_sized``): a checkpoint keeps its source plan's size estimate,
+joins multiply estimates, so estimates grow every round and a join left
+to Spark changes strategy. And every state checkpoint has one schema,
+nullability included (``_non_null``).
+
 One action is not one job: under AQE every exchange's map stage runs as
 a job of its own. Traced on a 1024-vertex, 21k-edge R-MAT graph on 4
-cores, a BFS round runs 3-4 jobs, a components round 2-6 (its pointer
-jump round 15), a PageRank iteration 5, a Katz iteration 5 and a HITS
-iteration 20.
+cores, a BFS round runs 3 jobs, a components round 3 (its pointer-jump
+round 6), a PageRank iteration 3, a Katz iteration 3 and a HITS
+iteration 6.
 
 Every partition count comes from ``partitions.partitions_for_rows``.
 Frontier loops ship only the CHANGED entries each round; dense-state
@@ -47,15 +59,17 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
-from .core import GrMatrix, GrVector, get_session
+from .core import _BROADCAST_NVALS_LIMIT, GrMatrix, GrVector, get_session
 from .dtypes import FP64, INT64
 from .operators import semiring
 from .partitions import partitions_for_rows, sized_range
+from .plans.local import local_df
 
 __all__ = ["bfs_level", "sssp", "connected_components", "pagerank",
            "triangle_count", "symmetrize", "with_singletons", "k_core",
@@ -66,16 +80,16 @@ __all__ = ["bfs_level", "sssp", "connected_components", "pagerank",
            "capped_hub_count", "eccentricity", "harmonic_centrality",
            "modularity", "rich_club", "degree_histogram"]
 
-# Lineage growth between checkpoints is GEOMETRIC for min-merge loops:
-# each iteration's state plan nests the previous state ~3x (improved
-# references labels, merge references labels + improved), so the plan
-# tree between checkpoints grows ~3^k nodes and the DRIVER starts
-# spending its time in generateTreeString (every job start stringifies
-# the executed plan for the SQL listener — InMemoryRelation innerChildren
-# included, so persist() does NOT cap it). Measured on a 100k-vertex /
-# 1M-edge graph: checkpoint-every-5 left the driver single-threaded in
+# _minplus_closure checkpoints its closure every _CHECKPOINT_EVERY
+# rounds. Lineage growth between checkpoints is GEOMETRIC for min-merge
+# loops: each round's plan nests the previous one ~3x, so the plan tree
+# grows ~3^k nodes between checkpoints and the DRIVER starts spending its
+# time in generateTreeString (every job start stringifies the executed
+# plan for the SQL listener). Measured on a 100k-vertex / 1M-edge graph:
+# checkpoint-every-5 left the driver single-threaded in
 # TreeNode.generateTreeString for minutes; every-2 (GraphFrames' default
 # checkpointInterval) bounds the tree at ~9x base and removed the stall.
+# The frontier loop and the power iterations checkpoint every round.
 _CHECKPOINT_EVERY = 2
 # connected_components runs a FastSV pointer-jump round every _JUMP_EVERY
 # iterations (see its step for the cost/convergence trade)
@@ -183,34 +197,32 @@ def _degrees(und: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
                .groupBy("_n").agg(F.count("*").alias("_d")))
 
 
-def _improved(cand_df: DataFrame, cur_df: DataFrame) -> DataFrame:
-    """Entries of cand that are new or strictly smaller than current —
-    the GraphBLAS `w(accum=min)` frontier trick as one anti join (no
-    current entry at or below the candidate).
-
-    A checkpoint keeps its source plan's size estimate, and an anti
-    join's estimate is its left side's alone. With a left join here the
-    frontier's estimate would take in the state's and the merged state's
-    the frontier's, so the estimates' digit counts grow geometrically
-    with the rounds until planning stalls (seen on a 64-vertex path)."""
-    c = cand_df.alias("c")
-    o = cur_df.alias("o")
-    return c.join(o, (F.col("c.i") == F.col("o.i"))
-                  & (F.col("o.v") <= F.col("c.v")), "left_anti")
+def _sized(df: DataFrame, rows: int) -> DataFrame:
+    """``df`` with a join strategy hint chosen from ``rows``, a count or
+    bound the driver already holds (an observed ``n``, a vector size):
+    a broadcast up to ``_BROADCAST_NVALS_LIMIT``, a sort-merge join
+    above it. A loop's checkpoints keep their source plans' size
+    estimates, which grow every round, so a join left to Spark would
+    change strategy from round to round."""
+    return df.hint("broadcast" if rows <= _BROADCAST_NVALS_LIMIT
+                   else "merge")
 
 
-def _merge_min(cur_df: DataFrame, imp_df: DataFrame,
-               how: str = "full_outer") -> DataFrame:
-    """Overwrite current entries with improved ones (imp wins), as one
-    outer join; ``how="left_outer"`` when every improved key is a
-    current key already. It keeps the checkpointed imp out of a Union:
-    Spark 4.1's ``InferFiltersFromConstraints`` failed there (``key not
-    found`` in ``UnionBase.rewriteConstraints``) while ``_improved`` was
-    a left join, and an anti join plus union ran 53 jobs where this
-    runs 41 (components, 1024-vertex R-MAT, 4 rounds)."""
-    return (cur_df.join(imp_df.withColumnRenamed("v", "_v"), on="i",
-                        how=how)
-                  .select("i", F.coalesce("_v", "v").alias("v")))
+def _merge_min(cur_df: DataFrame, cand_df: DataFrame, cand_rows: int,
+               *extra) -> DataFrame:
+    """The next loop state (i, v, _a): each current entry lowered to its
+    candidate where that is smaller (the GraphBLAS ``w(accum=min)``),
+    ``_a`` marking the lowered, plus the current columns named in
+    ``extra``. Every candidate key is a current key, so this is one left
+    outer join, its candidate side (at most ``cand_rows`` rows) sized by
+    ``_sized``."""
+    cand = _sized(cand_df.select("i", F.col("v").alias("_v")), cand_rows)
+    lower = F.col("_v") < F.col("v")  # null without a candidate
+    return (cur_df.join(cand, on="i", how="left_outer")
+                  .select("i", F.when(lower, F.col("_v"))
+                                .otherwise(F.col("v")).alias("v"),
+                          F.coalesce(lower, F.lit(False)).alias("_a"),
+                          *extra))
 
 
 def _entries(A: GrMatrix, cache: _Cache, factor: int = 1):
@@ -230,11 +242,8 @@ def _prep_adjacency(A: GrMatrix, cache: _Cache, undirected: bool = False):
     bound, for A | A.T), so every round's join reuses one exchange.
     Returns (adjacency, partitions); the partition count also sizes the
     loop state. One action (the eager persist of the partitioned
-    adjacency), plus a count when A's ``nvals`` is not known yet.
-
-    A directed input that fits one partition and already sits in a few
-    splits is reused as is, with no action: frontier sides broadcast, so
-    source partitioning only helps the huge-frontier shuffle join."""
+    adjacency), plus a count when A's ``nvals`` is not known yet. Every
+    round reads the same cached relation, whatever A's own leaf is."""
     raw, parts = _entries(A, cache, 2 if undirected else 1)
     if undirected:
         # symmetrize's A | A.T (max combine): one scan of A emits both
@@ -245,8 +254,6 @@ def _prep_adjacency(A: GrMatrix, cache: _Cache, undirected: bool = False):
         base = (raw.select(both.alias("e")).select("e.*")
                    .repartition(parts, "i")
                    .groupBy("i", "j").agg(F.max("v").alias("v")))
-    elif parts == 1 and raw.rdd.getNumPartitions() <= 4:
-        return GrMatrix(cache.persist(raw), A.dtype, A.nrows, A.ncols), parts
     else:
         base = raw.repartition(parts, "i")
     adj = cache.persist(base, eager=True)
@@ -254,64 +261,81 @@ def _prep_adjacency(A: GrMatrix, cache: _Cache, undirected: bool = False):
     return GrMatrix(adj, A.dtype, A.nrows, A.ncols), parts
 
 
+def _vector(df: DataFrame, like: GrVector, nvals: int) -> GrVector:
+    """``df`` as a vector shaped like ``like``, with ``nvals`` known."""
+    out = GrVector(df, like.dtype, like.size)
+    out._nvals_cache = nvals
+    return out
+
+
 def _frontier_loop(A: GrMatrix, start, step,
                    undirected: bool = False) -> GrVector:
     """Run a frontier fixpoint to convergence and return its state.
 
-    ``start(adj)`` gives the initial state, which is also the first
-    frontier. ``step(rnd, state, frontier, adj, keep)`` returns
-    ``(delta, merge)``: the next frontier's rows and a function from the
-    checkpointed frontier DataFrame to the next state's DataFrame.
-    ``keep`` persists a DataFrame as round state, sized like the loop.
-    Each frontier is eagerly checkpointed, and its size is observed on
-    that same action, so a round is one action; the state is
-    checkpointed every ``_CHECKPOINT_EVERY`` rounds, which also releases
-    the round caches. The loop stops on the first empty frontier,
-    keeping the state that produced it."""
+    The loop state is (i, v, _a), where ``_a`` marks the frontier, the
+    entries that changed last round. ``start(adj)`` gives the initial
+    (i, v), all of it on the frontier. ``step(rnd, state, frontier, adj,
+    keep)`` returns the next (i, v, _a); ``state`` and ``frontier`` are
+    vectors whose ``nvals`` are known, and ``keep`` persists a DataFrame
+    for the round, sized like the loop. A round is one action: the next
+    state is eagerly checkpointed, and its size and its frontier's are
+    observed on that action. The loop stops on an empty frontier.
+
+    Every round after the first runs one plan, so it compiles no new
+    code: each reads a checkpoint of the same schema (``_non_null``),
+    round values ride in the data, and each join is hinted from a count
+    the driver holds (``_sized``)."""
     with _Cache() as cache, _Cache() as rounds:
         adj, parts = _prep_adjacency(A, cache, undirected)
+        init = start(adj.df)
 
         def keep(df):
             return rounds.persist(df.coalesce(parts))
 
-        init = start(adj.df)
+        def advance(df):
+            return _checkpoint(_non_null(df, i="0", v="0", _a="false")
+                               .coalesce(parts),
+                               front=F.count_if("_a"))
 
-        def frontier_of(df):
-            ckpt, m = _checkpoint(df.coalesce(parts))
-            out = GrVector(ckpt, init.dtype, init.size)
-            out._nvals_cache = m["n"]
-            return out
-
-        state = frontier = frontier_of(init.df)
+        state, m = advance(init.df.select("i", "v", F.lit(True).alias("_a")))
         rnd = 0
-        while frontier.nvals > 0:
+        while m["front"]:
             rnd += 1
-            delta, merge = step(rnd, state, frontier, adj, keep)
-            nxt = frontier_of(delta)
-            if nxt.nvals == 0:
-                break
-            state = GrVector(merge(nxt.df), state.dtype, state.size)
-            frontier = nxt
-            if rnd % _CHECKPOINT_EVERY == 0:
-                # cut the state's lineage, which grows by merge; nothing
-                # reads the round caches after that
-                state.checkpoint(compact=True)
-                rounds.release()
-        return state.checkpoint(compact=True)
+            cur = _vector(state.select("i", "v"), init, m["n"])
+            frontier = _vector(state.where("_a").select("i", "v"), init,
+                               m["front"])
+            state, m = advance(step(rnd, cur, frontier, adj, keep))
+            rounds.release()
+        return _vector(state.select("i", "v"), init, m["n"])
+
+
+def _non_null(df: DataFrame, **defaults: str) -> DataFrame:
+    """The columns named by ``defaults`` of ``df``, each declared
+    non-null, for a loop state about to be checkpointed; each default is
+    a SQL literal that never applies. A stored entry never is null, but
+    aggregates, outer joins, divisions and nullable input files say their
+    columns may be, so the first state (from driver values) and later
+    ones would be checkpoints of different schemas, and the plans over
+    them would compile different code."""
+    return df.selectExpr(*(f"coalesce({c}, {d}) AS {c}"
+                           for c, d in defaults.items()))
 
 
 def bfs_level(A: GrMatrix, source: int) -> GrVector:
-    """Level-synchronous BFS: frontier vxm with the any_pair semiring,
-    complement-mask pushdown keeps visited vertices out of the join."""
+    """Level-synchronous BFS: frontier vxm with the min_first semiring,
+    complement-mask pushdown keeps visited vertices out of the join. A
+    new vertex's level is its frontier's plus one, so no round number
+    enters the plan."""
     def start(adj):
         return GrVector.from_values([source], [0], size=A.nrows,
                                     dtype=INT64)
 
     def step(rnd, levels, frontier, adj, keep):
         # mask pushdown: unvisited only (anti join BEFORE the agg)
-        new = frontier.vxm(adj, semiring.any_pair).new(mask=~levels.S)
-        delta = new.df.select("i", F.lit(rnd).cast("bigint").alias("v"))
-        return delta, lambda fr: levels.df.unionByName(fr)
+        new = frontier.vxm(adj, semiring.min_first).new(mask=~levels.S)
+        return (levels.df.select("i", "v", F.lit(False).alias("_a"))
+                .unionByName(new.df.select("i", (F.col("v") + 1).alias("v"),
+                                           F.lit(True).alias("_a"))))
 
     return _frontier_loop(A, start, step)
 
@@ -325,9 +349,22 @@ def sssp(A: GrMatrix, source: int) -> GrVector:
                                     dtype=FP64)
 
     def step(rnd, dist, frontier, adj, keep):
+        # one aggregate over the distances and the candidates: a vertex
+        # joins the next frontier when a candidate beats its distance or
+        # it had none. The exchange by i is explicit: the first state is
+        # one partition and later ones are not, so the aggregate would
+        # skip its own exchange in round 1 only (and a shuffled join
+        # would choose its exchanges from the growing size estimates).
         cand = frontier.vxm(adj, semiring.min_plus).new()
-        return (_improved(cand.df, dist.df),
-                lambda fr: _merge_min(dist.df, fr))
+        both = (dist.df.select("i", "v", F.lit(False).alias("_c"))
+                .unionByName(cand.df.select("i", "v",
+                                            F.lit(True).alias("_c"))))
+        best = both.repartition("i").groupBy("i").agg(
+            F.min(F.when(~F.col("_c"), F.col("v"))).alias("_o"),
+            F.min(F.when(F.col("_c"), F.col("v"))).alias("_n"))
+        return best.select("i", F.least("_o", "_n").alias("v"),
+                           F.coalesce(F.col("_n") < F.col("_o"),
+                                      F.col("_o").isNull()).alias("_a"))
 
     return _frontier_loop(A, start, step)
 
@@ -361,10 +398,9 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
     def step(rnd, labels, changed, adj, keep):
         # candidate label for j = min over in-neighbors i of label[i]
         cand = changed.vxm(adj, semiring.min_first).new()
-        imp = _improved(cand.df, labels.df)
         if rnd % _JUMP_EVERY:
-            # cheap frontier round: only the improved entries move
-            return imp, lambda fr: _merge_min(labels.df, fr, "left_outer")
+            # cheap frontier round: only the lowered labels move
+            return _merge_min(labels.df, cand.df, labels.nvals)
         # FastSV shortcut round (pointer jumping): l[i] <- l[l[i]].
         # Labels are vertex ids with the invariant l[v] <= v, so l is
         # defined at every label value and jumping only decreases. Run
@@ -373,23 +409,18 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
         # near-dup chains) — while a periodic shortcut halves pointer
         # depth per jump, bounding the loop at O(log n) jump phases.
         # Small-diameter graphs finish before paying for many jumps.
-        # Cost: two n-row self-joins, so not done every round.
-        merged = keep(_merge_min(labels.df, imp, "left_outer"))
-        m, p = merged.alias("m"), merged.alias("p")
-        jumped = keep(
-            m.join(p, F.col("m.v") == F.col("p.i"), "left_outer")
-             .select(F.col("m.i").alias("i"),
-                     F.least(F.col("m.v"), F.coalesce(F.col("p.v"),
-                                                      F.col("m.v")))
-                      .alias("v")))
+        # Cost: an n-row self-join, so not done every round.
+        merged = keep(_merge_min(labels.df, cand.df, labels.nvals,
+                                 F.col("v").alias("_old")))
+        m = merged.alias("m")
+        p = _sized(merged, labels.nvals).alias("p")
+        jumped = F.least(F.col("m.v"), F.coalesce(F.col("p.v"), F.col("m.v")))
         # re-propagate every vertex whose label moved this round (by
         # neighbor min OR by shortcut — a shortcut move must still be
         # announced to neighbors)
-        moved = (jumped.alias("nw")
-                 .join(labels.df.alias("od"), F.col("nw.i") == F.col("od.i"))
-                 .filter(F.col("nw.v") < F.col("od.v"))
-                 .select(F.col("nw.i").alias("i"), F.col("nw.v").alias("v")))
-        return moved, lambda fr: jumped
+        return (m.join(p, F.col("m.v") == F.col("p.i"), "left_outer")
+                 .select(F.col("m.i").alias("i"), jumped.alias("v"),
+                         (jumped < F.col("m._old")).alias("_a")))
 
     return _frontier_loop(A, start, step, undirected=True)
 
@@ -531,45 +562,67 @@ def _transition(A: GrMatrix, cache: _Cache) -> DataFrame:
     return P
 
 
+def _scalars(**values) -> DataFrame:
+    """One row of non-null doubles, named by ``values``, as a local
+    relation to cross join into a round's plan: a literal would put the
+    value in the generated code, so every new value would compile new
+    classes. The ``shuffle_replicate_nl`` hint makes the cross join a
+    cartesian product, which unlike a broadcast runs no job of its own."""
+    schema = T.StructType([T.StructField(k, T.DoubleType(), False)
+                           for k in values])
+    return local_df(get_session(), schema,
+                    [[float(v)] for v in values.values()]
+                    ).hint("shuffle_replicate_nl")
+
+
 def _power_iteration(A: GrMatrix, start, update, iters: int,
                      tol: float = 0.0) -> DataFrame:
     """r_{t+1} = update(s, dang) over the dense vertex frame, where
     s(j) = sum over i->j of r_t(i) / outdeg(i) and dang = the total rank
-    on vertices with no out-edge; r_0 = start. Stops early once the L1
-    change drops below ``tol`` (never with tol = 0). Returns (i, v).
+    on vertices with no out-edge; r_0 = start. ``dang`` is a column, so
+    ``update`` builds the same expression in every iteration. Stops
+    early once the L1 change drops below ``tol`` (never with tol = 0).
+    Returns (i, v).
 
-    The rank state (i, v, dangling) is also the vertex frame, so an
-    iteration is r left-joined with the contribution aggregate and
+    The rank state (i, dangling, v, _old) is also the vertex frame, so
+    an iteration is r left-joined with the contribution aggregate and
     checkpointed once: that checkpoint is the iteration's only action,
     and the scalars the loop reads back (the next dangling mass, the L1
-    change) are observed on it. r_0 is an eager persist that observes
-    the first dangling mass."""
+    change) are observed on it. r_0 is a checkpoint of the same schema
+    that observes the first dangling mass, so every iteration reads the
+    same kind of leaf and runs one plan; the dangling mass enters it as
+    a cross-joined local row (``_scalars``), and every join is hinted
+    from the vertex count (``_sized``)."""
+    n = A.nrows
     with _Cache() as cache:
         P = _transition(A, cache)
         dangling = F.sum(F.when(F.col("dangling"), F.col("v")))
         has_out = P.select("i", F.lit(False).alias("dangling")).distinct()
-        r, obs = _observe(
-            _nodes(A.nrows).join(has_out, on="i", how="left_outer")
-                           .select("i", start.alias("v"),
-                                   F.coalesce("dangling", F.lit(True))
-                                    .alias("dangling")),
+
+        def rank_state(df):
+            return _non_null(df, i="0", dangling="false", v="0", _old="0")
+
+        r, m = _checkpoint(rank_state(
+            _nodes(n).join(_sized(has_out, n), on="i", how="left_outer")
+                     .select("i", F.coalesce("dangling", F.lit(True))
+                                   .alias("dangling"),
+                             start.alias("v"), start.alias("_old"))),
             dang=dangling)
-        r = cache.persist(r, eager=True)
-        dang = obs.get["dang"]
         for _ in range(iters):
             contrib = (P.alias("P")
-                        .join(r.alias("r"), F.col("P.i") == F.col("r.i"))
+                        .join(_sized(r, n).alias("r"),
+                              F.col("P.i") == F.col("r.i"))
                         .select(F.col("P.j").alias("i"),
                                 (F.col("P.v") * F.col("r.v")).alias("c"))
                         .groupBy("i").agg(F.sum("c").alias("s")))
-            step = (r.join(contrib, on="i", how="left_outer")
-                     .select("i", "dangling", F.col("v").alias("_old"),
+            step = (r.join(_sized(contrib, n), on="i", how="left_outer")
+                     .crossJoin(_scalars(_dang=m["dang"] or 0.0))
+                     .select("i", "dangling",
                              update(F.coalesce("s", F.lit(0.0)),
-                                    F.lit(dang or 0.0)).alias("v")))
-            r, m = _checkpoint(step, dang=dangling,
+                                    F.col("_dang")).alias("v"),
+                             F.col("v").alias("_old")))
+            r, m = _checkpoint(rank_state(step), dang=dangling,
                                l1=F.sum(F.abs(F.col("v") - F.col("_old"))))
-            r = r.drop("_old")
-            dang = m["dang"]
             if tol > 0 and m["l1"] < tol:
                 break
         return r.select("i", "v")
@@ -647,20 +700,21 @@ def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
     iterations and no normalization keep the trajectory deterministic
     and replayable as unrolled SQL CTEs (same discipline as pagerank /
     hits). Plan: one join + map-side aggregate per step against the
-    cached source-partitioned edge relation; localCheckpoint bounds
-    the plan tree. Output: (i, katz rounded 6) over all n vertices
+    cached source-partitioned edge relation, joins hinted from the
+    vertex count (``_sized``); localCheckpoint bounds the plan tree. Output: (i, katz rounded 6) over all n vertices
     (isolated vertices carry beta)."""
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
+    n = A.nrows
     with _Cache() as cache:
         (edges_i,) = _edge_prelude(A, cache, "i")
-        nodes = _nodes(A.nrows)
+        nodes = _nodes(n)
         x = nodes.select("i", F.lit(float(beta)).alias("x"))
         for _ in range(iters):
-            contrib = (edges_i.join(x, on="i")
+            contrib = (edges_i.join(_sized(x, n), on="i")
                               .groupBy(F.col("j").alias("i"))
                               .agg(F.sum("x").alias("s")))
-            x = (nodes.join(contrib, on="i", how="left")
+            x = (nodes.join(_sized(contrib, n), on="i", how="left")
                       .select("i", (F.lit(float(beta))
                                     + F.lit(float(alpha))
                                     * F.coalesce(F.col("s"), F.lit(0.0)))
@@ -677,13 +731,14 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
         h_i <- sum_{i->j} a_j ;  h <- h / sum(h)
 
     Same plan shape as pagerank: each half-step is one join + map-side
-    aggregate against the cached adjacency, the normalizer is an
-    in-plan 1-row aggregate (crossJoined, broadcast by Spark) so each
-    half-step is one action, its checkpoint, which also bounds the plan
-    tree (about 10 jobs under AQE; see the module docstring). Fixed
-    iterations, no convergence value read back — fully replayable as
-    unrolled SQL CTEs (final values rounded to 6 decimals absorb
-    distributed-sum drift, the q37 precedent).
+    aggregate against the cached adjacency, checkpointed once, which
+    also bounds the plan tree; the checkpoint holds the unnormalized
+    sums and observes their total, and the next half-step divides by
+    that total as it reads them, from a cross-joined local row
+    (``_scalars``), so the normalizer costs no job. Every join is hinted
+    from the vertex count (``_sized``). Fixed iterations, no convergence
+    test — fully replayable as unrolled SQL CTEs (final values rounded
+    to 6 decimals absorb distributed-sum drift, the q37 precedent).
 
     Returns a DataFrame (i, hub, authority) over all n vertices
     (isolated vertices carry 0.0)."""
@@ -699,30 +754,36 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
         # h's checkpoint re-executes a's whole plan)
         edges_i, edges_j = _edge_prelude(A, cache, "i", "j")
         nodes = _nodes(n)
-        h = nodes.select("i", F.lit(1.0 / n).alias("h"))
+        h, t_h = nodes.select("i", F.lit(1.0 / n).alias("h")), 1.0
         for _ in range(iters):
-            a = _hits_step(edges_i, h, nodes, "i", "j", "a")
-            h = _hits_step(edges_j, a, nodes, "j", "i", "h")
-        return (h.join(a, on="i")
-                 .select("i", F.round("h", 6).alias("hub"),
-                         F.round("a", 6).alias("authority")))
+            a, t_a = _hits_step(edges_i, h, t_h, nodes, n, "i", "j", "a")
+            h, t_h = _hits_step(edges_j, a, t_a, nodes, n, "j", "i", "h")
+        return (h.join(a, on="i").crossJoin(_scalars(_th=t_h, _ta=t_a))
+                 .select("i", F.round(_share("h", "_th"), 6).alias("hub"),
+                         F.round(_share("a", "_ta"), 6).alias("authority")))
 
 
-def _hits_step(edges, x, nodes, src, dst, col):
-    """One HITS half-step, checkpointed: col(v) = sum of x over the edges
-    src -> v, for every vertex, L1-normalized (all 0 when the total is
-    0)."""
-    raw = (edges.join(x.withColumnRenamed("i", src), on=src)
+def _share(col: str, total: str) -> Column:
+    """``col`` over ``total``, or 0 when the total is 0."""
+    return (F.when(F.col(total) != 0, F.col(col) / F.col(total))
+             .otherwise(0.0))
+
+
+def _hits_step(edges, x, total, nodes, n, src, dst, col):
+    """One HITS half-step, checkpointed: col(v) = sum of x / total over
+    the edges src -> v, for every vertex (x / total is x L1-normalized,
+    all 0 when the total is 0). ``nodes`` is the ``n`` vertices. Returns
+    (the unnormalized col, its total, observed on the checkpoint)."""
+    xn = (x.crossJoin(_scalars(_t=total))
+           .select(F.col("i").alias(src), _share(x.columns[1], "_t")
+                   .alias("_x")))
+    raw = (edges.join(_sized(xn, n), on=src)
                 .groupBy(F.col(dst).alias("i"))
-                .agg(F.sum(x.columns[1]).alias(col)))
-    full = (nodes.join(raw, on="i", how="left")
+                .agg(F.sum("_x").alias(col)))
+    full = (nodes.join(_sized(raw, n), on="i", how="left")
                  .select("i", F.coalesce(col, F.lit(0.0)).alias(col)))
-    tot = full.agg(F.sum(col).alias("_t"))
-    return (full.crossJoin(tot)
-                .select("i", F.when(F.col("_t") != 0,
-                                    F.col(col) / F.col("_t"))
-                             .otherwise(0.0).alias(col))
-                .localCheckpoint(eager=True))
+    out, m = _checkpoint(full, t=F.sum(col))
+    return out, m["t"] or 0.0
 
 
 def eccentricity(A: GrMatrix, max_iters: int = 32) -> DataFrame:

@@ -84,37 +84,101 @@ def test_pagerank(spark):
     assert sum(pr.values()) == pytest.approx(1.0, rel=1e-6)
 
 
+def _path(length, size):
+    """An undirected path over vertices 0..length-1 of ``size``, weight 1."""
+    rows = list(range(length - 1)) + list(range(1, length))
+    cols = list(range(1, length)) + list(range(length - 1))
+    return gb.Matrix.from_values(rows, cols, [1.0] * len(rows),
+                                 nrows=size, ncols=size)
+
+
 def test_multi_round_loops_on_a_path(spark):
-    """SSSP, BFS and components on a path longer than 2 *
-    _CHECKPOINT_EVERY: later rounds merge a checkpointed frontier into a
-    checkpointed state, the shape in which Spark's union-constraint
-    inference failed. One more vertex stays isolated."""
+    """SSSP, BFS and components on an 11-vertex path: later rounds merge
+    into a state that is a checkpoint of checkpoints, the shape in which
+    Spark's union-constraint inference failed. One more vertex stays
+    isolated."""
     n = 4 * alg._CHECKPOINT_EVERY + 3
-    rows = list(range(n - 1)) + list(range(1, n))
-    cols = list(range(1, n)) + list(range(n - 1))
-    A = gb.Matrix.from_values(rows, cols, [1.0] * len(rows),
-                              nrows=n + 1, ncols=n + 1)
+    A = _path(n, n + 1)
     assert alg.sssp(A, 0).to_dict() == {i: float(i) for i in range(n)}
     assert alg.bfs_level(A, 0).to_dict() == {i: i for i in range(n)}
     assert alg.connected_components(A).to_dict() == {
         **{i: 0 for i in range(n)}, n: n}
 
 
-def test_improved_keeps_the_candidate_size_estimate(spark):
-    """A checkpoint keeps its source plan's size estimate, so a frontier
-    whose estimate took in the state's would compound round over round
-    until planning stalls (a 64-round SSSP did)."""
-    from pyspark.sql import functions as F
+def test_later_rounds_compile_no_code(spark, monkeypatch):
+    """Every loop round after the first runs the plan the first one ran:
+    round values ride in the data, joins are hinted from counts, and
+    every state checkpoint has one schema, nullability included. So a
+    call with more rounds, on a graph of the same size, after a short
+    call in the same session, compiles no class (Spark's codegen cache
+    is keyed by the generated code)."""
+    metric = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+              .CodegenMetrics.METRIC_COMPILATION_TIME())
+    DataFrame = type(spark.range(0))
+    schemas = []
+    checkpoint = DataFrame.localCheckpoint
 
-    def estimate(df):
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        return int(str(stats.sizeInBytes()))
+    def spy(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        schemas.append(out.schema)
+        return out
 
-    cand = spark.range(3).select(F.col("id").alias("i"),
-                                 F.col("id").cast("double").alias("v"))
-    cur = spark.range(10**6).select(F.col("id").alias("i"),
-                                    F.lit(0.0).alias("v"))
-    assert estimate(alg._improved(cand, cur)) == estimate(cand)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    size = 24
+    short, longer = _path(8, size).wait(), _path(16, size).wait()
+    calls = [
+        ("bfs_level", lambda: alg.bfs_level(short, 0),
+         lambda: alg.bfs_level(longer, 0)),
+        ("sssp", lambda: alg.sssp(short, 0), lambda: alg.sssp(longer, 0)),
+        ("connected_components", lambda: alg.connected_components(short),
+         lambda: alg.connected_components(longer)),
+        ("pagerank", lambda: alg.pagerank(longer, max_iters=2, tol=0),
+         lambda: alg.pagerank(longer, max_iters=6, tol=0)),
+    ]
+    for name, first, more_rounds in calls:
+        first().wait()
+        schemas.clear()
+        before = metric.getCount()
+        more_rounds().wait()
+        assert metric.getCount() == before, name
+        assert len(schemas) > 4 and len(set(schemas)) == 1, (name, schemas)
+
+
+def test_loop_joins_do_not_follow_size_estimates(spark, monkeypatch):
+    """A checkpoint keeps its source plan's size estimate, and joins
+    multiply estimates, so from a few rounds on every loop relation is
+    estimated far above the broadcast threshold. The loops hint their
+    joins from the counts they hold instead: in round 4 and later the
+    state still joins as a broadcast."""
+    jss = spark._jsparkSession
+    threshold = jss.sessionState().conf().autoBroadcastJoinThreshold()
+    DataFrame = type(spark.range(0))
+    rounds = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        store = jss.sharedState().statusStore()
+        last = store.executionsList().last()  # ordered by id
+        stats = self._jdf.queryExecution().optimizedPlan().stats()
+        rounds.append((int(str(stats.sizeInBytes())),
+                       last.physicalPlanDescription()))
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    n = 4 * alg._CHECKPOINT_EVERY + 3
+    assert alg.bfs_level(_path(n, n + 1), 0).nvals == n
+    late = rounds[4:]  # rounds[0] is the first state
+    assert late
+    for size, plan in late:
+        assert size > threshold
+        final = plan[plan.index("Final Plan"):plan.index("Initial Plan")]
+        # the unvisited mask: the candidates anti join the broadcast
+        # state's keys; the frontier broadcasts into the adjacency
+        assert "BroadcastHashJoin LeftAnti BuildRight" in final
+        assert "BroadcastHashJoin Inner BuildLeft" in final
+        assert "SortMergeJoin" not in final
 
 
 def test_loop_rounds_run_no_count_or_collect(spark, monkeypatch):
