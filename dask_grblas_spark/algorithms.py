@@ -4,32 +4,45 @@ semiring primitives.
 GraphX has no Python API in Apache Spark, so the loops are what
 GraphFrames runs under the hood: DataFrame message-aggregation rounds,
 with a checkpoint every round to cut lineage (SURVEY.md section 4).
-Each algorithm supplies only its own step; three shared pieces do the
-rest.
 
-* ``_frontier_loop`` — the semi-naive fixpoint of ``bfs_level``, ``sssp``
-  and ``connected_components``. It partitions the adjacency once by
-  source (``_prep_adjacency``). Its state (i, v, _a) marks the frontier
-  in ``_a``; per round the algorithm's step turns the state and its
-  frontier (``frontier vxm A``) into the next state, which is
-  checkpointed once, with its size and its frontier's observed on that
-  same action (one action per round). The loop stops when the frontier
-  is empty. Components' pointer jump is its own step every
-  ``_JUMP_EVERY`` rounds.
-* ``_power_iteration`` — ``pagerank`` and ``personalized_pagerank``: the
-  degree-normalized transition matrix (``_transition``) and the
-  contribution aggregate, one checkpoint per iteration that also
-  observes the next dangling mass and the L1 change; each caller keeps
-  its own start vector and update expression. ``katz_centrality`` and
-  ``hits`` share the edge prelude (``_edge_prelude``: the adjacency
-  cached once per join key, hash-partitioned by entry count).
-* ``_Cache`` — the one owner of every persist an algorithm makes. It
-  persists only what is not cached already, so a relation someone else
-  cached (the derived-relation cache in ``sources/tpch.py``) is never
-  released here, and releases what it persisted on exit, including when
-  a round raises. Anything returned from inside its ``with`` block is
-  eagerly checkpointed first, so it no longer reads the caches being
-  released.
+Every loop is a case of one driver, ``_fixpoint``: the algorithm supplies
+its start state, its step and its stop test, and the driver owns the
+rest. A round is one action, the eager checkpoint of the next state
+(``_checkpoint``), which also observes the state's size and the scalars
+the loop reads back (a frontier's size, a dangling mass, an L1 change, a
+drop count), so no round runs a count or a collect of its own. Every
+state has one schema, nullability included (``_non_null``); the round's
+persists (``_Cache``) are released once its state is checkpointed; a
+loop that must converge raises ``RuntimeError`` at its round bound. The
+cases:
+
+* ``_frontier_loop`` — ``bfs_level``, ``sssp`` and
+  ``connected_components``: the adjacency is partitioned once by source
+  (``_prep_adjacency``); the state (i, v, _a) marks the frontier in
+  ``_a``, and the loop stops when it is empty. Components' pointer jump
+  is its own step every ``_JUMP_EVERY`` rounds.
+* ``_power_iteration`` — ``pagerank`` and ``personalized_pagerank``
+  over the cached degree-normalized transition matrix
+  (``_transition``); each caller keeps its own start vector and update
+  expression.
+* ``katz_centrality`` and ``hits`` (a round is a HITS half-step): one
+  ``_walk`` per round, a vertex value summed along the distinct edges
+  cached by each join key (``_edge_prelude``).
+* ``label_propagation`` (fixed rounds), ``k_core`` and ``k_truss``
+  (peeling until nothing drops) and ``_minplus_closure``
+  (``eccentricity`` and ``harmonic_centrality``: until the closure
+  stops changing).
+
+A fixed-round loop whose first state is a constant (Katz, HITS, label
+propagation) starts from its first step instead, so the constant costs
+no checkpoint.
+
+``_Cache`` is the one owner of every persist an algorithm makes. It
+persists only what is not cached already, so a relation someone else
+cached (the derived-relation cache in ``sources/tpch.py``) is never
+released here, and releases what it persisted on exit, including when a
+round raises. A loop's result is its last checkpoint, so it reads none
+of the caches being released.
 
 The loops are round-invariant: every round after the first runs the
 plan the first ran, so it reuses the classes Spark compiled for it
@@ -40,19 +53,14 @@ plus one, and PageRank's dangling mass is a cross-joined local row
 (``_scalars``). Every join is hinted from a count the driver already
 holds (``_sized``): a checkpoint keeps its source plan's size estimate,
 joins multiply estimates, so estimates grow every round and a join left
-to Spark changes strategy. And every state checkpoint has one schema,
-nullability included (``_non_null``).
+to Spark changes strategy. And every state has the driver's one schema.
 
 One action is not one job: under AQE every exchange's map stage runs as
 a job of its own. Traced on a 1024-vertex, 21k-edge R-MAT graph on 4
 cores, a BFS round runs 3 jobs, a components round 3 (its pointer-jump
-round 6), a PageRank iteration 3, a Katz iteration 3 and a HITS
-iteration 6.
+round 6) and a PageRank iteration 3.
 
 Every partition count comes from ``partitions.partitions_for_rows``.
-Frontier loops ship only the CHANGED entries each round; dense-state
-loops (the power iterations) are one co-located join and one
-aggregation per round against the cached, source-partitioned edges.
 """
 
 from __future__ import annotations
@@ -67,7 +75,7 @@ from pyspark.storagelevel import StorageLevel
 
 from .core import _BROADCAST_NVALS_LIMIT, GrMatrix, GrVector, get_session
 from .dtypes import FP64, INT64
-from .operators import semiring
+from .operators import binary, semiring
 from .partitions import partitions_for_rows, sized_range
 from .plans.local import local_df
 
@@ -80,17 +88,6 @@ __all__ = ["bfs_level", "sssp", "connected_components", "pagerank",
            "capped_hub_count", "eccentricity", "harmonic_centrality",
            "modularity", "rich_club", "degree_histogram"]
 
-# _minplus_closure checkpoints its closure every _CHECKPOINT_EVERY
-# rounds. Lineage growth between checkpoints is GEOMETRIC for min-merge
-# loops: each round's plan nests the previous one ~3x, so the plan tree
-# grows ~3^k nodes between checkpoints and the DRIVER starts spending its
-# time in generateTreeString (every job start stringifies the executed
-# plan for the SQL listener). Measured on a 100k-vertex / 1M-edge graph:
-# checkpoint-every-5 left the driver single-threaded in
-# TreeNode.generateTreeString for minutes; every-2 (GraphFrames' default
-# checkpointInterval) bounds the tree at ~9x base and removed the stall.
-# The frontier loop and the power iterations checkpoint every round.
-_CHECKPOINT_EVERY = 2
 # connected_components runs a FastSV pointer-jump round every _JUMP_EVERY
 # iterations (see its step for the cost/convergence trade)
 _JUMP_EVERY = 4
@@ -156,20 +153,14 @@ def _nodes(n: int) -> DataFrame:
     return sized_range(get_session(), 0, n).select(F.col("id").alias("i"))
 
 
-def _observe(df: DataFrame, **metrics):
-    """``df`` with ``n`` (its row count) and the named aggregate
-    ``metrics`` attached as an Observation: the action that materializes
-    the returned DataFrame also fills ``obs.get`` (a dict by name), so a
-    loop reads its round scalars without a job of its own."""
-    obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n"),
-                      *(c.alias(k) for k, c in metrics.items())), obs
-
-
 def _checkpoint(df: DataFrame, **metrics):
-    """Eagerly checkpoint ``df``; returns the checkpoint and the observed
-    ``metrics`` (see ``_observe``), both from that one action."""
-    df, obs = _observe(df, **metrics)
+    """Eagerly checkpoint ``df``; returns the checkpoint and a dict of
+    ``n`` (its row count) and the named aggregate ``metrics``, observed
+    on that one action (an ``Observation``), so a loop reads its round
+    scalars without a job of its own."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"),
+                    *(c.alias(k) for k, c in metrics.items()))
     return df.localCheckpoint(eager=True), obs.get
 
 
@@ -268,6 +259,40 @@ def _vector(df: DataFrame, like: GrVector, nvals: int) -> GrVector:
     return out
 
 
+def _fixpoint(start: DataFrame, step, stop=None, *, schema, metrics=None,
+              first=None, parts=None, rounds=None, diverged=None):
+    """Run a loop from ``start`` to its fixpoint; returns the last state
+    and the metrics observed on it.
+
+    A state is the columns named by ``schema`` (each with its
+    ``_non_null`` default), coalesced to ``parts`` partitions when given.
+    ``step(rnd, state, m, cache)`` builds round ``rnd``'s state from the
+    last one and its metrics ``m``; what it persists in ``cache`` is
+    released once the round's state is checkpointed. A round is one
+    action: the state's eager checkpoint, which observes ``n`` and
+    ``metrics`` (``first`` instead on the start). The loop stops once
+    ``stop(m, prev)`` holds, ``prev`` being the previous state's metrics
+    (None on the start), or after ``rounds`` rounds; reaching that bound
+    raises ``RuntimeError(diverged)`` when ``diverged`` is given."""
+    def checkpoint(df, observed):
+        df = _non_null(df, **schema)
+        return _checkpoint(df if parts is None else df.coalesce(parts),
+                           **(observed or {}))
+
+    with _Cache() as cache:
+        state, m = checkpoint(start, metrics if first is None else first)
+        prev, rnd = None, 0
+        while stop is None or not stop(m, prev):
+            if rnd == rounds:
+                if diverged:
+                    raise RuntimeError(diverged)
+                break
+            rnd, prev = rnd + 1, m
+            state, m = checkpoint(step(rnd, state, m, cache), metrics)
+            cache.release()
+        return state, m
+
+
 def _frontier_loop(A: GrMatrix, start, step,
                    undirected: bool = False) -> GrVector:
     """Run a frontier fixpoint to convergence and return its state.
@@ -276,36 +301,25 @@ def _frontier_loop(A: GrMatrix, start, step,
     entries that changed last round. ``start(adj)`` gives the initial
     (i, v), all of it on the frontier. ``step(rnd, state, frontier, adj,
     keep)`` returns the next (i, v, _a); ``state`` and ``frontier`` are
-    vectors whose ``nvals`` are known, and ``keep`` persists a DataFrame
-    for the round, sized like the loop. A round is one action: the next
-    state is eagerly checkpointed, and its size and its frontier's are
-    observed on that action. The loop stops on an empty frontier.
-
-    Every round after the first runs one plan, so it compiles no new
-    code: each reads a checkpoint of the same schema (``_non_null``),
-    round values ride in the data, and each join is hinted from a count
-    the driver holds (``_sized``)."""
-    with _Cache() as cache, _Cache() as rounds:
+    vectors whose ``nvals`` are known (observed on the last checkpoint),
+    and ``keep`` persists a DataFrame for the round, sized like the loop.
+    The loop stops on an empty frontier."""
+    with _Cache() as cache:
         adj, parts = _prep_adjacency(A, cache, undirected)
         init = start(adj.df)
 
-        def keep(df):
-            return rounds.persist(df.coalesce(parts))
-
-        def advance(df):
-            return _checkpoint(_non_null(df, i="0", v="0", _a="false")
-                               .coalesce(parts),
-                               front=F.count_if("_a"))
-
-        state, m = advance(init.df.select("i", "v", F.lit(True).alias("_a")))
-        rnd = 0
-        while m["front"]:
-            rnd += 1
+        def advance(rnd, state, m, rounds):
             cur = _vector(state.select("i", "v"), init, m["n"])
             frontier = _vector(state.where("_a").select("i", "v"), init,
                                m["front"])
-            state, m = advance(step(rnd, cur, frontier, adj, keep))
-            rounds.release()
+            return step(rnd, cur, frontier, adj,
+                        lambda df: rounds.persist(df.coalesce(parts)))
+
+        state, m = _fixpoint(
+            init.df.select("i", "v", F.lit(True).alias("_a")), advance,
+            lambda m, prev: not m["front"],
+            schema=dict(i="0", v="0", _a="false"),
+            metrics=dict(front=F.count_if("_a")), parts=parts)
         return _vector(state.select("i", "v"), init, m["n"])
 
 
@@ -461,39 +475,38 @@ def k_core(A: GrMatrix, k: int) -> GrVector:
     vertex set is SMALLER — anti-join on the dropped fringe in the
     common late-round case, semi-join on the survivors when round 1 of
     a sparse graph with high k drops the majority (the build side would
-    otherwise be the huge one); either side broadcasts when under 1M
-    rows, so the edge relation never reshuffles. Two actions per
-    round, both eager checkpoints that cap lineage: the degrees (which
-    also observe the drop and total counts the next side choice reads)
-    and the surviving edges. Rounds are bounded by the graph's degeneracy
-    ordering depth — single digits on real graphs."""
+    otherwise be the huge one); that side is sized by ``_sized``, so the
+    edge relation never reshuffles while it broadcasts. The loop state
+    is the degrees, which observe the drop count the next side choice
+    and the stop test read; a round also checkpoints the surviving
+    edges. Rounds are bounded by the graph's degeneracy ordering depth —
+    single digits on real graphs."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    edges = _symmetric_edges(A).localCheckpoint(eager=True)
-    while True:
-        deg, counts = _checkpoint(
-            edges.groupBy("i").agg(F.count("*").alias("v")),
-            n_drop=F.sum((F.col("v") < k).cast("bigint")))
-        n_drop = counts["n_drop"] or 0
-        n_keep = counts["n"] - n_drop
-        if n_drop == 0:
-            break
+    edges, _ = _checkpoint(_symmetric_edges(A))
+
+    def degrees(e):
+        return e.groupBy("i").agg(F.count("*").alias("v"))
+
+    def step(rnd, deg, m, cache):
+        nonlocal edges
+        n_drop, n_keep = m["n_drop"], m["n"] - m["n_drop"]
         if n_drop <= n_keep:
-            side = deg.filter(F.col("v") < k).select("i")
-            how, n_side = "left_anti", n_drop
+            side, how, n_side = deg.where(F.col("v") < k), "left_anti", n_drop
         else:
-            side = deg.filter(F.col("v") >= k).select("i")
-            how, n_side = "left_semi", n_keep
-        b = F.broadcast(side) if n_side <= 1_000_000 else side
-        bj = (F.broadcast(side.withColumnRenamed("i", "j"))
-              if n_side <= 1_000_000 else side.withColumnRenamed("i", "j"))
-        edges = (edges.join(b, on="i", how=how)
-                      .join(bj, on="j", how=how)
-                      .select("i", "j")
-                      .localCheckpoint(eager=True))
-    return GrVector(edges.groupBy("i").agg(F.count("*").cast("bigint")
-                                           .alias("v")),
-                    INT64, A.nrows)
+            side, how, n_side = deg.where(F.col("v") >= k), "left_semi", n_keep
+        side = _sized(side.select("i"), n_side)
+        edges, _ = _checkpoint(
+            edges.join(side, on="i", how=how)
+                 .join(side.withColumnRenamed("i", "j"), on="j", how=how)
+                 .select("i", "j"))
+        return degrees(edges)
+
+    deg, _ = _fixpoint(degrees(edges), step, lambda m, prev: not m["n_drop"],
+                       schema=dict(i="0", v="0"),
+                       metrics=dict(n_drop=F.sum((F.col("v") < k)
+                                                 .cast("bigint"))))
+    return GrVector(deg, INT64, A.nrows)
 
 
 def label_propagation(A: GrMatrix, max_iters: int = 5) -> GrVector:
@@ -506,45 +519,51 @@ def label_propagation(A: GrMatrix, max_iters: int = 5) -> GrVector:
     which has no convergence guarantee — two-colorable subgraphs can
     oscillate forever).
 
-    Scale shape: each round is one edge⋈labels join (shuffle on the
-    label key the next round's aggregate needs anyway) + one
-    (vertex, label) count + an argmax via a single max(struct) aggregate
-    (no window, no sort); eager localCheckpoint per round caps lineage
-    exactly like the CC/SSSP/k-core loops. Sparse-id semantics:
-    vertices with no incident edge never appear."""
+    Scale shape: each round is one edge⋈labels join against the cached
+    symmetric edges, the labels sized by their observed count
+    (``_sized``), + one (vertex, label) count + an argmax via a single
+    max(struct) aggregate (no window, no sort); the first round is one
+    min aggregate over the edges. Sparse-id semantics: vertices with no
+    incident edge never appear."""
     if max_iters < 1:
         raise ValueError("max_iters must be >= 1")
-    edges = _symmetric_edges(A).localCheckpoint(eager=True)
-    labels = (edges.select("i").distinct()
-                   .select("i", F.col("i").cast("bigint").alias("v")))
-    for _ in range(max_iters):
-        nb = (edges.join(labels.withColumnRenamed("i", "j"), on="j")
-                   .select("i", "v"))
-        freq = nb.groupBy("i", "v").agg(F.count("*").alias("_c"))
-        # argmax by (count desc, label asc) as ONE max(struct) aggregate
-        labels = (freq.groupBy("i")
-                      .agg(F.max(F.struct(F.col("_c").alias("c"),
-                                          (-F.col("v")).alias("nv")))
-                           .alias("m"))
-                      .select("i", (-F.col("m.nv")).cast("bigint")
-                              .alias("v"))
-                      .localCheckpoint(eager=True))
+    with _Cache() as cache:
+        edges = cache.persist(_symmetric_edges(A), eager=True)
+
+        def step(rnd, labels, m, rounds):
+            freq = (edges.join(_sized(labels.withColumnRenamed("i", "j"),
+                                      m["n"]), on="j")
+                         .groupBy("i", "v").agg(F.count("*").alias("_c")))
+            # argmax by (count desc, label asc) as ONE max(struct) aggregate
+            return (freq.groupBy("i")
+                        .agg(F.max(F.struct(F.col("_c").alias("c"),
+                                            (-F.col("v")).alias("nv")))
+                             .alias("m"))
+                        .select("i", (-F.col("m.nv")).cast("bigint")
+                                .alias("v")))
+
+        # round 1 from labels = vertex ids: each distinct neighbor counts
+        # once, so every vertex adopts its smallest neighbor id
+        labels, _ = _fixpoint(
+            edges.groupBy("i").agg(F.min("j").cast("bigint").alias("v")),
+            step, schema=dict(i="0", v="0"), rounds=max_iters - 1)
     return GrVector(labels, INT64, A.nrows)
 
 
-def _edge_prelude(A: GrMatrix, cache: _Cache, *keys: str) -> list[DataFrame]:
-    """The power iterations' edge relation, the distinct (i, j) pairs,
+def _edge_prelude(A: GrMatrix, cache: _Cache,
+                  *keys: str) -> dict[str, DataFrame]:
+    """Katz's and HITS's edge relation, the distinct (i, j) pairs,
     cached once per join key in ``keys`` and hash-partitioned by A's
-    entry count, so every iteration reuses one exchange. One action per
-    key (its eager persist), plus a count when A's ``nvals`` is not
-    known yet. Returns [edges per key]."""
+    entry count, so every round reuses one exchange. One action per key
+    (its eager persist), plus a count when A's ``nvals`` is not known
+    yet. Returns {key: edges}."""
     adj, parts = _entries(A, cache)
     if len(keys) > 1:
         # each key's copy reads A: compute a derived A once
         adj = cache.persist(adj)
     edges = adj.select("i", "j").distinct()
-    out = [cache.persist(edges.repartition(parts, key), eager=True)
-           for key in keys]
+    out = {key: cache.persist(edges.repartition(parts, key), eager=True)
+           for key in keys}
     cache.drop(adj)
     return out
 
@@ -585,46 +604,43 @@ def _power_iteration(A: GrMatrix, start, update, iters: int,
     Returns (i, v).
 
     The rank state (i, dangling, v, _old) is also the vertex frame, so
-    an iteration is r left-joined with the contribution aggregate and
-    checkpointed once: that checkpoint is the iteration's only action,
-    and the scalars the loop reads back (the next dangling mass, the L1
-    change) are observed on it. r_0 is a checkpoint of the same schema
-    that observes the first dangling mass, so every iteration reads the
-    same kind of leaf and runs one plan; the dangling mass enters it as
-    a cross-joined local row (``_scalars``), and every join is hinted
-    from the vertex count (``_sized``)."""
+    an iteration is r left-joined with the contribution aggregate; the
+    scalars the loop reads back (the next dangling mass, the L1 change)
+    are observed on its checkpoint, and r_0 observes the first dangling
+    mass. The dangling mass enters a round as a cross-joined local row
+    (``_scalars``), and every join is hinted from the vertex count
+    (``_sized``)."""
     n = A.nrows
     with _Cache() as cache:
         P = _transition(A, cache)
         dangling = F.sum(F.when(F.col("dangling"), F.col("v")))
         has_out = P.select("i", F.lit(False).alias("dangling")).distinct()
 
-        def rank_state(df):
-            return _non_null(df, i="0", dangling="false", v="0", _old="0")
-
-        r, m = _checkpoint(rank_state(
-            _nodes(n).join(_sized(has_out, n), on="i", how="left_outer")
-                     .select("i", F.coalesce("dangling", F.lit(True))
-                                   .alias("dangling"),
-                             start.alias("v"), start.alias("_old"))),
-            dang=dangling)
-        for _ in range(iters):
+        def step(rnd, r, m, rounds):
             contrib = (P.alias("P")
                         .join(_sized(r, n).alias("r"),
                               F.col("P.i") == F.col("r.i"))
                         .select(F.col("P.j").alias("i"),
                                 (F.col("P.v") * F.col("r.v")).alias("c"))
                         .groupBy("i").agg(F.sum("c").alias("s")))
-            step = (r.join(_sized(contrib, n), on="i", how="left_outer")
+            return (r.join(_sized(contrib, n), on="i", how="left_outer")
                      .crossJoin(_scalars(_dang=m["dang"] or 0.0))
                      .select("i", "dangling",
                              update(F.coalesce("s", F.lit(0.0)),
                                     F.col("_dang")).alias("v"),
                              F.col("v").alias("_old")))
-            r, m = _checkpoint(rank_state(step), dang=dangling,
-                               l1=F.sum(F.abs(F.col("v") - F.col("_old"))))
-            if tol > 0 and m["l1"] < tol:
-                break
+
+        r, _ = _fixpoint(
+            _nodes(n).join(_sized(has_out, n), on="i", how="left_outer")
+                     .select("i", F.coalesce("dangling", F.lit(True))
+                                   .alias("dangling"),
+                             start.alias("v"), start.alias("_old")),
+            step, lambda m, prev: (prev is not None and tol > 0
+                                   and m["l1"] < tol),
+            schema=dict(i="0", dangling="false", v="0", _old="0"),
+            metrics=dict(dang=dangling,
+                         l1=F.sum(F.abs(F.col("v") - F.col("_old")))),
+            first=dict(dang=dangling), rounds=iters)
         return r.select("i", "v")
 
 
@@ -700,27 +716,26 @@ def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
     iterations and no normalization keep the trajectory deterministic
     and replayable as unrolled SQL CTEs (same discipline as pagerank /
     hits). Plan: one join + map-side aggregate per step against the
-    cached source-partitioned edge relation, joins hinted from the
-    vertex count (``_sized``); localCheckpoint bounds the plan tree. Output: (i, katz rounded 6) over all n vertices
-    (isolated vertices carry beta)."""
+    distinct edges cached by source (``_edge_prelude``), each edge
+    counted once, then a left join into the last x; joins hinted from
+    the vertex count (``_sized``). Output: (i, katz rounded 6) over all
+    n vertices (isolated vertices carry beta)."""
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
-    n = A.nrows
+    n, b = A.nrows, F.lit(float(beta))
     with _Cache() as cache:
-        (edges_i,) = _edge_prelude(A, cache, "i")
-        nodes = _nodes(n)
-        x = nodes.select("i", F.lit(float(beta)).alias("x"))
-        for _ in range(iters):
-            contrib = (edges_i.join(_sized(x, n), on="i")
-                              .groupBy(F.col("j").alias("i"))
-                              .agg(F.sum("x").alias("s")))
-            x = (nodes.join(_sized(contrib, n), on="i", how="left")
-                      .select("i", (F.lit(float(beta))
-                                    + F.lit(float(alpha))
-                                    * F.coalesce(F.col("s"), F.lit(0.0)))
-                              .alias("x"))
-                      .localCheckpoint(eager=True))
-        return x.select("i", F.round("x", 6).alias("katz"))
+        edges = _edge_prelude(A, cache, "i")["i"]
+
+        def step(rnd, x, *_):
+            s = F.coalesce("_s", F.lit(0.0))
+            return _walk(edges, x, x, n).select(
+                "i", (b + F.lit(float(alpha)) * s).alias("_x"))
+
+        # the start is x_1, stepped from the constant x_0, so x_0 is never
+        # checkpointed: it costs no job
+        x, _ = _fixpoint(step(1, _nodes(n).select("i", b.alias("_x"))), step,
+                         schema=dict(i="0", _x="0"), rounds=iters - 1)
+        return x.select("i", F.round("_x", 6).alias("katz"))
 
 
 def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
@@ -730,15 +745,16 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
         a_j <- sum_{i->j} h_i ;  a <- a / sum(a)
         h_i <- sum_{i->j} a_j ;  h <- h / sum(h)
 
-    Same plan shape as pagerank: each half-step is one join + map-side
-    aggregate against the cached adjacency, checkpointed once, which
-    also bounds the plan tree; the checkpoint holds the unnormalized
-    sums and observes their total, and the next half-step divides by
-    that total as it reads them, from a cross-joined local row
-    (``_scalars``), so the normalizer costs no job. Every join is hinted
-    from the vertex count (``_sized``). Fixed iterations, no convergence
-    test — fully replayable as unrolled SQL CTEs (final values rounded
-    to 6 decimals absorb distributed-sum drift, the q37 precedent).
+    Same plan shape as pagerank: a round is one half-step, one join +
+    map-side aggregate against the cached adjacency, checkpointed once;
+    the state (i, v, _p) holds the unnormalized sums of this half-step
+    and of the last, and observes their totals. The next half-step
+    divides by the total as it reads them, from a cross-joined local
+    row (``_scalars``), so the normalizer costs no job. Every join is
+    hinted from the vertex count (``_sized``). Fixed iterations, no
+    convergence test — fully replayable as unrolled SQL CTEs (final
+    values rounded to 6 decimals absorb distributed-sum drift, the q37
+    precedent).
 
     Returns a DataFrame (i, hub, authority) over all n vertices
     (isolated vertices carry 0.0)."""
@@ -752,15 +768,41 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
         # iteration (measured 87.6 s -> 41.2 s at 20M edges on local[32],
         # together with checkpointing a before h consumes it — otherwise
         # h's checkpoint re-executes a's whole plan)
-        edges_i, edges_j = _edge_prelude(A, cache, "i", "j")
-        nodes = _nodes(n)
-        h, t_h = nodes.select("i", F.lit(1.0 / n).alias("h")), 1.0
-        for _ in range(iters):
-            a, t_a = _hits_step(edges_i, h, t_h, nodes, n, "i", "j", "a")
-            h, t_h = _hits_step(edges_j, a, t_a, nodes, n, "j", "i", "h")
-        return (h.join(a, on="i").crossJoin(_scalars(_th=t_h, _ta=t_a))
-                 .select("i", F.round(_share("h", "_th"), 6).alias("hub"),
-                         F.round(_share("a", "_ta"), 6).alias("authority")))
+        edges = _edge_prelude(A, cache, "i", "j")
+
+        def step(rnd, x, m, *_):
+            # even rounds: authorities from hubs; odd rounds: hubs back
+            src, dst = ("j", "i") if rnd % 2 else ("i", "j")
+            xn = (x.crossJoin(_scalars(_t=m["t"] or 0.0))
+                   .select(F.col("i").alias(src), _share("v", "_t")
+                           .alias("_x")))
+            return (_walk(edges[src], xn, x, n, src, dst)
+                    .select("i", F.coalesce("_s", F.lit(0.0)).alias("v"),
+                            F.col("v").alias("_p")))
+
+        # the start is a_1, stepped from h_0 = 1/n everywhere (ones over
+        # their total n), so h_0 is never checkpointed: it costs no job
+        h0 = _nodes(n).select("i", F.lit(1.0).alias("v"))
+        h, m = _fixpoint(
+            step(0, h0, dict(t=n)), step, schema=dict(i="0", v="0", _p="0"),
+            metrics=dict(t=F.sum("v"), tp=F.sum("_p")),
+            rounds=2 * iters - 1)
+        return (h.crossJoin(_scalars(_th=m["t"] or 0.0, _ta=m["tp"] or 0.0))
+                 .select("i", F.round(_share("v", "_th"), 6).alias("hub"),
+                         F.round(_share("_p", "_ta"), 6).alias("authority")))
+
+
+def _walk(edges: DataFrame, sent: DataFrame, x: DataFrame, n: int,
+          src: str = "i", dst: str = "j") -> DataFrame:
+    """One step of Katz and HITS: the dense vertex frame ``x``
+    left-joined with ``_s``, per vertex the sum of ``sent``'s ``_x``
+    (keyed by ``src``) over the edges src -> dst into it, null without
+    one. Both joins are hinted from the vertex count ``n``
+    (``_sized``)."""
+    raw = (edges.join(_sized(sent, n), on=src)
+                .groupBy(F.col(dst).alias("i"))
+                .agg(F.sum("_x").alias("_s")))
+    return x.join(_sized(raw, n), on="i", how="left")
 
 
 def _share(col: str, total: str) -> Column:
@@ -769,29 +811,12 @@ def _share(col: str, total: str) -> Column:
              .otherwise(0.0))
 
 
-def _hits_step(edges, x, total, nodes, n, src, dst, col):
-    """One HITS half-step, checkpointed: col(v) = sum of x / total over
-    the edges src -> v, for every vertex (x / total is x L1-normalized,
-    all 0 when the total is 0). ``nodes`` is the ``n`` vertices. Returns
-    (the unnormalized col, its total, observed on the checkpoint)."""
-    xn = (x.crossJoin(_scalars(_t=total))
-           .select(F.col("i").alias(src), _share(x.columns[1], "_t")
-                   .alias("_x")))
-    raw = (edges.join(_sized(xn, n), on=src)
-                .groupBy(F.col(dst).alias("i"))
-                .agg(F.sum("_x").alias(col)))
-    full = (nodes.join(_sized(raw, n), on="i", how="left")
-                 .select("i", F.coalesce(col, F.lit(0.0)).alias(col)))
-    out, m = _checkpoint(full, t=F.sum(col))
-    return out, m["t"] or 0.0
-
-
 def eccentricity(A: GrMatrix, max_iters: int = 32) -> DataFrame:
     """Per-vertex eccentricity (longest shortest path to any REACHABLE
     vertex) via the min-plus ALL-PAIRS closure, composed entirely from
     the core GraphBLAS surface: D_{k+1} = D_k (+) D_k minplus.mxm A
     with the ewise_add(min) union merge, iterated to the fixpoint
-    (``isequal``), exactly the D = D min.+ A recurrence the GraphBLAS
+    (``_minplus_closure``), exactly the D = D min.+ A recurrence the GraphBLAS
     APSP literature writes. d(i, i) = 0 by definition (closure
     round-trips are discarded); unreachable pairs simply never appear
     (sparse semantics — no +inf sentinels).
@@ -799,8 +824,7 @@ def eccentricity(A: GrMatrix, max_iters: int = 32) -> DataFrame:
     APSP is inherently O(V^2) OUTPUT — this is the bounded-graph /
     landmark-set diagnostic (diameter, radius, center), not a
     100 TB-edge op; at scale run it on a sampled landmark subgraph.
-    Checkpoints every ``_CHECKPOINT_EVERY`` rounds like every other
-    iterative loop here. Raises if the closure has not converged
+    Raises if the closure has not converged
     within ``max_iters`` (negative cycles are impossible with weight-1
     edges, so non-convergence means max_iters is too small).
     Output: (i, ecc, n_reachable) — ecc BIGINT, excluding i itself.
@@ -820,27 +844,31 @@ def _minplus_closure(A: GrMatrix, max_iters: int,
                      caller: str) -> GrMatrix:
     """Hop-count ALL-PAIRS shortest-path closure over the core
     semiring surface: D_{k+1} = D_k ewise_add(min) (D_k min.+ W) with
-    W the weight-1 pattern of A, iterated to the ``isequal`` fixpoint
-    with per-round checkpoints. Raises on non-convergence (weight-1
-    edges cannot cycle negatively, so that only means max_iters is
-    below the graph diameter)."""
-    from .operators import binary as _binary
-
+    W the weight-1 pattern of A, iterated to the fixpoint. A round only
+    adds entries or lowers them, so it changed nothing exactly when its
+    entry count and its value sum (both observed on its checkpoint)
+    equal the last round's. Precondition: a hop count is at most n, so
+    the int64 sum of the n^2 entries holds for n up to about 2M. Raises
+    on non-convergence (weight-1 edges cannot cycle negatively, so that
+    only means max_iters is below the graph diameter)."""
     ones = A.df.select("i", "j", F.lit(1).cast("bigint").alias("v"))
     W = GrMatrix.from_dataframe(ones, nrows=A.nrows, ncols=A.ncols,
                                 dtype="INT64")
-    D = W.dup()
-    for it in range(max_iters):
-        step = D.mxm(W, semiring.min_plus).new()
-        merged = D.ewise_add(step, _binary.min).new()
-        if (it + 1) % _CHECKPOINT_EVERY == 0:
-            merged._set_df(merged.df.localCheckpoint())
-        if bool(merged.isequal(D).value):
-            return merged
-        D = merged
-    raise RuntimeError(
-        f"{caller}: min-plus closure not converged within "
-        f"{max_iters} iterations — raise max_iters")
+
+    def step(rnd, D, m, cache):
+        D = GrMatrix(D, INT64, A.nrows, A.ncols)
+        return D.ewise_add(D.mxm(W, semiring.min_plus).new(),
+                           binary.min).new().df
+
+    def same(m, prev):
+        return prev is not None and (m["n"], m["s"]) == (prev["n"], prev["s"])
+
+    D, _ = _fixpoint(W.df, step, same, schema=dict(i="0", j="0", v="0"),
+                     metrics=dict(s=F.sum("v")), rounds=max_iters,
+                     diverged=f"{caller}: min-plus closure not converged "
+                              f"within {max_iters} iterations — raise "
+                              f"max_iters")
+    return GrMatrix(D, INT64, A.nrows, A.ncols)
 
 
 def harmonic_centrality(A: GrMatrix, max_iters: int = 32) -> DataFrame:
@@ -1053,35 +1081,31 @@ def k_truss(A: GrMatrix, k: int = 4, max_iters: int = 30) -> DataFrame:
 
     Plan per round: one degree agg + one wedge self-join bounded by
     oriented out-degree (arboricity bound — no deg² hub blowup) + one
-    closing equi-join; the surviving edge set is eagerly checkpointed
-    each round (lineage cut, the iterative-loop house rule), and the
-    convergence check reads its size observed on that same action.
+    closing equi-join; the round's surviving edges are its checkpoint,
+    and the stop test reads their count observed on it. Reaching
+    ``max_iters`` without the fixpoint raises: the edges filtered by the
+    last round's supports are not a k-truss.
 
     Output: (a, b, support) for the surviving canonical edges, with
     their fixpoint support."""
     if k < 3:
         raise ValueError("k_truss requires k >= 3")
-    und, counts = _checkpoint(_undirected(A, "a", "b"))
-    n_prev = counts["n"]
-    if n_prev == 0:
-        return und.withColumn("support", F.lit(None).cast("bigint"))
-    for _ in range(max_iters):
-        # prior rounds carry a support column — re-derive it fresh
-        sup = _edge_support(und.select("a", "b"))
-        und, counts = _checkpoint(
-            und.select("a", "b").join(sup, on=["a", "b"])
-               .where(F.col("support") >= k - 2))
-        n = counts["n"]
-        if n == n_prev or n == 0:
-            break
-        n_prev = n
-    else:
-        # an exhausted loop would return edges filtered by supports of
-        # the PREVIOUS round's larger graph — not a k-truss; refuse
-        # rather than silently ship an inconsistent result
-        raise RuntimeError(
-            f"k_truss did not reach its peeling fixpoint within "
-            f"max_iters={max_iters} rounds; raise max_iters")
+
+    def step(rnd, und, m, cache):
+        und = und.select("a", "b")  # support is re-derived every round
+        return (und.join(_edge_support(und), on=["a", "b"])
+                   .where(F.col("support") >= k - 2))
+
+    def peeled(m, prev):
+        return m["n"] == 0 or (prev is not None and m["n"] == prev["n"])
+
+    und, _ = _fixpoint(
+        _undirected(A, "a", "b").select("a", "b", F.lit(0).cast("bigint")
+                                                  .alias("support")),
+        step, peeled, schema=dict(a="0", b="0", support="0"),
+        rounds=max_iters,
+        diverged=f"k_truss did not reach its peeling fixpoint within "
+                 f"max_iters={max_iters} rounds; raise max_iters")
     return und
 
 
@@ -1110,7 +1134,7 @@ def neighborhood_jaccard(A: GrMatrix,
                          F.col("j").cast("bigint").alias("nbr"))
                  .where(F.col("z") != F.col("nbr"))
                  .distinct())
-    edges = edges.localCheckpoint()  # shared: gen, degrees, anti-join
+    edges, _ = _checkpoint(edges)  # shared: gen, degrees, anti-join
     deg = edges.groupBy("nbr").agg(F.count("*").alias("deg")) \
                .withColumnRenamed("nbr", "_n")
     gen = edges
@@ -1152,7 +1176,7 @@ def degree_assortativity(A: GrMatrix) -> DataFrame:
     edges = (A.df.select(F.col("i").alias("u"), F.col("j").alias("v"))
                  .where(F.col("u") != F.col("v"))
                  .distinct())
-    edges = edges.localCheckpoint()  # shared: degrees + moment fold
+    edges, _ = _checkpoint(edges)  # shared: degrees + moment fold
     deg = edges.groupBy("u").agg(F.count("*").alias("d")) \
                .withColumnRenamed("u", "_n")
     j = (edges.join(deg.withColumnRenamed("_n", "u")
@@ -1183,11 +1207,10 @@ def reciprocity(A: GrMatrix) -> DataFrame:
     edges = (A.df.select(F.col("i").alias("u"), F.col("j").alias("v"))
                  .where(F.col("u") != F.col("v"))
                  .distinct())
-    edges = edges.localCheckpoint()
+    edges, m = _checkpoint(edges)
     rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    rec = edges.join(rev, on=["u", "v"], how="left_semi")
-    n = edges.count()
-    k = rec.count()
+    n = m["n"]
+    k = edges.join(rev, on=["u", "v"], how="left_semi").count()
     spark = get_session()
     return spark.createDataFrame(
         [(int(n), int(k), round(k / n, 6) if n else None)],
@@ -1205,7 +1228,7 @@ def modularity(A: GrMatrix, labels: DataFrame,
     the metric; this engine ships it as a first-class aggregate).
 
     Plan: ONE canonicalize+distinct shuffle builds the edge set
-    (localCheckpoint shared by all three aggregates); degrees fold
+    (checkpointed, shared by all three aggregates); degrees fold
     from the edge list; two BROADCASTable label joins (labels is a
     node-sized dimension — broadcast when small, shuffle-hash
     otherwise, Catalyst/AQE picks) classify intra-community edges.
@@ -1216,8 +1239,8 @@ def modularity(A: GrMatrix, labels: DataFrame,
     oracle). Output: one row (n_edges, n_communities, q)."""
     lab = labels.select(F.col(node_col).cast("bigint").alias("_n"),
                         F.col(label_col).alias("_l"))
-    und = _undirected(A).localCheckpoint()
-    m = und.count()
+    und, counts = _checkpoint(_undirected(A))
+    m = counts["n"]
     spark = get_session()
     if m == 0:
         return spark.createDataFrame(
@@ -1266,7 +1289,7 @@ def rich_club(A: GrMatrix, k: int) -> DataFrame:
     re-shuffles the full edge list. All-integer output plus one
     double division, round 6; phi NULL when fewer than 2 rich
     nodes. Output: one row (k, n_rich, e_rich, phi)."""
-    und = _undirected(A).localCheckpoint()
+    und, _ = _checkpoint(_undirected(A))
     deg = _degrees(und)
     rich = deg.where(F.col("_d") > k).select("_n")
     n_rich = rich.count()

@@ -367,7 +367,7 @@ def test_stream_sources_accept_directory_events(spark, tmp_path):
 def test_stream_dir_rebuilds_after_source_rewrite(spark, tmp_path):
     """Regression (round-4 advice): _events_stream_dir cached its /tmp
     symlink directory per sf_dir forever; rewriting events.parquet left
-    dangling or stale links (library users don't get scale_probe's
+    dangling or stale links (library users don't get a probe script's
     manual rmtree). The cache must self-validate and rebuild."""
     from dask_grblas_spark.streaming import windows as W
 

@@ -76,7 +76,7 @@ def main() -> int:
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.driver.memory", "8g")
              .config("spark.ui.enabled", "false")
-             # match bench/scale_probe/engine sessions: DuckDB epoch()
+             # match bench and engine sessions: DuckDB epoch()
              # is UTC-based, so timestamp-derived gates need Spark's
              # session zone pinned on non-UTC hosts too
              .config("spark.sql.session.timeZone", "UTC")

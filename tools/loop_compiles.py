@@ -18,7 +18,7 @@ distinct classes recompiles some of them in every pass.
 Usage (from the repository root):
 
     python tools/loop_compiles.py [--seed 1] [--passes 3]
-        [--loops bfs,cc,pagerank,sssp,hits,katz]
+        [--loops bfs,cc,pagerank,sssp,hits,katz,kcore,lpa,ktruss]
 
 The graph has the ``graph_algos`` workload's size: 1024 vertices, edge
 factor 32. The session is ``local[nproc]`` with AQE on and ``nproc``
@@ -135,6 +135,9 @@ def loops(A, src):
                                          tol=0).wait(),
         "hits": lambda: alg.hits(A, iters=3).count(),
         "katz": lambda: alg.katz_centrality(A, iters=3).count(),
+        "kcore": lambda: alg.k_core(A, 32).wait(),
+        "lpa": lambda: alg.label_propagation(A, max_iters=3).wait(),
+        "ktruss": lambda: alg.k_truss(A, k=8).count(),
     }
 
 
