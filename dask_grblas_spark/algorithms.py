@@ -55,6 +55,16 @@ holds (``_sized``): a checkpoint keeps its source plan's size estimate,
 joins multiply estimates, so estimates grow every round and a join left
 to Spark changes strategy. And every state has the driver's one schema.
 
+A fourth rule keeps the driver's share of a round small: a round builds
+no expression. Every PySpark Column function or method is a py4j round
+trip, and PySpark 4 adds about ten more to each for the call site it
+records, so a round names its projections, filters and joins in SQL
+strings (``selectExpr``, ``where``, ``join(on=...)``) and takes its
+conditions and aggregates from Columns built before the loop (the
+contraction's once per JVM gateway, ``plans/matmul.py``). On PySpark
+4.1 a frontier or PageRank round sends 79 to 90 py4j commands from the
+main thread; one that built its Columns would send 350 to 390.
+
 One action is not one job: under AQE every exchange's map stage runs as
 a job of its own. Traced on a 1024-vertex, 21k-edge R-MAT graph on 4
 cores, a BFS round runs 3 jobs, a components round 3 (its pointer-jump
@@ -67,9 +77,8 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
@@ -77,7 +86,6 @@ from .core import _BROADCAST_NVALS_LIMIT, GrMatrix, GrVector, get_session
 from .dtypes import FP64, INT64
 from .operators import binary, semiring
 from .partitions import partitions_for_rows, sized_range
-from .plans.local import local_df
 
 __all__ = ["bfs_level", "sssp", "connected_components", "pagerank",
            "triangle_count", "symmetrize", "with_singletons", "k_core",
@@ -150,17 +158,24 @@ class _Cache:
 
 def _nodes(n: int) -> DataFrame:
     """The dense vertex frame 0..n-1 as column ``i``."""
-    return sized_range(get_session(), 0, n).select(F.col("id").alias("i"))
+    return sized_range(get_session(), 0, n).selectExpr("id AS i")
 
 
-def _checkpoint(df: DataFrame, **metrics):
+def _observed(**metrics: str) -> list[Column]:
+    """The aggregates a checkpoint observes: ``n``, its row count, and
+    the named SQL aggregates ``metrics``. A loop builds them once and
+    passes them to every round's ``_checkpoint``."""
+    return [F.expr(f"{sql} AS {k}")
+            for k, sql in dict(n="count(1)", **metrics).items()]
+
+
+def _checkpoint(df: DataFrame, observed: list[Column] | None = None):
     """Eagerly checkpoint ``df``; returns the checkpoint and a dict of
-    ``n`` (its row count) and the named aggregate ``metrics``, observed
-    on that one action (an ``Observation``), so a loop reads its round
-    scalars without a job of its own."""
+    the aggregates ``observed`` on that one action (an ``Observation``;
+    by default ``_observed()``, the row count ``n``), so a loop reads its
+    round scalars without a job of its own."""
     obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"),
-                    *(c.alias(k) for k, c in metrics.items()))
+    df = df.observe(obs, *(observed or _observed()))
     return df.localCheckpoint(eager=True), obs.get
 
 
@@ -200,20 +215,18 @@ def _sized(df: DataFrame, rows: int) -> DataFrame:
 
 
 def _merge_min(cur_df: DataFrame, cand_df: DataFrame, cand_rows: int,
-               *extra) -> DataFrame:
+               *extra: str) -> DataFrame:
     """The next loop state (i, v, _a): each current entry lowered to its
     candidate where that is smaller (the GraphBLAS ``w(accum=min)``),
-    ``_a`` marking the lowered, plus the current columns named in
-    ``extra``. Every candidate key is a current key, so this is one left
-    outer join, its candidate side (at most ``cand_rows`` rows) sized by
-    ``_sized``."""
-    cand = _sized(cand_df.select("i", F.col("v").alias("_v")), cand_rows)
-    lower = F.col("_v") < F.col("v")  # null without a candidate
+    ``_a`` marking the lowered, plus the SQL expressions ``extra`` over
+    the current columns. Every candidate key is a current key, so this
+    is one left outer join, its candidate side (at most ``cand_rows``
+    rows) sized by ``_sized``. The comparison is null without a
+    candidate."""
+    cand = _sized(cand_df.selectExpr("i", "v AS _v"), cand_rows)
     return (cur_df.join(cand, on="i", how="left_outer")
-                  .select("i", F.when(lower, F.col("_v"))
-                                .otherwise(F.col("v")).alias("v"),
-                          F.coalesce(lower, F.lit(False)).alias("_a"),
-                          *extra))
+                  .selectExpr("i", "CASE WHEN _v < v THEN _v ELSE v END AS v",
+                              "coalesce(_v < v, false) AS _a", *extra))
 
 
 def _entries(A: GrMatrix, cache: _Cache, factor: int = 1):
@@ -269,18 +282,24 @@ def _fixpoint(start: DataFrame, step, stop=None, *, schema, metrics=None,
     ``step(rnd, state, m, cache)`` builds round ``rnd``'s state from the
     last one and its metrics ``m``; what it persists in ``cache`` is
     released once the round's state is checkpointed. A round is one
-    action: the state's eager checkpoint, which observes ``n`` and
-    ``metrics`` (``first`` instead on the start). The loop stops once
+    action: the state's eager checkpoint, which observes ``n`` and the
+    named SQL aggregates ``metrics`` (``first`` instead on the start).
+    A step builds no expression of its own: it uses SQL strings and
+    Columns built before the loop. The loop stops once
     ``stop(m, prev)`` holds, ``prev`` being the previous state's metrics
     (None on the start), or after ``rounds`` rounds; reaching that bound
     raises ``RuntimeError(diverged)`` when ``diverged`` is given."""
+    non_null = _non_null(**schema)
+    observed = _observed(**(metrics or {}))
+
     def checkpoint(df, observed):
-        df = _non_null(df, **schema)
+        df = df.selectExpr(*non_null)
         return _checkpoint(df if parts is None else df.coalesce(parts),
-                           **(observed or {}))
+                           observed)
 
     with _Cache() as cache:
-        state, m = checkpoint(start, metrics if first is None else first)
+        state, m = checkpoint(start, observed if first is None
+                              else _observed(**first))
         prev, rnd = None, 0
         while stop is None or not stop(m, prev):
             if rnd == rounds:
@@ -288,7 +307,7 @@ def _fixpoint(start: DataFrame, step, stop=None, *, schema, metrics=None,
                     raise RuntimeError(diverged)
                 break
             rnd, prev = rnd + 1, m
-            state, m = checkpoint(step(rnd, state, m, cache), metrics)
+            state, m = checkpoint(step(rnd, state, m, cache), observed)
             cache.release()
         return state, m
 
@@ -303,36 +322,38 @@ def _frontier_loop(A: GrMatrix, start, step,
     keep)`` returns the next (i, v, _a); ``state`` and ``frontier`` are
     vectors whose ``nvals`` are known (observed on the last checkpoint),
     and ``keep`` persists a DataFrame for the round, sized like the loop.
-    The loop stops on an empty frontier."""
+    Their frames still carry ``_a``: every step and every plan it calls
+    names the columns it reads, so the optimizer prunes ``_a`` and a
+    round spends no projection on it. The loop stops on an empty
+    frontier."""
     with _Cache() as cache:
         adj, parts = _prep_adjacency(A, cache, undirected)
         init = start(adj.df)
 
         def advance(rnd, state, m, rounds):
-            cur = _vector(state.select("i", "v"), init, m["n"])
-            frontier = _vector(state.where("_a").select("i", "v"), init,
-                               m["front"])
+            cur = _vector(state, init, m["n"])
+            frontier = _vector(state.where("_a"), init, m["front"])
             return step(rnd, cur, frontier, adj,
                         lambda df: rounds.persist(df.coalesce(parts)))
 
         state, m = _fixpoint(
-            init.df.select("i", "v", F.lit(True).alias("_a")), advance,
+            init.df.selectExpr("i", "v", "true AS _a"), advance,
             lambda m, prev: not m["front"],
             schema=dict(i="0", v="0", _a="false"),
-            metrics=dict(front=F.count_if("_a")), parts=parts)
-        return _vector(state.select("i", "v"), init, m["n"])
+            metrics=dict(front="count_if(_a)"), parts=parts)
+        return _vector(state.selectExpr("i", "v"), init, m["n"])
 
 
-def _non_null(df: DataFrame, **defaults: str) -> DataFrame:
-    """The columns named by ``defaults`` of ``df``, each declared
-    non-null, for a loop state about to be checkpointed; each default is
-    a SQL literal that never applies. A stored entry never is null, but
-    aggregates, outer joins, divisions and nullable input files say their
-    columns may be, so the first state (from driver values) and later
-    ones would be checkpoints of different schemas, and the plans over
-    them would compile different code."""
-    return df.selectExpr(*(f"coalesce({c}, {d}) AS {c}"
-                           for c, d in defaults.items()))
+def _non_null(**defaults: str) -> list[str]:
+    """The projection, as SQL for ``selectExpr``, of the columns named
+    by ``defaults``, each declared non-null, for a loop state about to be
+    checkpointed; each default is a SQL literal that never applies. A
+    stored entry never is null, but aggregates, outer joins, divisions
+    and nullable input files say their columns may be, so the first
+    state (from driver values) and later ones would be checkpoints of
+    different schemas, and the plans over them would compile different
+    code."""
+    return [f"coalesce({c}, {d}) AS {c}" for c, d in defaults.items()]
 
 
 def bfs_level(A: GrMatrix, source: int) -> GrVector:
@@ -347,9 +368,9 @@ def bfs_level(A: GrMatrix, source: int) -> GrVector:
     def step(rnd, levels, frontier, adj, keep):
         # mask pushdown: unvisited only (anti join BEFORE the agg)
         new = frontier.vxm(adj, semiring.min_first).new(mask=~levels.S)
-        return (levels.df.select("i", "v", F.lit(False).alias("_a"))
-                .unionByName(new.df.select("i", (F.col("v") + 1).alias("v"),
-                                           F.lit(True).alias("_a"))))
+        return (levels.df.selectExpr("i", "v", "false AS _a")
+                .unionByName(new.df.selectExpr("i", "v + 1 AS v",
+                                               "true AS _a")))
 
     return _frontier_loop(A, start, step)
 
@@ -362,23 +383,23 @@ def sssp(A: GrMatrix, source: int) -> GrVector:
         return GrVector.from_values([source], [0.0], size=A.nrows,
                                     dtype=FP64)
 
+    # one aggregate over the distances and the candidates: a vertex
+    # joins the next frontier when a candidate beats its distance or it
+    # had none. The exchange by i is explicit: the first state is one
+    # partition and later ones are not, so the aggregate would skip its
+    # own exchange in round 1 only (and a shuffled join would choose its
+    # exchanges from the growing size estimates).
+    by_i = F.expr("i")
+    best = [F.expr("min(CASE WHEN NOT _c THEN v END) AS _o"),
+            F.expr("min(CASE WHEN _c THEN v END) AS _n")]
+
     def step(rnd, dist, frontier, adj, keep):
-        # one aggregate over the distances and the candidates: a vertex
-        # joins the next frontier when a candidate beats its distance or
-        # it had none. The exchange by i is explicit: the first state is
-        # one partition and later ones are not, so the aggregate would
-        # skip its own exchange in round 1 only (and a shuffled join
-        # would choose its exchanges from the growing size estimates).
         cand = frontier.vxm(adj, semiring.min_plus).new()
-        both = (dist.df.select("i", "v", F.lit(False).alias("_c"))
-                .unionByName(cand.df.select("i", "v",
-                                            F.lit(True).alias("_c"))))
-        best = both.repartition("i").groupBy("i").agg(
-            F.min(F.when(~F.col("_c"), F.col("v"))).alias("_o"),
-            F.min(F.when(F.col("_c"), F.col("v"))).alias("_n"))
-        return best.select("i", F.least("_o", "_n").alias("v"),
-                           F.coalesce(F.col("_n") < F.col("_o"),
-                                      F.col("_o").isNull()).alias("_a"))
+        both = (dist.df.selectExpr("i", "v", "false AS _c")
+                .unionByName(cand.df.selectExpr("i", "v", "true AS _c")))
+        return (both.repartition(by_i).groupBy(by_i).agg(*best)
+                    .selectExpr("i", "least(_o, _n) AS v",
+                                "coalesce(_n < _o, _o IS NULL) AS _a"))
 
     return _frontier_loop(A, start, step)
 
@@ -409,13 +430,21 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
         return GrVector(ids.select("i", F.col("i").cast("bigint")
                                    .alias("v")), INT64, n)
 
+    # FastSV shortcut round (pointer jumping): l[i] <- l[l[i]], joining
+    # the merged labels m to themselves p on m.v = p.i. Every vertex
+    # whose label moved this round is re-propagated (by neighbor min OR
+    # by shortcut — a shortcut move must still be announced to
+    # neighbors).
+    jump_on = F.expr("m.v = p.i")
+    jumped = "least(m.v, coalesce(p.v, m.v))"
+    jump = ["m.i AS i", f"{jumped} AS v", f"{jumped} < m._old AS _a"]
+
     def step(rnd, labels, changed, adj, keep):
         # candidate label for j = min over in-neighbors i of label[i]
         cand = changed.vxm(adj, semiring.min_first).new()
         if rnd % _JUMP_EVERY:
             # cheap frontier round: only the lowered labels move
             return _merge_min(labels.df, cand.df, labels.nvals)
-        # FastSV shortcut round (pointer jumping): l[i] <- l[l[i]].
         # Labels are vertex ids with the invariant l[v] <= v, so l is
         # defined at every label value and jumping only decreases. Run
         # every _JUMP_EVERY-th round: neighbor propagation alone is
@@ -425,16 +454,10 @@ def connected_components(A: GrMatrix, vertices: str = "all") -> GrVector:
         # Small-diameter graphs finish before paying for many jumps.
         # Cost: an n-row self-join, so not done every round.
         merged = keep(_merge_min(labels.df, cand.df, labels.nvals,
-                                 F.col("v").alias("_old")))
-        m = merged.alias("m")
+                                 "v AS _old"))
         p = _sized(merged, labels.nvals).alias("p")
-        jumped = F.least(F.col("m.v"), F.coalesce(F.col("p.v"), F.col("m.v")))
-        # re-propagate every vertex whose label moved this round (by
-        # neighbor min OR by shortcut — a shortcut move must still be
-        # announced to neighbors)
-        return (m.join(p, F.col("m.v") == F.col("p.i"), "left_outer")
-                 .select(F.col("m.i").alias("i"), jumped.alias("v"),
-                         (jumped < F.col("m._old")).alias("_a")))
+        return (merged.alias("m").join(p, jump_on, "left_outer")
+                      .selectExpr(*jump))
 
     return _frontier_loop(A, start, step, undirected=True)
 
@@ -483,29 +506,30 @@ def k_core(A: GrMatrix, k: int) -> GrVector:
     single digits on real graphs."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    edges, _ = _checkpoint(_symmetric_edges(A))
+    counted = _observed()
+    edges, _ = _checkpoint(_symmetric_edges(A), counted)
+    by_i, degree = F.expr("i"), F.expr("count(*) AS v")
 
     def degrees(e):
-        return e.groupBy("i").agg(F.count("*").alias("v"))
+        return e.groupBy(by_i).agg(degree)
 
     def step(rnd, deg, m, cache):
         nonlocal edges
         n_drop, n_keep = m["n_drop"], m["n"] - m["n_drop"]
         if n_drop <= n_keep:
-            side, how, n_side = deg.where(F.col("v") < k), "left_anti", n_drop
+            side, how, n_side = deg.where(f"v < {k}"), "left_anti", n_drop
         else:
-            side, how, n_side = deg.where(F.col("v") >= k), "left_semi", n_keep
-        side = _sized(side.select("i"), n_side)
+            side, how, n_side = deg.where(f"v >= {k}"), "left_semi", n_keep
+        side = _sized(side.selectExpr("i"), n_side)
         edges, _ = _checkpoint(
             edges.join(side, on="i", how=how)
                  .join(side.withColumnRenamed("i", "j"), on="j", how=how)
-                 .select("i", "j"))
+                 .selectExpr("i", "j"), counted)
         return degrees(edges)
 
     deg, _ = _fixpoint(degrees(edges), step, lambda m, prev: not m["n_drop"],
                        schema=dict(i="0", v="0"),
-                       metrics=dict(n_drop=F.sum((F.col("v") < k)
-                                                 .cast("bigint"))))
+                       metrics=dict(n_drop=f"sum(CAST(v < {k} AS BIGINT))"))
     return GrVector(deg, INT64, A.nrows)
 
 
@@ -530,17 +554,17 @@ def label_propagation(A: GrMatrix, max_iters: int = 5) -> GrVector:
     with _Cache() as cache:
         edges = cache.persist(_symmetric_edges(A), eager=True)
 
+        by_iv, by_i = [F.expr("i"), F.expr("v")], F.expr("i")
+        count = F.expr("count(*) AS _c")
+        # argmax by (count desc, label asc) as ONE max(struct) aggregate
+        top = F.expr("max(struct(_c AS c, -v AS nv)) AS m")
+
         def step(rnd, labels, m, rounds):
             freq = (edges.join(_sized(labels.withColumnRenamed("i", "j"),
                                       m["n"]), on="j")
-                         .groupBy("i", "v").agg(F.count("*").alias("_c")))
-            # argmax by (count desc, label asc) as ONE max(struct) aggregate
-            return (freq.groupBy("i")
-                        .agg(F.max(F.struct(F.col("_c").alias("c"),
-                                            (-F.col("v")).alias("nv")))
-                             .alias("m"))
-                        .select("i", (-F.col("m.nv")).cast("bigint")
-                                .alias("v")))
+                         .groupBy(*by_iv).agg(count))
+            return (freq.groupBy(by_i).agg(top)
+                        .selectExpr("i", "CAST(-m.nv AS BIGINT) AS v"))
 
         # round 1 from labels = vertex ids: each distinct neighbor counts
         # once, so every vertex adopts its smallest neighbor id
@@ -581,27 +605,36 @@ def _transition(A: GrMatrix, cache: _Cache) -> DataFrame:
     return P
 
 
-def _scalars(**values) -> DataFrame:
-    """One row of non-null doubles, named by ``values``, as a local
-    relation to cross join into a round's plan: a literal would put the
-    value in the generated code, so every new value would compile new
-    classes. The ``shuffle_replicate_nl`` hint makes the cross join a
-    cartesian product, which unlike a broadcast runs no job of its own."""
-    schema = T.StructType([T.StructField(k, T.DoubleType(), False)
-                           for k in values])
-    return local_df(get_session(), schema,
-                    [[float(v)] for v in values.values()]
-                    ).hint("shuffle_replicate_nl")
+def _double(x: float) -> str:
+    """``x`` as a SQL double: a literal when finite, so non-null, and a
+    (nullable) cast for NaN and the infinities, which have none."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def _power_iteration(A: GrMatrix, start, update, iters: int,
+def _scalars(spark: SparkSession, **values: float) -> DataFrame:
+    """One row of doubles, named by ``values``, as a local relation to
+    cross join into a round's plan: a literal would put the value in the
+    generated code, so every new value would compile new classes. The
+    row is a SQL inline table, which Spark evaluates into a
+    LocalRelation while it plans; it costs ten py4j calls, where an Arrow
+    batch (``plans/local.py``) costs a temporary file and 25. The
+    ``shuffle_replicate_nl`` hint makes the cross join a cartesian
+    product, which unlike a broadcast runs no job of its own."""
+    row = ", ".join(map(_double, values.values()))
+    names = ", ".join(values)
+    return (spark.sql(f"SELECT * FROM VALUES ({row}) AS _s({names})")
+                 .hint("shuffle_replicate_nl"))
+
+
+def _power_iteration(A: GrMatrix, start: str, update, iters: int,
                      tol: float = 0.0) -> DataFrame:
     """r_{t+1} = update(s, dang) over the dense vertex frame, where
     s(j) = sum over i->j of r_t(i) / outdeg(i) and dang = the total rank
-    on vertices with no out-edge; r_0 = start. ``dang`` is a column, so
-    ``update`` builds the same expression in every iteration. Stops
-    early once the L1 change drops below ``tol`` (never with tol = 0).
-    Returns (i, v).
+    on vertices with no out-edge; r_0 = start. ``start`` and ``update``'s
+    result are SQL expressions, and ``update`` is called once, with the
+    SQL of ``s`` and ``dang``. Stops early once the L1 change drops below
+    ``tol`` (never with tol = 0). Returns (i, v).
 
     The rank state (i, dangling, v, _old) is also the vertex frame, so
     an iteration is r left-joined with the contribution aggregate; the
@@ -611,37 +644,33 @@ def _power_iteration(A: GrMatrix, start, update, iters: int,
     (``_scalars``), and every join is hinted from the vertex count
     (``_sized``)."""
     n = A.nrows
+    on_i, by_i, total = F.expr("P.i = r.i"), F.expr("i"), F.expr("sum(c) AS s")
+    rank = ["i", "dangling", f"{update('coalesce(s, 0.0D)', '_dang')} AS v",
+            "v AS _old"]
+    dangling = "sum(CASE WHEN dangling THEN v END)"
     with _Cache() as cache:
-        P = _transition(A, cache)
-        dangling = F.sum(F.when(F.col("dangling"), F.col("v")))
-        has_out = P.select("i", F.lit(False).alias("dangling")).distinct()
+        P = _transition(A, cache).alias("P")
+        has_out = P.selectExpr("i", "false AS dangling").distinct()
 
         def step(rnd, r, m, rounds):
-            contrib = (P.alias("P")
-                        .join(_sized(r, n).alias("r"),
-                              F.col("P.i") == F.col("r.i"))
-                        .select(F.col("P.j").alias("i"),
-                                (F.col("P.v") * F.col("r.v")).alias("c"))
-                        .groupBy("i").agg(F.sum("c").alias("s")))
+            contrib = (P.join(_sized(r, n).alias("r"), on_i)
+                        .selectExpr("P.j AS i", "P.v * r.v AS c")
+                        .groupBy(by_i).agg(total))
             return (r.join(_sized(contrib, n), on="i", how="left_outer")
-                     .crossJoin(_scalars(_dang=m["dang"] or 0.0))
-                     .select("i", "dangling",
-                             update(F.coalesce("s", F.lit(0.0)),
-                                    F.col("_dang")).alias("v"),
-                             F.col("v").alias("_old")))
+                     .crossJoin(_scalars(r.sparkSession,
+                                         _dang=m["dang"] or 0.0))
+                     .selectExpr(*rank))
 
         r, _ = _fixpoint(
             _nodes(n).join(_sized(has_out, n), on="i", how="left_outer")
-                     .select("i", F.coalesce("dangling", F.lit(True))
-                                   .alias("dangling"),
-                             start.alias("v"), start.alias("_old")),
+                     .selectExpr("i", "coalesce(dangling, true) AS dangling",
+                                 f"{start} AS v", f"{start} AS _old"),
             step, lambda m, prev: (prev is not None and tol > 0
                                    and m["l1"] < tol),
             schema=dict(i="0", dangling="false", v="0", _old="0"),
-            metrics=dict(dang=dangling,
-                         l1=F.sum(F.abs(F.col("v") - F.col("_old")))),
+            metrics=dict(dang=dangling, l1="sum(abs(v - _old))"),
             first=dict(dang=dangling), rounds=iters)
-        return r.select("i", "v")
+        return r.selectExpr("i", "v")
 
 
 def pagerank(A: GrMatrix, damping: float = 0.85, max_iters: int = 20,
@@ -650,13 +679,15 @@ def pagerank(A: GrMatrix, damping: float = 0.85, max_iters: int = 20,
     restart and the dangling mass go to every vertex evenly. State is a
     dense rank DataFrame (n rows); see ``_power_iteration``."""
     n = A.nrows
-    base = (1.0 - damping) / n
+    base, d = _double((1.0 - damping) / n), _double(damping)
 
     def update(s, dang):
-        return F.lit(base) + F.lit(damping) * (s + dang / n)
+        return f"{base} + {d} * ({s} + {dang} / {n})"
 
-    r = _power_iteration(A, F.lit(1.0 / n), update, max_iters, tol)
-    return GrVector(r, FP64, n)
+    r = _power_iteration(A, _double(1.0 / n), update, max_iters, tol)
+    out = GrVector(r, FP64, n)
+    out._nvals_cache = n  # the rank is dense
+    return out
 
 
 def personalized_pagerank(A: GrMatrix, seeds: list[int],
@@ -670,17 +701,18 @@ def personalized_pagerank(A: GrMatrix, seeds: list[int],
     trajectory is deterministic and an unrolled-CTE oracle replays it.
 
     Plan shape: pagerank's (``_power_iteration``). The seed vector is a
-    literal isin over the node relation — no extra join. Output:
+    literal IN over the node relation — no extra join. Output:
     (i, ppr) rounded 6, seeds-reachable nodes only may be nonzero."""
-    s_col = F.when(F.col("i").isin([int(x) for x in seeds]),
-                   F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
+    ids = ", ".join(str(int(x)) for x in seeds)
+    s_col = (f"CASE WHEN i IN ({ids}) THEN {_double(1.0 / len(seeds))} "
+             f"ELSE 0.0D END")
+    restart, d = _double(1.0 - damping), _double(damping)
 
     def update(s, dang):
-        return (F.lit(1.0 - damping) * s_col
-                + F.lit(damping) * (s + dang * s_col))
+        return f"{restart} * {s_col} + {d} * ({s} + {dang} * {s_col})"
 
     r = _power_iteration(A, s_col, update, max_iters)
-    return r.select("i", F.round(F.col("v"), 6).alias("ppr"))
+    return r.selectExpr("i", "round(v, 6) AS ppr")
 
 
 def triangle_count(A: GrMatrix) -> int:
@@ -722,20 +754,19 @@ def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
     n vertices (isolated vertices carry beta)."""
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
-    n, b = A.nrows, F.lit(float(beta))
+    n, b = A.nrows, _double(beta)
+    x_next = f"{b} + {_double(alpha)} * coalesce(_s, 0.0D) AS _x"
     with _Cache() as cache:
-        edges = _edge_prelude(A, cache, "i")["i"]
+        walk = _walk(_edge_prelude(A, cache, "i")["i"], n)
 
         def step(rnd, x, *_):
-            s = F.coalesce("_s", F.lit(0.0))
-            return _walk(edges, x, x, n).select(
-                "i", (b + F.lit(float(alpha)) * s).alias("_x"))
+            return walk(x, x).selectExpr("i", x_next)
 
         # the start is x_1, stepped from the constant x_0, so x_0 is never
         # checkpointed: it costs no job
-        x, _ = _fixpoint(step(1, _nodes(n).select("i", b.alias("_x"))), step,
-                         schema=dict(i="0", _x="0"), rounds=iters - 1)
-        return x.select("i", F.round("_x", 6).alias("katz"))
+        x, _ = _fixpoint(step(1, _nodes(n).selectExpr("i", f"{b} AS _x")),
+                         step, schema=dict(i="0", _x="0"), rounds=iters - 1)
+        return x.selectExpr("i", "round(_x, 6) AS katz")
 
 
 def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
@@ -769,46 +800,50 @@ def hits(A: GrMatrix, iters: int = 5) -> DataFrame:
         # together with checkpointing a before h consumes it — otherwise
         # h's checkpoint re-executes a's whole plan)
         edges = _edge_prelude(A, cache, "i", "j")
+        # per direction: the walk, and the last sums as its sent values
+        half = {src: (_walk(edges[src], n, src, dst),
+                      (f"i AS {src}", f"{_share('v', '_t')} AS _x"))
+                for src, dst in (("i", "j"), ("j", "i"))}
 
         def step(rnd, x, m, *_):
             # even rounds: authorities from hubs; odd rounds: hubs back
-            src, dst = ("j", "i") if rnd % 2 else ("i", "j")
-            xn = (x.crossJoin(_scalars(_t=m["t"] or 0.0))
-                   .select(F.col("i").alias(src), _share("v", "_t")
-                           .alias("_x")))
-            return (_walk(edges[src], xn, x, n, src, dst)
-                    .select("i", F.coalesce("_s", F.lit(0.0)).alias("v"),
-                            F.col("v").alias("_p")))
+            walk, sent = half["j" if rnd % 2 else "i"]
+            xn = (x.crossJoin(_scalars(x.sparkSession, _t=m["t"] or 0.0))
+                   .selectExpr(*sent))
+            return walk(xn, x).selectExpr("i", "coalesce(_s, 0.0D) AS v",
+                                          "v AS _p")
 
         # the start is a_1, stepped from h_0 = 1/n everywhere (ones over
         # their total n), so h_0 is never checkpointed: it costs no job
-        h0 = _nodes(n).select("i", F.lit(1.0).alias("v"))
+        h0 = _nodes(n).selectExpr("i", "1.0D AS v")
         h, m = _fixpoint(
             step(0, h0, dict(t=n)), step, schema=dict(i="0", v="0", _p="0"),
-            metrics=dict(t=F.sum("v"), tp=F.sum("_p")),
-            rounds=2 * iters - 1)
-        return (h.crossJoin(_scalars(_th=m["t"] or 0.0, _ta=m["tp"] or 0.0))
-                 .select("i", F.round(_share("v", "_th"), 6).alias("hub"),
-                         F.round(_share("_p", "_ta"), 6).alias("authority")))
+            metrics=dict(t="sum(v)", tp="sum(_p)"), rounds=2 * iters - 1)
+        return (h.crossJoin(_scalars(h.sparkSession, _th=m["t"] or 0.0,
+                                     _ta=m["tp"] or 0.0))
+                 .selectExpr("i", f"round({_share('v', '_th')}, 6) AS hub",
+                             f"round({_share('_p', '_ta')}, 6) AS authority"))
 
 
-def _walk(edges: DataFrame, sent: DataFrame, x: DataFrame, n: int,
-          src: str = "i", dst: str = "j") -> DataFrame:
-    """One step of Katz and HITS: the dense vertex frame ``x``
-    left-joined with ``_s``, per vertex the sum of ``sent``'s ``_x``
-    (keyed by ``src``) over the edges src -> dst into it, null without
-    one. Both joins are hinted from the vertex count ``n``
-    (``_sized``)."""
-    raw = (edges.join(_sized(sent, n), on=src)
-                .groupBy(F.col(dst).alias("i"))
-                .agg(F.sum("_x").alias("_s")))
-    return x.join(_sized(raw, n), on="i", how="left")
+def _walk(edges: DataFrame, n: int, src: str = "i", dst: str = "j"):
+    """The step of Katz and HITS along ``edges``, as a function of
+    (sent, x): the dense vertex frame ``x`` left-joined with ``_s``, per
+    vertex the sum of ``sent``'s ``_x`` (keyed by ``src``) over the
+    edges src -> dst into it, null without one. Both joins are hinted
+    from the vertex count ``n`` (``_sized``); the aggregate is built
+    here, once per loop."""
+    to, total = F.expr(f"{dst} AS i"), F.expr("sum(_x) AS _s")
+
+    def walk(sent: DataFrame, x: DataFrame) -> DataFrame:
+        raw = edges.join(_sized(sent, n), on=src).groupBy(to).agg(total)
+        return x.join(_sized(raw, n), on="i", how="left")
+
+    return walk
 
 
-def _share(col: str, total: str) -> Column:
-    """``col`` over ``total``, or 0 when the total is 0."""
-    return (F.when(F.col(total) != 0, F.col(col) / F.col(total))
-             .otherwise(0.0))
+def _share(col: str, total: str) -> str:
+    """SQL for ``col`` over ``total``, or 0 when the total is 0."""
+    return f"CASE WHEN {total} != 0 THEN {col} / {total} ELSE 0.0D END"
 
 
 def eccentricity(A: GrMatrix, max_iters: int = 32) -> DataFrame:
@@ -864,7 +899,7 @@ def _minplus_closure(A: GrMatrix, max_iters: int,
         return prev is not None and (m["n"], m["s"]) == (prev["n"], prev["s"])
 
     D, _ = _fixpoint(W.df, step, same, schema=dict(i="0", j="0", v="0"),
-                     metrics=dict(s=F.sum("v")), rounds=max_iters,
+                     metrics=dict(s="sum(v)"), rounds=max_iters,
                      diverged=f"{caller}: min-plus closure not converged "
                               f"within {max_iters} iterations — raise "
                               f"max_iters")

@@ -273,7 +273,11 @@ class BaseType:
         return self.to_values()
 
     def wait(self):
-        self._nvals_cache = self._df.count()
+        """Compute the object's entries; no job when its ``nvals`` is
+        known already (a loop's result is a checkpoint whose size the
+        loop observed)."""
+        if self._nvals_cache is None:
+            self._nvals_cache = self._df.count()
         return self
 
     def visualize(self, mode: str = "formatted"):

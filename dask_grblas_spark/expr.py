@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .dtypes import GbType, lookup_dtype
 from .exceptions import DimensionMismatch
-from .mask import Mask, resolve_mask
+from .mask import Mask, check_mask_keys, resolve_mask
 from .operators import BinaryOp, Monoid, get_typed_op
 from .plans import extract as extract_plans
 from .plans.merge import apply_mask, merge_into
@@ -66,8 +66,12 @@ class Expr:
 
         out_dtype = lookup_dtype(dtype) if dtype is not None else self.dtype
         mask_t = resolve_mask(mask)
-        df = self.build(mask_t)
         keys = ["i", "j"][:len(self.shape)]
+        if mask_t is not None and self.pushdown:
+            # the mask joins below the aggregation (plans/matmul.py): its
+            # keys are checked here, from the Mask, with no schema read
+            check_mask_keys(mask.key_cols, keys)
+        df = self.build(mask_t)
         if mask_t is not None and not self.pushdown and keys:
             df = apply_mask(df, keys, mask_t[0], mask_t[1])
         if out_dtype != self.dtype:

@@ -32,10 +32,8 @@ class Mask:
         """DataFrame of keys passing the *base* (non-complemented) test."""
         df = self.parent.df
         if self.value:
-            dt = self.parent.dtype
-            cond = F.col("v") if dt.is_bool else (F.col("v") != F.lit(0))
-            df = df.filter(cond)
-        return df.select(*self.key_cols)
+            df = df.filter("v" if self.parent.dtype.is_bool else "v != 0")
+        return df.selectExpr(*self.key_cols)
 
     def __invert__(self):
         cls = _COMPLEMENT_MAP[type(self)]
@@ -72,6 +70,16 @@ _COMPLEMENT_MAP = {
     ComplementedStructuralMask: StructuralMask,
     ComplementedValueMask: ValueMask,
 }
+
+
+def check_mask_keys(mask_cols: list[str], keys: list[str]):
+    """A mask's key columns must be exactly the target's keys — a Matrix
+    mask applied to a Vector output would otherwise semi-join on the row
+    key alone and silently pass wrong rows (grblas raises; reference
+    test_resolving.py:102-115)."""
+    if set(mask_cols) != set(keys):
+        want = "Vector" if len(keys) == 1 else "Matrix"
+        raise TypeError(f"Mask object must be type {want}")
 
 
 def resolve_mask(mask) -> tuple[DataFrame, bool] | None:

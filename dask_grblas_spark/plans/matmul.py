@@ -17,6 +17,9 @@ matching the reference's per-block masked matmul (expr.py:141-160).
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,15 +36,53 @@ def _pushdown(pairs: DataFrame, keys: list[str], mask) -> DataFrame:
     made here: resolve_mask() already attached a broadcast hint iff the
     mask is provably small (core._BROADCAST_NVALS_LIMIT); a large/unknown
     mask joins as a plain shuffle semi-join — force-broadcasting a
-    billion-key mask would be a 100x-scale driver OOM."""
+    billion-key mask would be a 100x-scale driver OOM. The caller has
+    checked that the mask's keys are the output's (``Expr.new``)."""
     if mask is None:
         return pairs
-    from .merge import check_mask_keys
-
     mask_keys, complement = mask
-    check_mask_keys(mask_keys, keys)
     how = "left_anti" if complement else "left_semi"
     return pairs.join(mask_keys, on=keys, how=how)
+
+
+def _per_gateway(build):
+    """Memoize ``build(*key)`` for the life of the JVM gateway.
+
+    Every PySpark Column function or method costs several py4j round
+    trips (PySpark also records its call site). An unresolved Column is
+    not tied to a DataFrame or a session, so expressions a plan needs
+    again and again are built once; they are dropped with the gateway
+    they live in."""
+    memo, owner = {}, [None]
+
+    @functools.wraps(build)
+    def cached(*key):
+        if owner[0] is not SparkContext._gateway:
+            memo.clear()
+            owner[0] = SparkContext._gateway
+        if key not in memo:
+            memo[key] = build(*key)
+        return memo[key]
+
+    return cached
+
+
+@_per_gateway
+def _terms(sr: Semiring, a_dtype: GbType, b_dtype: GbType,
+           a_keys: tuple[str, ...], b_keys: tuple[str, ...]):
+    """The Columns of a contraction: (join condition, the pairs' select
+    list, the output keys, their group-by Columns, the aggregate)."""
+    mult_dtype = sr.binaryop.out_dtype(a_dtype, b_dtype)
+    out_dtype = sr.monoid.out_dtype(mult_dtype, mult_dtype)
+    ai, aj = F.col(f"A.{a_keys[0]}"), F.col(f"A.{a_keys[-1]}")
+    bi, bj = F.col(f"B.{b_keys[0]}"), F.col(f"B.{b_keys[-1]}")
+    ctx = PositionalContext(ai=ai, aj=aj, bi=bi, bj=bj)
+    mult = sr.binaryop(F.col("A.v"), F.col("B.v"), mult_dtype, ctx)
+    free = [ai][:len(a_keys) - 1] + [bj][:len(b_keys) - 1]
+    keys = ["i", "j"][:len(free)]
+    pairs = [c.alias(k) for c, k in zip(free, keys)] + [mult.alias("v")]
+    return (aj == bi, pairs, keys, [F.col(k) for k in keys],
+            sr.monoid.agg(F.col("v"), out_dtype).alias("v"))
 
 
 def contract(a_df: DataFrame, b_df: DataFrame, a_keys: list[str],
@@ -52,23 +93,18 @@ def contract(a_df: DataFrame, b_df: DataFrame, a_keys: list[str],
     mxv (i, j)(i) and vxm (i)(i, j). The output keys, named i then j, are
     A's other key and B's other key. Positional ops read each side's first
     and last key; a vector's one key is both. The hints force a broadcast
-    of a side that is known to be small, like a frontier vector."""
-    mult_dtype = sr.binaryop.out_dtype(a_dtype, b_dtype)
-    out_dtype = sr.monoid.out_dtype(mult_dtype, mult_dtype)
+    of a side that is known to be small, like a frontier vector.
+
+    The plan's expressions depend only on (semiring, dtypes, keys), so
+    they are built once per JVM gateway (``_terms``): a loop that
+    contracts every round makes no Column of its own, only the DataFrame
+    operations of the plan."""
+    cond, pairs, keys, group, agg = _terms(sr, a_dtype, b_dtype,
+                                           tuple(a_keys), tuple(b_keys))
     a = _maybe_broadcast(a_df.alias("A"), broadcast_a)
     b = _maybe_broadcast(b_df.alias("B"), broadcast_b)
-    ai, aj = F.col(f"A.{a_keys[0]}"), F.col(f"A.{a_keys[-1]}")
-    bi, bj = F.col(f"B.{b_keys[0]}"), F.col(f"B.{b_keys[-1]}")
-    ctx = PositionalContext(ai=ai, aj=aj, bi=bi, bj=bj)
-    mult = sr.binaryop(F.col("A.v"), F.col("B.v"), mult_dtype, ctx)
-    free = [ai][:len(a_keys) - 1] + [bj][:len(b_keys) - 1]
-    keys = ["i", "j"][:len(free)]
-    pairs = (a.join(b, aj == bi)
-              .select(*[c.alias(k) for c, k in zip(free, keys)],
-                      mult.alias("v")))
-    pairs = _pushdown(pairs, keys, mask)
-    return (pairs.groupBy(*keys)
-                 .agg(sr.monoid.agg(F.col("v"), out_dtype).alias("v")))
+    joined = _pushdown(a.join(b, cond).select(*pairs), keys, mask)
+    return joined.groupBy(*group).agg(agg)
 
 
 def kronecker(a_df: DataFrame, b_df: DataFrame, op, a_dtype: GbType,

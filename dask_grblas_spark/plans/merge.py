@@ -39,6 +39,8 @@ from functools import reduce as _reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..mask import check_mask_keys
+
 
 def _join_cond(keys, left="l", right="r") -> Column:
     return _reduce(lambda a, b: a & b,
@@ -67,20 +69,10 @@ def union_merge(a_df: DataFrame, b_df: DataFrame, keys: list[str],
     return j.select(*out_keys, val.alias(value_col))
 
 
-def check_mask_keys(mask_keys: DataFrame, keys: list[str]):
-    """A mask's key columns must be exactly the target's keys — a Matrix
-    mask applied to a Vector output would otherwise semi-join on the row
-    key alone and silently pass wrong rows (grblas raises; reference
-    test_resolving.py:102-115)."""
-    if set(mask_keys.columns) != set(keys):
-        want = "Vector" if len(keys) == 1 else "Matrix"
-        raise TypeError(f"Mask object must be type {want}")
-
-
 def apply_mask(df: DataFrame, keys: list[str], mask_keys: DataFrame,
                complement: bool) -> DataFrame:
     """Keep the rows passing the mask."""
-    check_mask_keys(mask_keys, keys)
+    check_mask_keys(mask_keys.columns, keys)
     return df.join(mask_keys, on=keys,
                    how="left_anti" if complement else "left_semi")
 

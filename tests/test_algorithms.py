@@ -1,6 +1,8 @@
 """Algorithm-level end-to-end tests (reference analogue: notebook
 validation of FastSV CC and SSSP, SURVEY section 5.7)."""
 
+import threading
+
 import pytest
 
 import dask_grblas_spark as gb
@@ -84,6 +86,12 @@ def test_pagerank(spark):
     assert sum(pr.values()) == pytest.approx(1.0, rel=1e-6)
 
 
+# py4j commands a frontier or PageRank round may send from the main
+# thread: a PySpark Column call alone costs about ten, for the call site
+# PySpark records, so a round that built its Columns would send 350-390
+ROUND_COMMANDS = 100
+
+
 def _path(length, size):
     """An undirected path over vertices 0..length-1 of ``size``, weight 1."""
     rows = list(range(length - 1)) + list(range(1, length))
@@ -112,7 +120,14 @@ def test_later_rounds_compile_no_code(spark, monkeypatch):
     call with more rounds, on a graph of the same size, after a short
     call in the same session, compiles no class (Spark's codegen cache
     is keyed by the generated code). k_core's rounds checkpoint two
-    relations, its degrees and its edges, so only its compiles count."""
+    relations, its degrees and its edges, so only its compiles count.
+
+    A round also builds no expression: a frontier or PageRank round
+    sends at most ``ROUND_COMMANDS`` py4j commands from the driver's
+    main thread, counted as the long call's excess over the short one
+    per extra checkpoint."""
+    from py4j.clientserver import ClientServerConnection
+
     metric = (spark.sparkContext._jvm.org.apache.spark.metrics.source
               .CodegenMetrics.METRIC_COMPILATION_TIME())
     DataFrame = type(spark.range(0))
@@ -125,6 +140,14 @@ def test_later_rounds_compile_no_code(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    main, sent = threading.main_thread(), [0]
+    send_command = ClientServerConnection.send_command
+
+    def count(self, *args, **kwargs):
+        sent[0] += threading.current_thread() is main
+        return send_command(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", count)
     size = 24
     short, longer = _path(8, size).wait(), _path(16, size).wait()
     calls = [
@@ -147,21 +170,29 @@ def test_later_rounds_compile_no_code(spark, monkeypatch):
     ]
 
     def run(call):
+        """(py4j commands, checkpoints) of ``call``."""
+        schemas.clear()
+        sent[0] = 0
         out = call()
         if isinstance(out, gb.Vector):
             out.wait()
         else:
             out.count()
+        return sent[0], len(schemas)
 
     for name, first, more_rounds in calls:
-        run(first)
-        schemas.clear()
+        few = run(first)
         before = metric.getCount()
-        run(more_rounds)
+        more = run(more_rounds)
         assert metric.getCount() == before, name
         assert len(schemas) > 4, (name, schemas)
         if name != "k_core":
             assert len(set(schemas)) == 1, (name, schemas)
+        if name in ("bfs_level", "sssp", "connected_components", "pagerank"):
+            extra = more[1] - few[1]
+            assert extra > 0, name
+            assert more[0] - few[0] <= ROUND_COMMANDS * extra, (
+                name, few, more)
 
 
 def test_loop_joins_do_not_follow_size_estimates(spark, monkeypatch):
@@ -207,7 +238,8 @@ def test_loop_rounds_run_no_count_or_collect(spark, monkeypatch):
     DataFrame.count or collect happens after a loop's first checkpoint;
     only the prelude's eager persists count. The peeling loops, the
     fixed-round loops and the min-plus closure observe their counts the
-    same way."""
+    same way. A frontier loop's or PageRank's vector knows its size, so
+    waiting on it runs no count either."""
     DataFrame = type(spark.range(0))
     events = []
     for name in ("count", "collect", "localCheckpoint"):
@@ -224,12 +256,14 @@ def test_loop_rounds_run_no_count_or_collect(spark, monkeypatch):
                               ncols=4).wait()
     cycle = gb.Matrix.from_values([0, 1, 2], [1, 2, 0], [1, 1, 1],
                                   nrows=3, ncols=3).wait()
-    runs = [lambda: alg.bfs_level(A, 0), lambda: alg.sssp(W, 0),
+    runs = [lambda: alg.bfs_level(A, 0).wait(),
+            lambda: alg.sssp(W, 0).wait(),
+            lambda: alg.connected_components(A).wait(),
             lambda: alg.k_core(A, 2), lambda: alg.k_truss(A, 3),
             lambda: alg.label_propagation(A, max_iters=3),
             lambda: alg.katz_centrality(A, iters=3),
             lambda: alg.hits(A, iters=3), lambda: alg.eccentricity(A),
-            lambda: alg.pagerank(cycle, max_iters=20, tol=1e-9)]
+            lambda: alg.pagerank(cycle, max_iters=20, tol=1e-9).wait()]
     for run in runs:
         events.clear()
         run()

@@ -8,8 +8,11 @@ starts cold, so it compiles every class its plans need. For each call the
 tool prints the classes compiled (the count of Spark's
 ``CodegenMetrics.METRIC_COMPILATION_TIME``), the jobs of the call's job
 group, the actions (eager checkpoints, counts and collects) and the jobs
-per action, then for the first and the last pass the classes compiled by
-each action in order. A loop whose rounds after the first run one plan
+per action, the py4j commands the call sent (``py4j main``: from the main
+thread, which builds the plans; ``gc``: from py4j's finalizer thread,
+which detaches the JVM objects the call freed, counted up to a garbage
+collection after the call), then for the first and the last pass the
+classes compiled by each action in order. A loop whose rounds after the first run one plan
 shows zeros after its first rounds. Spark's codegen cache holds
 ``spark.sql.codegen.cache.maxEntries`` classes (100 by default, an LRU
 kept per segment of a Guava cache), so a pass needing about that many
@@ -29,10 +32,12 @@ from __future__ import annotations
 
 import argparse
 import functools
+import gc
 import os
 import shutil
 import sys
 import tempfile
+import threading
 
 import numpy as np
 
@@ -77,18 +82,31 @@ def session():
 
 
 class Probe:
-    """Counts compiles, jobs and actions of the calls made inside
-    ``call``; ``trail`` holds (action, compiles) of the last call."""
+    """Counts compiles, jobs, actions and py4j commands of the calls made
+    inside ``call``; ``trail`` holds (action, compiles) of the last
+    call."""
 
     def __init__(self, spark):
+        from py4j.clientserver import ClientServerConnection
+
         self.sc = spark.sparkContext
         self.metric = (self.sc._jvm.org.apache.spark.metrics.source
                        .CodegenMetrics.METRIC_COMPILATION_TIME())
         self.trail = []
         self.n_calls = 0
+        self.sent = {"main": 0, "gc": 0}
         DataFrame = type(spark.range(0))
         for name in ACTIONS:
             setattr(DataFrame, name, self._spy(name, getattr(DataFrame, name)))
+        send_command = ClientServerConnection.send_command
+        main, sent = threading.main_thread(), self.sent
+
+        @functools.wraps(send_command)
+        def counted(*args, **kwargs):
+            sent["main" if threading.current_thread() is main else "gc"] += 1
+            return send_command(*args, **kwargs)
+
+        ClientServerConnection.send_command = counted
 
     def compiles(self) -> int:
         return self.metric.getCount()
@@ -108,20 +126,25 @@ class Probe:
 
     def call(self, fn):
         """Run ``fn`` in a job group of its own; returns (compiles, jobs,
-        actions)."""
+        actions, {"main": py4j commands, "gc": py4j commands})."""
         self.n_calls += 1
         gid = f"loop-compiles-{self.n_calls}"
         self.trail = []
         self.sc.setJobGroup(gid, gid)
+        gc.collect()
         before = self.compiles()
+        self.sent.update(main=0, gc=0)
         try:
             fn()
         finally:
             self.sc.setLocalProperty("spark.jobGroup.id", None)
         compiles = self.compiles() - before
+        gc.collect()  # the call's garbage: its detaches count to it
+        main = self.sent["main"]
         self.sc._jsc.sc().listenerBus().waitUntilEmpty(120_000)
+        sent = {"main": main, "gc": self.sent["gc"]}
         jobs = len(self.sc.statusTracker().getJobIdsForGroup(gid))
-        return compiles, jobs, len(self.trail)
+        return compiles, jobs, len(self.trail), sent
 
 
 def loops(A, src):
@@ -171,11 +194,12 @@ def main() -> int:
         for p in range(1, args.passes + 1):
             total = 0
             for name in names:
-                compiles, jobs, actions = probe.call(calls[name])
+                compiles, jobs, actions, sent = probe.call(calls[name])
                 total += compiles if name in STEADY else 0
                 print(f"pass {p} {name:9s} compiles {compiles:4d}  "
                       f"jobs {jobs:4d}  actions {actions:3d}  "
-                      f"jobs/action {jobs / max(actions, 1):5.2f}")
+                      f"jobs/action {jobs / max(actions, 1):5.2f}  "
+                      f"py4j main {sent['main']:5d} gc {sent['gc']:5d}")
                 if p in (1, args.passes):
                     print("    compiles per action: "
                           + " ".join(f"{a[:4]}:{c}" for a, c in probe.trail))
