@@ -83,7 +83,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from .core import _BROADCAST_NVALS_LIMIT, GrMatrix, GrVector, get_session
-from .dtypes import FP64, INT64
+from .dtypes import FP64, INT64, sql_double
 from .operators import binary, semiring
 from .partitions import partitions_for_rows, sized_range
 
@@ -605,13 +605,6 @@ def _transition(A: GrMatrix, cache: _Cache) -> DataFrame:
     return P
 
 
-def _double(x: float) -> str:
-    """``x`` as a SQL double: a literal when finite, so non-null, and a
-    (nullable) cast for NaN and the infinities, which have none."""
-    x = float(x)
-    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
-
-
 def _scalars(spark: SparkSession, **values: float) -> DataFrame:
     """One row of doubles, named by ``values``, as a local relation to
     cross join into a round's plan: a literal would put the value in the
@@ -621,7 +614,7 @@ def _scalars(spark: SparkSession, **values: float) -> DataFrame:
     batch (``plans/local.py``) costs a temporary file and 25. The
     ``shuffle_replicate_nl`` hint makes the cross join a cartesian
     product, which unlike a broadcast runs no job of its own."""
-    row = ", ".join(map(_double, values.values()))
+    row = ", ".join(map(sql_double, values.values()))
     names = ", ".join(values)
     return (spark.sql(f"SELECT * FROM VALUES ({row}) AS _s({names})")
                  .hint("shuffle_replicate_nl"))
@@ -679,12 +672,12 @@ def pagerank(A: GrMatrix, damping: float = 0.85, max_iters: int = 20,
     restart and the dangling mass go to every vertex evenly. State is a
     dense rank DataFrame (n rows); see ``_power_iteration``."""
     n = A.nrows
-    base, d = _double((1.0 - damping) / n), _double(damping)
+    base, d = sql_double((1.0 - damping) / n), sql_double(damping)
 
     def update(s, dang):
         return f"{base} + {d} * ({s} + {dang} / {n})"
 
-    r = _power_iteration(A, _double(1.0 / n), update, max_iters, tol)
+    r = _power_iteration(A, sql_double(1.0 / n), update, max_iters, tol)
     out = GrVector(r, FP64, n)
     out._nvals_cache = n  # the rank is dense
     return out
@@ -704,9 +697,9 @@ def personalized_pagerank(A: GrMatrix, seeds: list[int],
     literal IN over the node relation — no extra join. Output:
     (i, ppr) rounded 6, seeds-reachable nodes only may be nonzero."""
     ids = ", ".join(str(int(x)) for x in seeds)
-    s_col = (f"CASE WHEN i IN ({ids}) THEN {_double(1.0 / len(seeds))} "
+    s_col = (f"CASE WHEN i IN ({ids}) THEN {sql_double(1.0 / len(seeds))} "
              f"ELSE 0.0D END")
-    restart, d = _double(1.0 - damping), _double(damping)
+    restart, d = sql_double(1.0 - damping), sql_double(damping)
 
     def update(s, dang):
         return f"{restart} * {s_col} + {d} * ({s} + {dang} * {s_col})"
@@ -754,8 +747,8 @@ def katz_centrality(A: GrMatrix, alpha: float = 0.1, beta: float = 1.0,
     n vertices (isolated vertices carry beta)."""
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
-    n, b = A.nrows, _double(beta)
-    x_next = f"{b} + {_double(alpha)} * coalesce(_s, 0.0D) AS _x"
+    n, b = A.nrows, sql_double(beta)
+    x_next = f"{b} + {sql_double(alpha)} * coalesce(_s, 0.0D) AS _x"
     with _Cache() as cache:
         walk = _walk(_edge_prelude(A, cache, "i")["i"], n)
 

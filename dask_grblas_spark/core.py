@@ -22,12 +22,12 @@ import operator
 from functools import reduce as _reduce
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dtypes import (BOOL, FP64, INT64, GbType, from_storage,
-                     infer_from_values, lit_storage, lookup_dtype, to_storage)
+from .dtypes import (BOOL, FP64, INT64, GbType, cast_v, from_storage,
+                     infer_from_values, lookup_dtype, sql_storage, to_storage)
 from .exceptions import (DimensionMismatch, EmptyObject, IndexOutOfBound,
                          InvalidValue, OutputNotEmpty)
 from .expr import (AmbiguousAssignOrExtract, Assigner, Expr, Updater,
@@ -220,8 +220,7 @@ class BaseType:
         if mask_t is not None:
             df = apply_mask(df, self._key_cols, mask_t[0], mask_t[1])
         if out_dtype != self.dtype:
-            df = df.select(*self._key_cols,
-                           F.col("v").cast(out_dtype.spark_type).alias("v"))
+            df = df.selectExpr(*self._key_cols, cast_v(out_dtype))
         return self._rebuild(df, out_dtype, name=name)
 
     # -- masks --------------------------------------------------------------
@@ -476,12 +475,12 @@ class BaseType:
                 mk = mk.withColumnRenamed("i", keys[0])
             df = apply_mask(df, keys, mk, complement)
         if ints:
-            df = df.filter(_at(ints)).drop(*[k for k, _ in ints])
+            df = df.where(_at(ints)).drop(*[k for k, _ in ints])
         for (k, rx), out in zip(gathered, out_keys):
             if k != out:
                 df = df.withColumnRenamed(k, out)
             df = extract_plans.axis_gather(df, out, rx, out)
-        out = df.select(*out_keys, "v")
+        out = df.selectExpr(*out_keys, "v")
         return _out_expr(tuple(rx.out_size for _, rx in gathered), self.dtype,
                          lambda mask: out)
 
@@ -492,18 +491,18 @@ class BaseType:
         Assigner(Updater(self), self._resolve_indices(index),
                  subassign=False).update(obj)
 
-    def _point(self, index, what) -> Column:
+    def _point(self, index, what) -> str:
         resolved = self._resolve_indices(index)
         if any(rx.kind != "int" for rx in resolved):
             raise TypeError(f"{what} only supports single elements")
         return _at(zip(self._key_cols, resolved))
 
     def __delitem__(self, index):
-        self._set_df(self._df.filter(~self._point(index, "del")))
+        self._set_df(self._df.where(f"NOT {self._point(index, 'del')}"))
 
     def __contains__(self, index):
         pred = self._point(index, "membership")
-        return self._df.filter(pred).limit(1).count() > 0
+        return self._df.where(pred).limit(1).count() > 0
 
     def __iter__(self):
         keys = self._key_cols
@@ -915,7 +914,7 @@ class TransposedMatrix(GrMatrix):
     blocked; ``.new()`` materializes a real Matrix."""
 
     def __init__(self, parent: GrMatrix):
-        df = parent.df.select(F.col("j").alias("i"), F.col("i").alias("j"), "v")
+        df = parent.df.selectExpr("j AS i", "i AS j", "v")
         super().__init__(df, parent.dtype, parent.ncols, parent.nrows)
         self._parent = parent
 
@@ -967,9 +966,10 @@ def _out_expr(shape, dtype: GbType, build, **kw) -> Expr:
     return Expr(cls.kind, dtype, build, **dict(zip(cls._dims, shape)), **kw)
 
 
-def _at(axes) -> Column:
-    """key == index on every (key, int ResolvedIndex) axis."""
-    return _reduce(operator.and_, [F.col(k) == rx.value for k, rx in axes])
+def _at(axes) -> str:
+    """key == index on every (key, int ResolvedIndex) axis, as SQL."""
+    return _reduce(lambda a, b: f"({a} AND {b})",
+                   [f"({k} = {rx.value})" for k, rx in axes])
 
 
 def _resolve_binary(op, default):
@@ -1076,6 +1076,14 @@ def _apply(parent, op, right, left) -> Expr:
     return _out_expr(parent.shape, out_dt, build)
 
 
+def _scatter(df: DataFrame, axes, cols: list[str], dedup: bool = True):
+    """``df`` scattered through every (key_col, ResolvedIndex, size) of
+    ``axes`` to target coordinates, with columns ``cols``."""
+    for col, rx, _size in axes:
+        df = assign_plans.axis_scatter(df, col, rx, dedup)
+    return df if df.columns == cols else df.selectExpr(*cols)
+
+
 def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
     """Shared assign/subassign pipeline (SURVEY section 2.6 A3-A5).
 
@@ -1083,10 +1091,12 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
     coordinates (positions in the extracted region) are translated to
     target coordinates, then merged through the descriptor pipeline with
     the addressed region scoping replace/deletion correctly."""
-    spark = get_session()
     dtype = parent.dtype
+    keys = parent._key_cols
     int_axes = [a for a in axes if a[1].kind == "int"]
     open_axes = [a for a in axes if a[1].kind != "int"]
+    # open axes are rewritten to targets, then int axes prepended
+    scatter_axes = open_axes + int_axes
 
     # ---- build the new-values DataFrame in target coordinates ----
     if isinstance(obj, AmbiguousAssignOrExtract):
@@ -1097,6 +1107,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
         if obj.is_empty:
             raise EmptyObject("cannot assign an empty scalar")
         obj = obj.value
+    mask_t = resolve_mask(updater.mask)
     if isinstance(obj, BaseType):
         expected = tuple(a[1].out_size for a in open_axes)
         if len(expected) != len(obj.shape):
@@ -1109,8 +1120,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
                     f"assign: object shape {obj.shape} != region shape {expected}")
         new_df = obj.df
         if obj.dtype != dtype:
-            new_df = new_df.select(*obj._key_cols,
-                                   F.col("v").cast(dtype.spark_type).alias("v"))
+            new_df = new_df.selectExpr(*obj._key_cols, cast_v(dtype))
         # object axis columns are positions: vector obj -> 'i'; matrix -> i,j
         if len(open_axes) == 1 and len(axes) == 2:
             # vector assigned into a row/col band: object coord maps to the
@@ -1118,44 +1128,35 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
             open_col = open_axes[0][0]
             if open_col != "i":
                 new_df = new_df.withColumnRenamed("i", open_col)
-        for col, rx, _size in open_axes:
-            new_df = assign_plans.axis_scatter(new_df, col, rx, col)
-        for col, rx, _size in int_axes:
-            new_df = new_df.select(F.lit(rx.value).cast("bigint").alias(col),
-                                   *new_df.columns)
-        new_df = new_df.select(*parent._key_cols, "v")
+        new_df = _scatter(new_df, scatter_axes, keys + ["v"])
+    elif (mask_t is not None and not mask_t[1] and not subassign
+            and len(mask_t[0].columns) == len(keys)):
+        # scalar broadcast fill (A5) under a non-complemented
+        # target-coords mask: the mask bounds the fill set exactly, so
+        # build rows from the mask keys restricted to the addressed
+        # region instead of densifying the axis. At scale a
+        # range(size)-then-semi-join fill is a catastrophic densify;
+        # this is also the only resolvable plan when the logical size is
+        # unknown (from_dataframe wrappers).
+        fill = mask_t[0]
+        for col, rx, _size in axes:
+            if rx.kind == "int":
+                fill = fill.where(f"{col} = {rx.value}")
+            elif rx.kind == "pred":
+                fill = fill.where(rx.pred(col))
+            elif rx.kind == "df":
+                tgt = rx.last_wins().selectExpr(f"idx AS {col}")
+                fill = fill.join(tgt, on=col, how="left_semi")
+            # "all": no restriction
+        new_df = fill.selectExpr(*keys, f"{sql_storage(obj, dtype)} AS v")
     else:
-        # scalar broadcast fill (A5)
-        mask_pre = resolve_mask(updater.mask)
-        if (mask_pre is not None and not mask_pre[1] and not subassign
-                and len(mask_pre[0].columns) == len(parent._key_cols)):
-            # A non-complemented target-coords mask bounds the fill set
-            # exactly: build rows from the mask keys restricted to the
-            # addressed region instead of densifying the axis. At scale a
-            # range(size)-then-semi-join fill is a catastrophic densify;
-            # this is also the only resolvable plan when the logical size
-            # is unknown (from_dataframe wrappers).
-            fill = mask_pre[0]
-            for col, rx, _size in axes:
-                if rx.kind == "int":
-                    fill = fill.filter(F.col(col) == rx.value)
-                elif rx.kind == "pred":
-                    fill = fill.filter(rx.pred(F.col(col)))
-                elif rx.kind == "df":
-                    tgt = rx.last_wins().select(F.col("idx").alias(col))
-                    fill = fill.join(tgt, on=col, how="left_semi")
-                # "all": no restriction
-            new_df = fill.select(
-                *parent._key_cols, lit_storage(obj, dtype).alias("v"))
-        else:
-            # unmasked / complement-masked: full-fill densifies by design
-            new_df = assign_plans.scalar_fill(
-                spark, to_storage(obj, dtype), dtype,
-                [(rx, size, col) for col, rx, size in axes])
+        # unmasked / complement-masked scalar fill densifies by design
+        new_df = assign_plans.scalar_fill(
+            get_session(), to_storage(obj, dtype), dtype,
+            [(rx, size, col) for col, rx, size in axes])
 
     # ---- mask: translate coords for subassign / band assigns ----
     band_vector_mask = False
-    mask_t = resolve_mask(updater.mask)
     if mask_t is not None:
         mk, comp = mask_t
         if subassign:
@@ -1164,12 +1165,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
             if len(mk.columns) == 1 and len(open_axes) == 1:
                 open_col = open_axes[0][0]
                 mk = mk.withColumnRenamed("i", open_col)
-            for col, rx, _size in open_axes:
-                mk = assign_plans.axis_scatter(mk, col, rx, col, dedup=False)
-            for col, rx, _size in int_axes:
-                mk = mk.select(F.lit(rx.value).cast("bigint").alias(col),
-                               *mk.columns)
-            mk = mk.select(*parent._key_cols)
+            mk = _scatter(mk, scatter_axes, keys, dedup=False)
         elif len(mk.columns) == 1 and len(axes) == 2:
             # GrB_Row/Col_assign: vector mask in TARGET coords of the open
             # axis, band-scoped (reference expr.py:1756-1765)
@@ -1177,10 +1173,7 @@ def _generic_assign(parent, axes, obj, updater: Updater, subassign: bool):
             open_col = open_axes[0][0]
             if open_col != "i":
                 mk = mk.withColumnRenamed("i", open_col)
-            for col, rx, _size in int_axes:
-                mk = mk.select(F.lit(rx.value).cast("bigint").alias(col),
-                               *mk.columns)
-            mk = mk.select(*parent._key_cols)
+            mk = _scatter(mk, int_axes, keys)
         mask_t = (mk, comp)
 
     scope = "region" if subassign else "target"

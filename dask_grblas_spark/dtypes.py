@@ -21,6 +21,8 @@ JVM-side native expressions.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import types as T
 
@@ -59,6 +61,11 @@ class GbType:
 
     def __hash__(self):
         return hash(self.name)
+
+
+def cast_v(dtype: GbType) -> str:
+    """``v`` cast to ``dtype``'s storage, as SQL for ``selectExpr``."""
+    return f"CAST(v AS {dtype.spark_name}) AS v"
 
 
 BOOL = GbType("BOOL", "bool", T.BooleanType())
@@ -212,14 +219,24 @@ def from_storage(v, dtype: GbType):
     return v
 
 
-def lit_storage(value, dtype: GbType):
-    """Literal Column of this dtype (complex -> struct literal). Only used
-    on paths that know the target dtype; real dtypes keep plain F.lit."""
-    from pyspark.sql import functions as F
+def sql_double(x: float) -> str:
+    """``x`` as a SQL double: a literal when finite, so non-null, and a
+    (nullable) cast for NaN and the infinities, which have none."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
+
+def sql_storage(value, dtype: GbType) -> str:
+    """A literal of this dtype's storage, as SQL (complex -> a struct
+    literal). Only used on paths that know the target dtype."""
     if dtype.is_complex:
-        re, im = to_storage(value, dtype)
-        ft = "float" if dtype.name == "FC32" else "double"
-        return F.struct(F.lit(re).cast(ft).alias("re"),
-                        F.lit(im).cast(ft).alias("im"))
-    return F.lit(to_storage(value, dtype)).cast(dtype.spark_type)
+        ft = "FLOAT" if dtype.name == "FC32" else "DOUBLE"
+        re, im = (f"CAST({sql_double(x)} AS {ft})"
+                  for x in to_storage(value, dtype))
+        return f"named_struct('re', {re}, 'im', {im})"
+    v = to_storage(value, dtype)
+    lit = (sql_double(v) if dtype.is_float
+           else str(v).lower() if dtype.is_bool else str(v))
+    return f"CAST({lit} AS {dtype.spark_name})"
+
+

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .dtypes import GbType, lookup_dtype
+from .dtypes import GbType, cast_v, lookup_dtype
 from .exceptions import DimensionMismatch
 from .mask import Mask, check_mask_keys, resolve_mask
 from .operators import BinaryOp, Monoid, get_typed_op
@@ -75,7 +75,7 @@ class Expr:
         if mask_t is not None and not self.pushdown and keys:
             df = apply_mask(df, keys, mask_t[0], mask_t[1])
         if out_dtype != self.dtype:
-            df = df.select(*keys, F.col("v").cast(out_dtype.spark_type).alias("v"))
+            df = df.selectExpr(*keys, cast_v(out_dtype))
         return core._BY_RANK[len(keys)](df, out_dtype, *self.shape, name=name)
 
     dup = new
@@ -128,25 +128,14 @@ class Updater:
         self.input_mask = input_mask
 
     # -- plumbing ----------------------------------------------------------
-    def _accum_fn(self):
-        if self.accum is None:
-            return None
-        dtype = self.parent.dtype
-        op = self.accum
-
-        def fn(old, new):
-            return op(old, new, dtype).cast(dtype.spark_type)
-
-        return fn
-
     def _merge(self, new_df, mask_t, region=None, mask_scope="target"):
         """parent(mask, accum, replace)[region] << new_df, with the mask
         already resolved to target coordinates (plans/merge.py)."""
         parent = self.parent
         parent._set_df(merge_into(parent.df, new_df, parent._key_cols,
-                                  accum=self._accum_fn(), mask=mask_t,
-                                  replace=self.replace, region=region,
-                                  mask_scope=mask_scope))
+                                  accum=self.accum, dtype=parent.dtype,
+                                  mask=mask_t, replace=self.replace,
+                                  region=region, mask_scope=mask_scope))
 
     def update(self, rhs):
         from . import core
@@ -194,9 +183,7 @@ class Updater:
         mask_t = resolve_mask(self.mask)
         new_df = rhs.build(mask_t)
         if rhs.dtype != parent.dtype:
-            keys = parent._key_cols
-            new_df = new_df.select(*keys,
-                                   F.col("v").cast(parent.dtype.spark_type).alias("v"))
+            new_df = new_df.selectExpr(*parent._key_cols, cast_v(parent.dtype))
         self._merge(new_df, mask_t)
 
     def _update_scalar(self, rhs):
@@ -217,7 +204,10 @@ class Updater:
         if self.accum is None:
             parent._set_df(new_df)
         else:
-            parent._set_df(_scalar_merge(parent.df, new_df, self._accum_fn()))
+            dtype, op = parent.dtype, self.accum
+            parent._set_df(_scalar_merge(
+                parent.df, new_df,
+                lambda o, n: op(o, n, dtype).cast(dtype.spark_type)))
 
     def __lshift__(self, rhs):
         self.update(rhs)

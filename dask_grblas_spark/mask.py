@@ -32,12 +32,22 @@ class Mask:
         """DataFrame of keys passing the *base* (non-complemented) test."""
         df = self.parent.df
         if self.value:
-            df = df.filter("v" if self.parent.dtype.is_bool else "v != 0")
+            df = df.where(_truthy(self.parent.dtype))
         return df.selectExpr(*self.key_cols)
 
     def __invert__(self):
         cls = _COMPLEMENT_MAP[type(self)]
         return cls(self.parent)
+
+
+def _truthy(dtype) -> str:
+    """SQL: is a stored ``v`` of ``dtype`` nonzero (a complex value is
+    nonzero when either part is)."""
+    if dtype.is_bool:
+        return "v"
+    if dtype.is_complex:
+        return "v.re != 0 OR v.im != 0"
+    return "v != 0"
 
 
 class StructuralMask(Mask):

@@ -17,28 +17,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dtypes import GbType
+from ..dtypes import GbType, sql_storage
 from ..partitions import sized_range
 from .extract import ResolvedIndex
+from .memo import join_on, per_gateway
 
 
-def axis_scatter(df: DataFrame, pos_col: str, rx: ResolvedIndex,
-                 out_col: str, dedup: bool = True) -> DataFrame:
-    """Rewrite one axis of an assigned object from output positions to
-    target coordinates. For 'int' axes the object lacks the axis entirely
-    (dimension was dropped) — the constant coordinate is appended."""
-    others = [c for c in df.columns if c != pos_col]
+def axis_scatter(df: DataFrame, col: str, rx: ResolvedIndex,
+                 dedup: bool = True) -> DataFrame:
+    """Rewrite axis ``col`` of an assigned object, in place, from output
+    positions to target coordinates. For 'int' axes the object lacks the
+    axis entirely (dimension was dropped): the constant coordinate is
+    prepended."""
+    cols = df.columns
     if rx.kind == "int":
-        return df.select(F.lit(rx.value).cast("bigint").alias(out_col), *df.columns)
+        return df.selectExpr(f"CAST({rx.value} AS BIGINT) AS {col}", *cols)
     if rx.kind == "all":
-        return df.select(F.col(pos_col).cast("bigint").alias(out_col), *others)
-    if rx.kind == "pred":
-        return df.select(rx.tgt_of(F.col(pos_col)).alias(out_col), *others)
-    idx = rx.last_wins() if dedup else rx.df
-    idx = idx.select(F.col("pos").alias("__p"), F.col("idx").alias("__tgt"))
-    return (df.join(F.broadcast(idx), df[pos_col] == F.col("__p"))
-              .select(F.col("__tgt").alias(out_col),
-                      *[df[c] for c in others]))
+        tgt = f"CAST({col} AS BIGINT)"
+    elif rx.kind == "pred":
+        tgt = rx.tgt_of(col)
+    else:
+        idx = rx.last_wins() if dedup else rx.df
+        idx = idx.selectExpr("pos AS __p", "idx AS __tgt")
+        df, tgt = df.join(F.broadcast(idx), join_on(col, "__p")), "__tgt"
+    return df.selectExpr(*[f"{tgt} AS {c}" if c == col else c for c in cols])
 
 
 def axis_targets(rx: ResolvedIndex, spark: SparkSession, size: int,
@@ -48,22 +50,22 @@ def axis_targets(rx: ResolvedIndex, spark: SparkSession, size: int,
     construction (the reference warns on it, base.py:243-252)."""
     if rx.kind == "int":
         return sized_range(spark, rx.value, rx.value + 1) \
-            .select(F.col("id").alias(col))
+            .selectExpr(f"id AS {col}")
     if rx.kind == "all":
         if size is None:
             raise ValueError(
                 "unmasked full-axis scalar fill needs a known logical size "
                 "(from_dataframe wrappers carry none); set .size/.nrows/"
                 ".ncols or supply a bounding mask")
-        return sized_range(spark, 0, size).select(F.col("id").alias(col))
+        return sized_range(spark, 0, size).selectExpr(f"id AS {col}")
     if rx.kind == "pred":
         if rx.out_size is None:
             raise ValueError(
                 "unbounded slice scalar fill needs a known logical size; "
                 "set .size/.nrows/.ncols or supply a bounding mask")
         return (sized_range(spark, 0, rx.out_size)
-                .select(rx.tgt_of(F.col("id")).alias(col)))
-    return rx.last_wins().select(F.col("idx").alias(col))
+                .selectExpr(f"{rx.tgt_of('id')} AS {col}"))
+    return rx.last_wins().selectExpr(f"idx AS {col}")
 
 
 def scalar_fill(spark: SparkSession, value, dtype: GbType,
@@ -73,9 +75,8 @@ def scalar_fill(spark: SparkSession, value, dtype: GbType,
     for rx, size, col in axes:
         part = axis_targets(rx, spark, size, col)
         df = part if df is None else df.crossJoin(part)
-    from ..dtypes import lit_storage
-    return df.select(*[c for _, _, c in axes],
-                     lit_storage(value, dtype).alias("v"))
+    return df.selectExpr(*[c for _, _, c in axes],
+                         f"{sql_storage(value, dtype)} AS v")
 
 
 def reduce_assign_build(rhs_df: DataFrame, rx: ResolvedIndex, dup_op,
@@ -83,14 +84,21 @@ def reduce_assign_build(rhs_df: DataFrame, rx: ResolvedIndex, dup_op,
     """Scatter rhs through the index list combining duplicate targets with
     a monoid (or 'first'/'last' by position). Returns new-values DF keyed
     by target coordinate."""
-    idx = rx.df.select(F.col("pos").alias("__p"), F.col("idx").alias("i_tgt"))
-    joined = (rhs_df.join(F.broadcast(idx), rhs_df["i"] == F.col("__p"))
-                    .select(F.col("i_tgt"), F.col("__p"), F.col("v")))
+    idx = rx.df.selectExpr("pos AS __p", "idx AS i_tgt")
+    joined = (rhs_df.join(F.broadcast(idx), join_on("i", "__p"))
+                    .selectExpr("i_tgt", "__p", "v"))
+    return (joined.groupBy("i_tgt").agg(_dup_value(dup_op, dtype))
+                  .withColumnRenamed("i_tgt", "i"))
+
+
+@per_gateway
+def _dup_value(dup_op, dtype: GbType):
+    """``v`` of the entries scattered to one target: the first or last by
+    position, or their fold by the monoid ``dup_op``."""
     if dup_op == "first":
         agg = F.min_by(F.col("v"), F.col("__p"))
     elif dup_op == "last":
         agg = F.max_by(F.col("v"), F.col("__p"))
     else:
         agg = dup_op.agg(F.col("v"), dtype)
-    return (joined.groupBy("i_tgt").agg(agg.cast(dtype.spark_type).alias("v"))
-                  .withColumnRenamed("i_tgt", "i"))
+    return agg.cast(dtype.spark_type).alias("v")

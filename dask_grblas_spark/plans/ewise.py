@@ -9,9 +9,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dtypes import GbType
-from ..operators import BinaryOp, PositionalContext
-from .merge import _join_cond, union_merge
+from ..dtypes import GbType, sql_storage
+from ..operators import BinaryOp, PositionalContext, _cpx
+from .memo import per_gateway
+from .merge import keyed, union_case, union_merge
+
+
+@per_gateway
+def _add_value(op: BinaryOp, out_dtype: GbType, lift_l: bool,
+               lift_r: bool):
+    """``v`` of ewise_add, cast to ``out_dtype``. A real pass-through into
+    a complex output is lifted to complex storage as (v, 0)."""
+    def lift(c):
+        return _cpx(out_dtype, c.cast("double"), F.lit(0.0))
+
+    val = union_case(lambda lv, rv: op(lv, rv, out_dtype),
+                     lift if lift_l else None, lift if lift_r else None)
+    return val.cast(out_dtype.spark_type).alias("v")
 
 
 def ewise_add(a_df: DataFrame, b_df: DataFrame, keys: list[str],
@@ -27,23 +41,20 @@ def ewise_add(a_df: DataFrame, b_df: DataFrame, keys: list[str],
     if op.positional:
         return _ewise_positional(a_df, b_df, keys, op, out_dtype, how="full_outer")
 
-    def combine(lv, rv):
-        return op(lv, rv, out_dtype)
+    def lifted(dtype):
+        return (out_dtype.is_complex and dtype is not None
+                and not dtype.is_complex)
 
-    lift_l = lift_r = None
-    if out_dtype.is_complex:
-        from ..operators import _cpx
+    return union_merge(a_df, b_df, keys,
+                       _add_value(op, out_dtype, lifted(a_dtype),
+                                  lifted(b_dtype)))
 
-        def _lift(c):
-            return _cpx(out_dtype, c.cast("double"), F.lit(0.0))
 
-        if a_dtype is not None and not a_dtype.is_complex:
-            lift_l = _lift
-        if b_dtype is not None and not b_dtype.is_complex:
-            lift_r = _lift
-
-    merged = union_merge(a_df, b_df, keys, combine, lift_l=lift_l, lift_r=lift_r)
-    return merged.select(*keys, F.col("v").cast(out_dtype.spark_type).alias("v"))
+@per_gateway
+def _mult_select(keys: tuple[str, ...], op: BinaryOp, out_dtype: GbType):
+    val = op(F.col("l.v"), F.col("r.v"), out_dtype)
+    return ([F.expr(f"l.{k} AS {k}") for k in keys]
+            + [val.cast(out_dtype.spark_type).alias("v")])
 
 
 def ewise_mult(a_df: DataFrame, b_df: DataFrame, keys: list[str],
@@ -51,25 +62,26 @@ def ewise_mult(a_df: DataFrame, b_df: DataFrame, keys: list[str],
     """INTERSECTION merge: inner join on the entry keys."""
     if op.positional:
         return _ewise_positional(a_df, b_df, keys, op, out_dtype, how="inner")
-    a = a_df.alias("l")
-    b = b_df.alias("r")
-    val = op(F.col("l.v"), F.col("r.v"), out_dtype)
-    return (a.join(b, _join_cond(keys), "inner")
-             .select(*[F.col(f"l.{k}").alias(k) for k in keys],
-                     val.cast(out_dtype.spark_type).alias("v")))
+    cond, _ = keyed(tuple(keys))
+    return (a_df.alias("l").join(b_df.alias("r"), cond, "inner")
+            .select(*_mult_select(tuple(keys), op, out_dtype)))
 
 
-def _ewise_positional(a_df, b_df, keys, op, out_dtype, how):
-    a = a_df.alias("l")
-    b = b_df.alias("r")
+@per_gateway
+def _positional_value(keys: tuple[str, ...], op: BinaryOp,
+                      out_dtype: GbType):
     i_col = F.coalesce(F.col("l." + keys[0]), F.col("r." + keys[0]))
     j_col = (F.coalesce(F.col("l." + keys[1]), F.col("r." + keys[1]))
              if len(keys) > 1 else i_col)
     ctx = PositionalContext(ai=i_col, aj=j_col, bi=i_col, bj=j_col)
     val = op(F.col("l.v"), F.col("r.v"), out_dtype, ctx)
-    j = a.join(b, _join_cond(keys), how)
-    out_keys = [F.coalesce(F.col(f"l.{k}"), F.col(f"r.{k}")).alias(k) for k in keys]
-    return j.select(*out_keys, val.cast(out_dtype.spark_type).alias("v"))
+    return val.cast(out_dtype.spark_type).alias("v")
+
+
+def _ewise_positional(a_df, b_df, keys, op, out_dtype, how):
+    cond, out_keys = keyed(tuple(keys))
+    return (a_df.alias("l").join(b_df.alias("r"), cond, how)
+            .select(*out_keys, _positional_value(tuple(keys), op, out_dtype)))
 
 
 def apply_unary(df: DataFrame, keys: list[str], op, out_dtype: GbType,
@@ -96,8 +108,7 @@ def apply_bound(df: DataFrame, keys: list[str], op: BinaryOp, out_dtype: GbType,
         df = df.crossJoin(F.broadcast(scalar_df.select(F.col("v").alias("_s"))))
         s = F.col("_s")
     elif out_dtype.is_complex and not getattr(op, "real_inputs", False):
-        from ..dtypes import lit_storage
-        s = lit_storage(scalar_lit, out_dtype)
+        s = F.expr(sql_storage(scalar_lit, out_dtype))
     else:
         # real_inputs ops (cmplx) take PLAIN real scalars even though the
         # output dtype is complex storage

@@ -17,14 +17,12 @@ matching the reference's per-block masked matmul (expr.py:141-160).
 
 from __future__ import annotations
 
-import functools
-
-from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..dtypes import GbType
 from ..operators import PositionalContext, Semiring
+from .memo import per_gateway
 
 
 def _maybe_broadcast(df: DataFrame, hint: bool) -> DataFrame:
@@ -45,29 +43,7 @@ def _pushdown(pairs: DataFrame, keys: list[str], mask) -> DataFrame:
     return pairs.join(mask_keys, on=keys, how=how)
 
 
-def _per_gateway(build):
-    """Memoize ``build(*key)`` for the life of the JVM gateway.
-
-    Every PySpark Column function or method costs several py4j round
-    trips (PySpark also records its call site). An unresolved Column is
-    not tied to a DataFrame or a session, so expressions a plan needs
-    again and again are built once; they are dropped with the gateway
-    they live in."""
-    memo, owner = {}, [None]
-
-    @functools.wraps(build)
-    def cached(*key):
-        if owner[0] is not SparkContext._gateway:
-            memo.clear()
-            owner[0] = SparkContext._gateway
-        if key not in memo:
-            memo[key] = build(*key)
-        return memo[key]
-
-    return cached
-
-
-@_per_gateway
+@per_gateway
 def _terms(sr: Semiring, a_dtype: GbType, b_dtype: GbType,
            a_keys: tuple[str, ...], b_keys: tuple[str, ...]):
     """The Columns of a contraction: (join condition, the pairs' select

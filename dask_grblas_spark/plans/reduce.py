@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..dtypes import GbType
 from ..operators import Aggregator, Monoid
+from .memo import per_gateway
 
 
 def _agg_expr(op, vcol, dtype: GbType, icol=None):
@@ -29,28 +30,34 @@ def out_dtype_of(op, dtype: GbType) -> GbType:
     return op.out_dtype(dtype, dtype)
 
 
+@per_gateway
+def _fold(op, dtype: GbType, index: str | None):
+    """The aggregate ``v``: the fold of ``v`` by ``op``, cast to its output
+    dtype. An Aggregator that needs the index reads column ``index``."""
+    out_dt = out_dtype_of(op, dtype)
+    icol = F.col(index) if index else None
+    return (_agg_expr(op, F.col("v"), out_dt, icol)
+            .cast(out_dt.spark_type).alias("v"))
+
+
+@per_gateway
+def _by(key: str):
+    return F.expr(key)
+
+
 def reduce_scalar(df: DataFrame, op, dtype: GbType, keys: list[str]) -> DataFrame:
     """Fold all stored values -> 0-or-1-row scalar DataFrame. An empty
     input must give an EMPTY scalar, not the monoid identity (reference:
     empty ⇒ empty Scalar, SURVEY.md R1) — plain .agg() on an empty frame
     yields one NULL row, so filter it out."""
-    out_dt = out_dtype_of(op, dtype)
-    icol = F.col(keys[0]) if keys else None
-    out = df.agg(_agg_expr(op, F.col("v"), out_dt, icol)
-                 .cast(out_dt.spark_type).alias("v"))
-    return out.filter(F.col("v").isNotNull())
+    out = df.agg(_fold(op, dtype, keys[0] if keys else None))
+    return out.where("v IS NOT NULL")
 
 
 def reduce_rowwise(df: DataFrame, op, dtype: GbType) -> DataFrame:
-    out_dt = out_dtype_of(op, dtype)
-    return df.groupBy("i").agg(
-        _agg_expr(op, F.col("v"), out_dt, F.col("j"))
-        .cast(out_dt.spark_type).alias("v"))
+    return df.groupBy(_by("i")).agg(_fold(op, dtype, "j"))
 
 
 def reduce_columnwise(df: DataFrame, op, dtype: GbType) -> DataFrame:
-    out_dt = out_dtype_of(op, dtype)
-    return (df.groupBy("j").agg(
-                _agg_expr(op, F.col("v"), out_dt, F.col("i"))
-                .cast(out_dt.spark_type).alias("v"))
+    return (df.groupBy(_by("j")).agg(_fold(op, dtype, "i"))
               .withColumnRenamed("j", "i"))

@@ -122,10 +122,10 @@ def test_later_rounds_compile_no_code(spark, monkeypatch):
     is keyed by the generated code). k_core's rounds checkpoint two
     relations, its degrees and its edges, so only its compiles count.
 
-    A round also builds no expression: a frontier or PageRank round
-    sends at most ``ROUND_COMMANDS`` py4j commands from the driver's
-    main thread, counted as the long call's excess over the short one
-    per extra checkpoint."""
+    A round also builds no expression: a frontier, PageRank or min-plus
+    closure round sends at most ``ROUND_COMMANDS`` py4j commands from the
+    driver's main thread, counted as the long call's excess over the
+    short one per extra checkpoint."""
     from py4j.clientserver import ClientServerConnection
 
     metric = (spark.sparkContext._jvm.org.apache.spark.metrics.source
@@ -167,6 +167,8 @@ def test_later_rounds_compile_no_code(spark, monkeypatch):
          lambda: alg.label_propagation(longer, max_iters=6)),
         ("k_core", lambda: alg.k_core(short, 2),
          lambda: alg.k_core(longer, 2)),
+        ("eccentricity", lambda: alg.eccentricity(short),
+         lambda: alg.eccentricity(longer)),
     ]
 
     def run(call):
@@ -188,7 +190,8 @@ def test_later_rounds_compile_no_code(spark, monkeypatch):
         assert len(schemas) > 4, (name, schemas)
         if name != "k_core":
             assert len(set(schemas)) == 1, (name, schemas)
-        if name in ("bfs_level", "sssp", "connected_components", "pagerank"):
+        if name in ("bfs_level", "sssp", "connected_components", "pagerank",
+                    "eccentricity"):
             extra = more[1] - few[1]
             assert extra > 0, name
             assert more[0] - few[0] <= ROUND_COMMANDS * extra, (

@@ -162,6 +162,19 @@ def test_scalar_fill_complex(spark):
     assert v.to_dict() == {0: 1 - 1j, 2: 1 - 1j}
 
 
+def test_complex_value_mask(spark):
+    """A complex value is truthy when either part is nonzero: ``.V`` of
+    [1+1j, 0j, 2+0j] passes keys 0 and 2, ``~.V`` key 1, as a ``dup``
+    mask and as an output mask."""
+    c = _cvec(spark, [1 + 1j, 0j, 2 + 0j])
+    w = gb.Vector.from_values([0, 1, 2], [10, 20, 30], size=3)
+    for mask, keys in ((c.V, {0, 2}), (~c.V, {1})):
+        assert set(w.dup(mask=mask).to_dict()) == keys
+        out = gb.Vector.new("INT64", 3)
+        out(mask) << w
+        assert set(out.to_dict()) == keys
+
+
 def test_unsupported_complex_ops_raise(spark):
     u = _cvec(spark, ZS)
     w = _cvec(spark, WS)
